@@ -13,14 +13,21 @@ Two decode tiers:
   no media libraries needed. :func:`synthesize_media` manufactures
   structurally valid payloads of all three container types so the
   decode path is exercised and oracle-checked end to end.
-* **Pixel/sample decode** (:func:`decode_real`): REAL for all three
-  container types using only the stdlib — PNG IDAT inflate (``zlib``)
-  + per-scanline unfiltering (None/Sub/Up/Average/Paeth); baseline
-  JPEG via a full entropy decoder (canonical Huffman from the file's
-  DHT, DC prediction, dequantize, inverse DCT —
-  :mod:`.jpegcodec`); WAV PCM samples straight off ``struct``.
-  Unsupported shapes (progressive JPEG, palette PNG, 12-bit, …)
-  raise ``ValueError`` — explicit, never a silent mis-decode.
+* **Pixel/sample decode** (:func:`decode_real`): REAL for PNG, JPEG,
+  GIF, BMP, TIFF, WAV, FLAC and AVI using only the stdlib — PNG IDAT
+  inflate (``zlib``) + per-scanline unfiltering (None/Sub/Up/Average/
+  Paeth) at 1/2/4/8/16 bits, palette and Adam7 included; JPEG via full
+  baseline, progressive, 12-bit and lossless entropy decoders
+  (:mod:`.jpegcodec`); WAV PCM, G.711 and ADPCM samples; the other
+  formats through their own codec modules. Unsupported shapes (e.g.
+  arithmetic-coded JPEG, compressed BMP) raise ``ValueError`` —
+  explicit, never a silent mis-decode.
+
+Every ``*_stats`` operator runs through one Arrow kernel,
+:func:`_decode_map`, which owns the batch loop and the ``strict``
+poison contract; each format contributes only its ``stats(d)``.
+Every ``synthesize_*`` fixture likewise runs through
+:func:`_synth_map` with only its closed-form ``payload(d)``.
 
 At scale: binary payloads dominate bytes; keep them in their own
 parquet column (columnar pruning skips them unless referenced), size
@@ -69,11 +76,21 @@ def decode_real(payload: bytes) -> dict:
       bytes plus header metadata.
     * ``audio/wav`` → :func:`wav_decode_samples`: PCM ``data`` chunk
       unpacked into integer samples.
-    * ``image/jpeg`` → :mod:`.jpegcodec`: full baseline entropy decode
+    * ``image/jpeg`` → :mod:`.jpegcodec`: full entropy decode
       (canonical Huffman built from the file's DHT, DC prediction, AC
       run-lengths, byte un-stuffing, dequantize, un-zigzag, inverse
-      DCT). Grayscale baseline sequential; progressive/subsampled
-      streams raise ValueError.
+      DCT) for baseline, subsampled, restart-interval, progressive,
+      12-bit and lossless streams.
+    * ``image/gif`` → :mod:`.gifcodec` (LZW, palette, deinterlace,
+      every frame); ``image/bmp`` → :func:`bmp_decode_pixels`;
+      ``image/tiff`` → :mod:`.tiffcodec` (strips or tiles, PackBits /
+      LZW / Deflate, palette).
+    * ``audio/flac`` → :mod:`.flaccodec` (every subframe type and
+      stereo decorrelation); ``video/avi`` → :mod:`.avicodec` (MJPEG
+      or DIB frames plus an interleaved PCM stream).
+
+    Any other payload comes back as its :func:`parse_media` metadata
+    dict, with no pixel or sample key.
 
     Container-only metadata (no payload decompression) remains
     available via :func:`parse_media` for the cheap path.
@@ -1548,6 +1565,87 @@ DECODED_SCHEMA = (
 )
 
 
+def _synth_map(df: DataFrame, id_col: str, payload_fn, *cols: str) -> DataFrame:
+    """The Arrow batch loop behind every ``synthesize_*`` fixture:
+    ``payload_fn(doc_id, *values of cols)`` builds one row's payload
+    bytes, closed-form in doc_id; the output is ``MEDIA_SCHEMA``."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            ids = pdf[id_col].astype("int64")
+            payloads = [
+                payload_fn(int(d), *vals)
+                for d, *vals in zip(ids, *(pdf[c] for c in cols))
+            ]
+            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+
+    return df.select(F.col(id_col).cast("long").alias(id_col), *cols).mapInPandas(
+        run, schema=MEDIA_SCHEMA
+    )
+
+
+def _null_row(schema: str) -> dict:
+    """``{column: None}`` for every ``schema`` column but doc_id."""
+    return dict.fromkeys(c.split()[0] for c in schema.split(",")[1:])
+
+
+def _lacks(d: dict, *keys: str) -> bool:
+    """True when a decoded dict misses any key a stats function reads —
+    its format check, so a valid payload of ANOTHER format is a
+    ValueError (poison), never a KeyError."""
+    return any(k not in d for k in keys)
+
+
+def _decode_map(
+    media: DataFrame, schema: str, stats, strict: bool, decode=decode_real
+) -> DataFrame:
+    """The Arrow decode kernel behind every ``*_stats`` operator over
+    (doc_id, payload): per batch, each payload is decoded ONCE by
+    ``decode`` and handed to the format's ``stats(d)``, which yields one
+    dict per output row holding every ``schema`` column but doc_id (GIF
+    and AVI frames, WARC records explode 1→N in the same pass).
+
+    Poison contract, for every caller: ``stats`` raises ValueError when
+    ``d`` is not its format, and a NULL payload is undecodable.
+    ``strict=True`` lets the ValueError kill the task — the gates'
+    posture, whose payloads are synthesized, so an error there is a
+    codec bug to surface. ``strict=False`` is the production posture
+    for external corpora (at 100 TB some payloads are always corrupt):
+    an undecodable payload yields ONE row of NULL stats, doc_id
+    preserved for quarantine, instead of a stage kill.
+
+    Columns are built per schema name; one holding a NULL stays
+    ``object``, so a poison row never pushes the good rows' 64-bit
+    stats through float64."""
+    null_row = _null_row(schema)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids, rows = [], []
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+                try:
+                    if payload is None:
+                        raise ValueError("NULL payload")
+                    out = list(stats(decode(bytes(payload))))
+                except ValueError:
+                    if strict:
+                        raise
+                    out = [null_row]
+                ids += [doc_id] * len(out)
+                rows += out
+            if not rows:
+                continue
+            cols = {"doc_id": ids}
+            for n in null_row:
+                vals = [r[n] for r in rows]
+                cols[n] = pd.Series(vals, dtype=object) if None in vals else vals
+            yield pd.DataFrame(cols)
+
+    return media.mapInPandas(run, schema=schema)
+
+
 def synthesize_media(df: DataFrame, id_col: str) -> DataFrame:
     """Manufacture a deterministic mixed-media corpus: doc_id % 3 picks
     PNG / JPEG / WAV, with dimensions/channels/rate/samples all simple
@@ -1557,34 +1655,19 @@ def synthesize_media(df: DataFrame, id_col: str) -> DataFrame:
     per-row Python, but it happens inside the executor batch loop, the
     exact production shape for synthetic-media generation."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
-                kind = d % 3
-                if kind == 0:
-                    payloads.append(
-                        png_bytes(d % 509 + 1, d % 251 + 1,
-                                  color_type=2 if d % 2 == 0 else 6)
-                    )
-                elif kind == 1:
-                    payloads.append(
-                        jpeg_bytes(d % 499 + 1, d % 241 + 1,
-                                   n_components=3 if d % 2 == 0 else 1)
-                    )
-                else:
-                    payloads.append(
-                        wav_bytes(d % 2 + 1, 8000 * (d % 3 + 1), d % 1000 + 1)
-                    )
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+    def payload(d: int) -> bytes:
+        kind = d % 3
+        if kind == 0:
+            return png_bytes(
+                d % 509 + 1, d % 251 + 1, color_type=2 if d % 2 == 0 else 6
+            )
+        if kind == 1:
+            return jpeg_bytes(
+                d % 499 + 1, d % 241 + 1, n_components=3 if d % 2 == 0 else 1
+            )
+        return wav_bytes(d % 2 + 1, 8000 * (d % 3 + 1), d % 1000 + 1)
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 def decode_media(media: DataFrame) -> DataFrame:
@@ -1626,29 +1709,19 @@ def synthesize_png_pixels(df: DataFrame, id_col: str) -> DataFrame:
     IDAT stream to reproduce them. Encoding cycles all five PNG filter
     types and splits IDAT in two (:func:`png_pixel_bytes`)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
-                w, h = d % 24 + 4, d % 16 + 4
-                color_type = 2 if d % 2 == 0 else 0
-                ch = _PNG_CHANNELS[color_type]
-                raster = bytes(
-                    (3 * x + 5 * y + 17 * c + d) % 256
-                    for y in range(h)
-                    for x in range(w)
-                    for c in range(ch)
-                )
-                payloads.append(png_pixel_bytes(w, h, raster, color_type))
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+    def payload(d: int) -> bytes:
+        w, h = d % 24 + 4, d % 16 + 4
+        color_type = 2 if d % 2 == 0 else 0
+        ch = _PNG_CHANNELS[color_type]
+        raster = bytes(
+            (3 * x + 5 * y + 17 * c + d) % 256
+            for y in range(h)
+            for x in range(w)
+            for c in range(ch)
+        )
+        return png_pixel_bytes(w, h, raster, color_type)
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 def decode_png_stats(media: DataFrame, strict: bool = True) -> DataFrame:
@@ -1657,58 +1730,25 @@ def decode_png_stats(media: DataFrame, strict: bool = True) -> DataFrame:
     :func:`png_decode_pixels` — inflate + unfilter), never from
     metadata. ``px_mean_milli`` is integer arithmetic
     (``1000·sum // n``) so both engines agree bit-for-bit.
+    ``strict=False`` = poison-safe NULL-stats rows (see
+    :func:`_decode_map`)."""
 
-    ``strict=False`` is the production posture for external corpora: a
-    payload that fails to decode yields a row of NULL stats (doc_id
-    preserved for quarantine) instead of a ValueError that would kill
-    the stage — at 100 TB some payloads are always corrupt. The gate
-    keeps strict=True (its payloads are synthesized, so an error there
-    is a codec bug to surface, not data to tolerate)."""
+    def stats(d: dict) -> Iterator[dict]:
+        raster = d["raster"]
+        total = sum(raster)
+        yield {
+            "width": d["width"],
+            "height": d["height"],
+            "channels": d["channels"],
+            "n_pixels": d["width"] * d["height"],
+            "px_sum": total,
+            "first_px": raster[0],
+            "last_px": raster[-1],
+            "px_mean_milli": 1000 * total // len(raster),
+            "raster_sha256": hashlib.sha256(raster).hexdigest(),
+        }
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    d = png_decode_pixels(payload)
-                except ValueError:
-                    if strict:
-                        raise
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            **{
-                                k: None
-                                for k in (
-                                    "width", "height", "channels", "n_pixels",
-                                    "px_sum", "first_px", "last_px",
-                                    "px_mean_milli", "raster_sha256",
-                                )
-                            },
-                        }
-                    )
-                    continue
-                raster = d["raster"]
-                total = sum(raster)
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": d["width"],
-                        "height": d["height"],
-                        "channels": d["channels"],
-                        "n_pixels": d["width"] * d["height"],
-                        "px_sum": total,
-                        "first_px": raster[0],
-                        "last_px": raster[-1],
-                        "px_mean_milli": 1000 * total // len(raster),
-                        "raster_sha256": hashlib.sha256(raster).hexdigest(),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(run, schema=PNG_STATS_SCHEMA)
+    return _decode_map(media, PNG_STATS_SCHEMA, stats, strict, decode=png_decode_pixels)
 
 
 def synthesize_png_interlaced(df: DataFrame, id_col: str) -> DataFrame:
@@ -1719,31 +1759,19 @@ def synthesize_png_interlaced(df: DataFrame, id_col: str) -> DataFrame:
     engine must deinterlace the seven independently-filtered sub-images
     back onto the pixel grid to reproduce the closed-form sums."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
-                w, h = d % 21 + 6, d % 17 + 5
-                color_type = 2 if d % 2 == 0 else 0
-                ch = _PNG_CHANNELS[color_type]
-                raster = bytes(
-                    (3 * x + 5 * y + 17 * c + d) % 256
-                    for y in range(h)
-                    for x in range(w)
-                    for c in range(ch)
-                )
-                payloads.append(
-                    png_pixel_bytes(w, h, raster, color_type, interlace=True)
-                )
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+    def payload(d: int) -> bytes:
+        w, h = d % 21 + 6, d % 17 + 5
+        color_type = 2 if d % 2 == 0 else 0
+        ch = _PNG_CHANNELS[color_type]
+        raster = bytes(
+            (3 * x + 5 * y + 17 * c + d) % 256
+            for y in range(h)
+            for x in range(w)
+            for c in range(ch)
+        )
+        return png_pixel_bytes(w, h, raster, color_type, interlace=True)
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 PNG16_STATS_SCHEMA = (
@@ -1762,31 +1790,19 @@ def synthesize_png16(df: DataFrame, id_col: str) -> DataFrame:
     unfilter at the 2-byte pixel width and unpack big-endian u16s to
     reproduce the closed-form sums."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
-                w, h = d % 13 + 3, d % 9 + 3
-                color_type = 2 if d % 2 == 0 else 0
-                ch = _PNG_CHANNELS[color_type]
-                samples = [
-                    (257 * (3 * x + 5 * y + 17 * c) + d) % 65536
-                    for y in range(h)
-                    for x in range(w)
-                    for c in range(ch)
-                ]
-                payloads.append(
-                    png_pixel16_bytes(w, h, samples, color_type, interlace=d % 4 == 0)
-                )
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+    def payload(d: int) -> bytes:
+        w, h = d % 13 + 3, d % 9 + 3
+        color_type = 2 if d % 2 == 0 else 0
+        ch = _PNG_CHANNELS[color_type]
+        samples = [
+            (257 * (3 * x + 5 * y + 17 * c) + d) % 65536
+            for y in range(h)
+            for x in range(w)
+            for c in range(ch)
+        ]
+        return png_pixel16_bytes(w, h, samples, color_type, interlace=d % 4 == 0)
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 def decode_png16_stats(media: DataFrame, strict: bool = True) -> DataFrame:
@@ -1794,53 +1810,27 @@ def decode_png16_stats(media: DataFrame, strict: bool = True) -> DataFrame:
     come from the decoded u16 SAMPLES, not raster bytes — a byte-order
     or pixel-width bug shifts sample_sum by orders of magnitude.
     ``strict=False`` = poison-safe NULL-stats rows (see
-    :func:`decode_png_stats`)."""
+    :func:`_decode_map`)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    d = png_decode_pixels(bytes(payload))
-                    if d.get("bit_depth") != 16:
-                        raise ValueError("expected a 16-bit PNG")
-                except ValueError:
-                    if strict:
-                        raise
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            **{
-                                k: None
-                                for k in (
-                                    "width", "height", "channels", "bit_depth",
-                                    "n_samples", "sample_sum", "first_sample",
-                                    "last_sample", "max_sample",
-                                )
-                            },
-                        }
-                    )
-                    continue
-                s = d["samples16"]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": d["width"],
-                        "height": d["height"],
-                        "channels": d["channels"],
-                        "bit_depth": 16,
-                        "n_samples": len(s),
-                        "sample_sum": sum(s),
-                        "first_sample": s[0],
-                        "last_sample": s[-1],
-                        "max_sample": max(s),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def stats(d: dict) -> Iterator[dict]:
+        if d.get("bit_depth") != 16:
+            raise ValueError("expected a 16-bit PNG")
+        s = d["samples16"]
+        yield {
+            "width": d["width"],
+            "height": d["height"],
+            "channels": d["channels"],
+            "bit_depth": 16,
+            "n_samples": len(s),
+            "sample_sum": sum(s),
+            "first_sample": s[0],
+            "last_sample": s[-1],
+            "max_sample": max(s),
+        }
 
-    return media.mapInPandas(run, schema=PNG16_STATS_SCHEMA)
+    return _decode_map(
+        media, PNG16_STATS_SCHEMA, stats, strict, decode=png_decode_pixels
+    )
 
 
 PALETTE_STATS_SCHEMA = (
@@ -1859,28 +1849,18 @@ def synthesize_png_palette(df: DataFrame, id_col: str) -> DataFrame:
     sums arithmetically while the engine must unfilter the index
     scanlines AND apply the actual PLTE lookup to reproduce them."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
-                w, h, ps = d % 21 + 5, d % 14 + 4, d % 13 + 3
-                pal = bytes(
-                    v
-                    for j in range(ps)
-                    for v in ((7 * j + d) % 256, (13 * j + 2 * d) % 256,
-                              (29 * j + 3 * d) % 256)
-                )
-                idx = bytes((x + 2 * y + d) % ps for y in range(h) for x in range(w))
-                payloads.append(png_palette_bytes(w, h, idx, pal))
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+    def payload(d: int) -> bytes:
+        w, h, ps = d % 21 + 5, d % 14 + 4, d % 13 + 3
+        pal = bytes(
+            v
+            for j in range(ps)
+            for v in ((7 * j + d) % 256, (13 * j + 2 * d) % 256,
+                      (29 * j + 3 * d) % 256)
+        )
+        idx = bytes((x + 2 * y + d) % ps for y in range(h) for x in range(w))
+        return png_palette_bytes(w, h, idx, pal)
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 def decode_palette_png_stats(media: DataFrame, strict: bool = True) -> DataFrame:
@@ -1888,56 +1868,29 @@ def decode_palette_png_stats(media: DataFrame, strict: bool = True) -> DataFrame
     per-channel sums come from the post-PLTE-lookup RGB raster — a
     palette-order (RGB/BGR) or index-offset bug lands on
     r_sum/g_sum/b_sum even when the totals agree. ``strict=False`` =
-    poison-safe NULL-stats rows (see :func:`decode_png_stats`)."""
+    poison-safe NULL-stats rows (see :func:`_decode_map`)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    d = png_decode_pixels(bytes(payload))
-                    if d.get("palette_size") is None:
-                        raise ValueError("expected an indexed-color PNG")
-                except ValueError:
-                    if strict:
-                        raise
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            **{
-                                k: None
-                                for k in (
-                                    "width", "height", "channels",
-                                    "palette_size", "n_pixels", "px_sum",
-                                    "r_sum", "g_sum", "b_sum",
-                                    "first_px", "last_px",
-                                )
-                            },
-                        }
-                    )
-                    continue
-                raster = d["raster"]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": d["width"],
-                        "height": d["height"],
-                        "channels": d["channels"],
-                        "palette_size": d["palette_size"],
-                        "n_pixels": d["width"] * d["height"],
-                        "px_sum": sum(raster),
-                        "r_sum": sum(raster[0::3]),
-                        "g_sum": sum(raster[1::3]),
-                        "b_sum": sum(raster[2::3]),
-                        "first_px": raster[0],
-                        "last_px": raster[-1],
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def stats(d: dict) -> Iterator[dict]:
+        if d.get("palette_size") is None:
+            raise ValueError("expected an indexed-color PNG")
+        raster = d["raster"]
+        yield {
+            "width": d["width"],
+            "height": d["height"],
+            "channels": d["channels"],
+            "palette_size": d["palette_size"],
+            "n_pixels": d["width"] * d["height"],
+            "px_sum": sum(raster),
+            "r_sum": sum(raster[0::3]),
+            "g_sum": sum(raster[1::3]),
+            "b_sum": sum(raster[2::3]),
+            "first_px": raster[0],
+            "last_px": raster[-1],
+        }
 
-    return media.mapInPandas(run, schema=PALETTE_STATS_SCHEMA)
+    return _decode_map(
+        media, PALETTE_STATS_SCHEMA, stats, strict, decode=png_decode_pixels
+    )
 
 
 JPEG_STATS_SCHEMA = (
@@ -1957,26 +1910,16 @@ def synthesize_jpeg_tiles(df: DataFrame, id_col: str) -> DataFrame:
     arithmetic while the engine must run the real entropy decoder."""
     from .jpegcodec import jpeg_pixel_bytes
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
-                w, h = 8 * (d % 5 + 1), 8 * (d % 4 + 1)
-                raster = bytes(
-                    (11 * (x // 8) + 23 * (y // 8) + 7 * d) % 256
-                    for y in range(h)
-                    for x in range(w)
-                )
-                payloads.append(jpeg_pixel_bytes(w, h, raster))
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+    def payload(d: int) -> bytes:
+        w, h = 8 * (d % 5 + 1), 8 * (d % 4 + 1)
+        raster = bytes(
+            (11 * (x // 8) + 23 * (y // 8) + 7 * d) % 256
+            for y in range(h)
+            for x in range(w)
+        )
+        return jpeg_pixel_bytes(w, h, raster)
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 def decode_jpeg_stats(media: DataFrame, strict: bool = True) -> DataFrame:
@@ -1985,51 +1928,24 @@ def decode_jpeg_stats(media: DataFrame, strict: bool = True) -> DataFrame:
     :func:`decode_real` — Huffman, DC prediction, dequantize, IDCT —
     never from metadata. Integer stats only, so both engines agree
     bit-for-bit. ``strict=False`` = poison-safe NULL-stats rows (see
-    :func:`decode_png_stats`)."""
+    :func:`_decode_map`)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    d = decode_real(bytes(payload))
-                    if "raster" not in d and "samples" not in d:
-                        raise ValueError(f"undecodable payload: {d['media_type']}")
-                except ValueError:
-                    if strict:
-                        raise
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            **{
-                                k: None
-                                for k in (
-                                    "width", "height", "n_tiles", "px_sum",
-                                    "first_px", "last_px", "px_mean_milli",
-                                )
-                            },
-                        }
-                    )
-                    continue
-                raster = d["raster"]
-                total = sum(raster)
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": d["width"],
-                        "height": d["height"],
-                        "n_tiles": (d["width"] // 8) * (d["height"] // 8),
-                        "px_sum": total,
-                        "first_px": raster[0],
-                        "last_px": raster[-1],
-                        "px_mean_milli": 1000 * total // len(raster),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def stats(d: dict) -> Iterator[dict]:
+        if _lacks(d, "width", "height", "raster"):
+            raise ValueError(f"undecodable payload: {d.get('media_type')}")
+        raster = d["raster"]
+        total = sum(raster)
+        yield {
+            "width": d["width"],
+            "height": d["height"],
+            "n_tiles": (d["width"] // 8) * (d["height"] // 8),
+            "px_sum": total,
+            "first_px": raster[0],
+            "last_px": raster[-1],
+            "px_mean_milli": 1000 * total // len(raster),
+        }
 
-    return media.mapInPandas(run, schema=JPEG_STATS_SCHEMA)
+    return _decode_map(media, JPEG_STATS_SCHEMA, stats, strict)
 
 
 JPEG_COLOR_SCHEMA = (
@@ -2046,29 +1962,19 @@ def synthesize_jpeg_color(df: DataFrame, id_col: str) -> DataFrame:
     exact-at-quant-1 fixture, per component."""
     from .jpegcodec import jpeg_planes_bytes
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
-                w, h = 8 * (d % 5 + 1), 8 * (d % 4 + 1)
-                planes = [
-                    bytes(
-                        (11 * (x // 8) + 23 * (y // 8) + 7 * d + 31 * c) % 256
-                        for y in range(h)
-                        for x in range(w)
-                    )
-                    for c in range(3)
-                ]
-                payloads.append(jpeg_planes_bytes(w, h, planes))
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+    def payload(d: int) -> bytes:
+        w, h = 8 * (d % 5 + 1), 8 * (d % 4 + 1)
+        planes = [
+            bytes(
+                (11 * (x // 8) + 23 * (y // 8) + 7 * d + 31 * c) % 256
+                for y in range(h)
+                for x in range(w)
+            )
+            for c in range(3)
+        ]
+        return jpeg_planes_bytes(w, h, planes)
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 def decode_jpeg_color_stats(media: DataFrame, strict: bool = True) -> DataFrame:
@@ -2077,52 +1983,24 @@ def decode_jpeg_color_stats(media: DataFrame, strict: bool = True) -> DataFrame:
     (interleaved-MCU Huffman decode with per-component DC prediction) —
     an interleave/predictor-mixup bug lands on y_sum/cb_sum/cr_sum."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    d = decode_real(bytes(payload))
-                    if "planes" not in d or len(d["planes"]) != 3:
-                        raise ValueError("expected a 3-component JPEG")
-                except ValueError:
-                    if strict:
-                        raise
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            **{
-                                k: None
-                                for k in (
-                                    "width", "height", "channels", "n_tiles",
-                                    "px_sum", "y_sum", "cb_sum", "cr_sum",
-                                    "first_px", "last_px",
-                                )
-                            },
-                        }
-                    )
-                    continue
-                sums = [sum(p) for p in d["planes"]]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": d["width"],
-                        "height": d["height"],
-                        "channels": len(d["planes"]),
-                        "n_tiles": (d["width"] // 8) * (d["height"] // 8),
-                        "px_sum": sum(sums),
-                        "y_sum": sums[0],
-                        "cb_sum": sums[1],
-                        "cr_sum": sums[2],
-                        "first_px": d["planes"][0][0],
-                        "last_px": d["planes"][2][-1],
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def stats(d: dict) -> Iterator[dict]:
+        if _lacks(d, "width", "height", "planes") or len(d["planes"]) != 3:
+            raise ValueError("expected a 3-component JPEG")
+        sums = [sum(p) for p in d["planes"]]
+        yield {
+            "width": d["width"],
+            "height": d["height"],
+            "channels": len(d["planes"]),
+            "n_tiles": (d["width"] // 8) * (d["height"] // 8),
+            "px_sum": sum(sums),
+            "y_sum": sums[0],
+            "cb_sum": sums[1],
+            "cr_sum": sums[2],
+            "first_px": d["planes"][0][0],
+            "last_px": d["planes"][2][-1],
+        }
 
-    return media.mapInPandas(run, schema=JPEG_COLOR_SCHEMA)
+    return _decode_map(media, JPEG_COLOR_SCHEMA, stats, strict)
 
 
 JPEG_RESTART_SCHEMA = (
@@ -2141,28 +2019,16 @@ def synthesize_jpeg_restart(df: DataFrame, id_col: str) -> DataFrame:
     layout most camera/scanner JPEGs carry."""
     from .jpegcodec import jpeg_planes_bytes
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
-                w, h = 8 * (d % 6 + 1), 8 * (d % 3 + 1)
-                raster = bytes(
-                    (11 * (x // 8) + 23 * (y // 8) + 7 * d) % 256
-                    for y in range(h)
-                    for x in range(w)
-                )
-                payloads.append(
-                    jpeg_planes_bytes(w, h, [raster], restart_interval=d % 3 + 1)
-                )
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+    def payload(d: int) -> bytes:
+        w, h = 8 * (d % 6 + 1), 8 * (d % 3 + 1)
+        raster = bytes(
+            (11 * (x // 8) + 23 * (y // 8) + 7 * d) % 256
+            for y in range(h)
+            for x in range(w)
+        )
+        return jpeg_planes_bytes(w, h, [raster], restart_interval=d % 3 + 1)
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 def decode_jpeg_restart_stats(media: DataFrame, strict: bool = True) -> DataFrame:
@@ -2174,54 +2040,29 @@ def decode_jpeg_restart_stats(media: DataFrame, strict: bool = True) -> DataFram
     consumed (round 11: ``_BitReader.restarts_consumed``, not
     re-derived arithmetic) — a missed or mis-placed restart lands on
     px_sum AND on the marker count. ``strict=False`` = poison-safe
-    NULL-stats rows (see :func:`decode_png_stats`)."""
+    NULL-stats rows (see :func:`_decode_map`)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    d = decode_real(bytes(payload))
-                    if "raster" not in d or not d.get("restart_interval"):
-                        raise ValueError("expected a restart-interval JPEG")
-                except ValueError:
-                    if strict:
-                        raise
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            **{
-                                k: None
-                                for k in (
-                                    "width", "height", "n_tiles",
-                                    "restart_interval", "n_restarts",
-                                    "px_sum", "first_px", "last_px",
-                                )
-                            },
-                        }
-                    )
-                    continue
-                raster = d["raster"]
-                n_mcus = (d["width"] // 8) * (d["height"] // 8)
-                ri = d["restart_interval"]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": d["width"],
-                        "height": d["height"],
-                        "n_tiles": n_mcus,
-                        "restart_interval": ri,
-                        "n_restarts": d["n_restart_markers"],
-                        "px_sum": sum(raster),
-                        "first_px": raster[0],
-                        "last_px": raster[-1],
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def stats(d: dict) -> Iterator[dict]:
+        if (
+            _lacks(d, "width", "height", "raster", "n_restart_markers")
+            or not d.get("restart_interval")
+        ):
+            raise ValueError("expected a restart-interval JPEG")
+        raster = d["raster"]
+        n_mcus = (d["width"] // 8) * (d["height"] // 8)
+        ri = d["restart_interval"]
+        yield {
+            "width": d["width"],
+            "height": d["height"],
+            "n_tiles": n_mcus,
+            "restart_interval": ri,
+            "n_restarts": d["n_restart_markers"],
+            "px_sum": sum(raster),
+            "first_px": raster[0],
+            "last_px": raster[-1],
+        }
 
-    return media.mapInPandas(run, schema=JPEG_RESTART_SCHEMA)
+    return _decode_map(media, JPEG_RESTART_SCHEMA, stats, strict)
 
 
 def synthesize_jpeg_progressive(df: DataFrame, id_col: str) -> DataFrame:
@@ -2235,26 +2076,16 @@ def synthesize_jpeg_progressive(df: DataFrame, id_col: str) -> DataFrame:
     random rasters, tests/test_datapipe.py)."""
     from .jpegcodec import jpeg_progressive_bytes
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
-                w, h = 8 * (d % 5 + 1), 8 * (d % 4 + 1)
-                raster = bytes(
-                    (11 * (x // 8) + 23 * (y // 8) + 7 * d) % 256
-                    for y in range(h)
-                    for x in range(w)
-                )
-                payloads.append(jpeg_progressive_bytes(w, h, [raster]))
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+    def payload(d: int) -> bytes:
+        w, h = 8 * (d % 5 + 1), 8 * (d % 4 + 1)
+        raster = bytes(
+            (11 * (x // 8) + 23 * (y // 8) + 7 * d) % 256
+            for y in range(h)
+            for x in range(w)
+        )
+        return jpeg_progressive_bytes(w, h, [raster])
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 def synthesize_jpeg_progressive_restart(df: DataFrame, id_col: str) -> DataFrame:
@@ -2270,30 +2101,16 @@ def synthesize_jpeg_progressive_restart(df: DataFrame, id_col: str) -> DataFrame
     pending EOB run first."""
     from .jpegcodec import jpeg_progressive_bytes
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
-                w, h = 8 * (d % 5 + 1), 8 * (d % 4 + 1)
-                raster = bytes(
-                    (11 * (x // 8) + 23 * (y // 8) + 7 * d) % 256
-                    for y in range(h)
-                    for x in range(w)
-                )
-                payloads.append(
-                    jpeg_progressive_bytes(
-                        w, h, [raster], restart_interval=d % 3 + 1
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+    def payload(d: int) -> bytes:
+        w, h = 8 * (d % 5 + 1), 8 * (d % 4 + 1)
+        raster = bytes(
+            (11 * (x // 8) + 23 * (y // 8) + 7 * d) % 256
+            for y in range(h)
+            for x in range(w)
+        )
+        return jpeg_progressive_bytes(w, h, [raster], restart_interval=d % 3 + 1)
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 def decode_jpeg_progressive_restart_stats(
@@ -2312,58 +2129,30 @@ def decode_jpeg_progressive_restart_stats(
     markers now lands here independently of px_sum), and the row
     asserts the stream really was SOF2 (``progressive``), so a silent
     fallback to the baseline path cannot pass. ``strict=False`` =
-    poison-safe NULL-stats rows (see :func:`decode_png_stats`)."""
+    poison-safe NULL-stats rows (see :func:`_decode_map`)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    d = decode_real(bytes(payload))
-                    if (
-                        "raster" not in d
-                        or not d.get("progressive")
-                        or not d.get("restart_interval")
-                    ):
-                        raise ValueError("expected a progressive restart JPEG")
-                except ValueError:
-                    if strict:
-                        raise
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            **{
-                                k: None
-                                for k in (
-                                    "width", "height", "n_tiles",
-                                    "restart_interval", "n_restarts",
-                                    "px_sum", "first_px", "last_px",
-                                )
-                            },
-                        }
-                    )
-                    continue
-                raster = d["raster"]
-                n_mcus = (d["width"] // 8) * (d["height"] // 8)
-                ri = d["restart_interval"]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": d["width"],
-                        "height": d["height"],
-                        "n_tiles": n_mcus,
-                        "restart_interval": ri,
-                        "n_restarts": d["n_restart_markers"],
-                        "px_sum": sum(raster),
-                        "first_px": raster[0],
-                        "last_px": raster[-1],
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def stats(d: dict) -> Iterator[dict]:
+        if (
+            _lacks(d, "width", "height", "raster", "n_restart_markers")
+            or not d.get("progressive")
+            or not d.get("restart_interval")
+        ):
+            raise ValueError("expected a progressive restart JPEG")
+        raster = d["raster"]
+        n_mcus = (d["width"] // 8) * (d["height"] // 8)
+        ri = d["restart_interval"]
+        yield {
+            "width": d["width"],
+            "height": d["height"],
+            "n_tiles": n_mcus,
+            "restart_interval": ri,
+            "n_restarts": d["n_restart_markers"],
+            "px_sum": sum(raster),
+            "first_px": raster[0],
+            "last_px": raster[-1],
+        }
 
-    return media.mapInPandas(run, schema=JPEG_RESTART_SCHEMA)
+    return _decode_map(media, JPEG_RESTART_SCHEMA, stats, strict)
 
 
 JPEG12_STATS_SCHEMA = (
@@ -2383,30 +2172,16 @@ def synthesize_jpeg12(df: DataFrame, id_col: str) -> DataFrame:
     with restart markers."""
     from .jpegcodec import jpeg_planes_bytes
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
-                w, h = 8 * (d % 4 + 1), 8 * (d % 3 + 1)
-                samples = [
-                    (997 * (x // 8) + 1499 * (y // 8) + 131 * d) % 4096
-                    for y in range(h)
-                    for x in range(w)
-                ]
-                payloads.append(
-                    jpeg_planes_bytes(
-                        w, h, [samples], precision=12, restart_interval=d % 2
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+    def payload(d: int) -> bytes:
+        w, h = 8 * (d % 4 + 1), 8 * (d % 3 + 1)
+        samples = [
+            (997 * (x // 8) + 1499 * (y // 8) + 131 * d) % 4096
+            for y in range(h)
+            for x in range(w)
+        ]
+        return jpeg_planes_bytes(w, h, [samples], precision=12, restart_interval=d % 2)
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 def decode_jpeg12_stats(media: DataFrame, strict: bool = True) -> DataFrame:
@@ -2417,52 +2192,26 @@ def decode_jpeg12_stats(media: DataFrame, strict: bool = True) -> DataFrame:
     Annex K) all shift sample_sum by orders of magnitude. The row
     asserts ``bit_depth == 12`` so a silent 8-bit decode cannot pass.
     ``strict=False`` = poison-safe NULL-stats rows (see
-    :func:`decode_png_stats`)."""
+    :func:`_decode_map`)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    d = decode_real(bytes(payload))
-                    if d.get("bit_depth") != 12 or "samples16" not in d:
-                        raise ValueError("expected a 12-bit JPEG")
-                except ValueError:
-                    if strict:
-                        raise
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            **{
-                                k: None
-                                for k in (
-                                    "width", "height", "n_tiles",
-                                    "restart_interval", "sample_sum",
-                                    "first_sample", "last_sample", "max_sample",
-                                )
-                            },
-                        }
-                    )
-                    continue
-                s = d["samples16"]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": d["width"],
-                        "height": d["height"],
-                        "n_tiles": (d["width"] // 8) * (d["height"] // 8),
-                        "restart_interval": d["restart_interval"],
-                        "sample_sum": sum(s),
-                        "first_sample": s[0],
-                        "last_sample": s[-1],
-                        "max_sample": max(s),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def stats(d: dict) -> Iterator[dict]:
+        if d.get("bit_depth") != 12 or _lacks(
+            d, "width", "height", "restart_interval", "samples16"
+        ):
+            raise ValueError("expected a 12-bit JPEG")
+        s = d["samples16"]
+        yield {
+            "width": d["width"],
+            "height": d["height"],
+            "n_tiles": (d["width"] // 8) * (d["height"] // 8),
+            "restart_interval": d["restart_interval"],
+            "sample_sum": sum(s),
+            "first_sample": s[0],
+            "last_sample": s[-1],
+            "max_sample": max(s),
+        }
 
-    return media.mapInPandas(run, schema=JPEG12_STATS_SCHEMA)
+    return _decode_map(media, JPEG12_STATS_SCHEMA, stats, strict)
 
 
 JPEG12P_STATS_SCHEMA = (
@@ -2481,30 +2230,18 @@ def synthesize_jpeg12_progressive(df: DataFrame, id_col: str) -> DataFrame:
     restart markers compose with 12-bit refinement scans."""
     from .jpegcodec import jpeg_progressive_bytes
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
-                w, h = 8 * (d % 4 + 1), 8 * (d % 3 + 1)
-                samples = [
-                    (499 * (x // 8) + 257 * (y // 8) + 61 * d) % 4096
-                    for y in range(h)
-                    for x in range(w)
-                ]
-                payloads.append(
-                    jpeg_progressive_bytes(
-                        w, h, [samples], precision=12, restart_interval=d % 2
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+    def payload(d: int) -> bytes:
+        w, h = 8 * (d % 4 + 1), 8 * (d % 3 + 1)
+        samples = [
+            (499 * (x // 8) + 257 * (y // 8) + 61 * d) % 4096
+            for y in range(h)
+            for x in range(w)
+        ]
+        return jpeg_progressive_bytes(
+            w, h, [samples], precision=12, restart_interval=d % 2
+        )
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 def decode_jpeg12prog_stats(media: DataFrame, strict: bool = True) -> DataFrame:
@@ -2516,52 +2253,25 @@ def decode_jpeg12prog_stats(media: DataFrame, strict: bool = True) -> DataFrame:
     AC table (sizes stop at 10) lands immediately. ``strict=False`` =
     poison-safe NULL-stats rows."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    d = decode_real(bytes(payload))
-                    if (
-                        d.get("bit_depth") != 12
-                        or not d.get("progressive")
-                        or "samples16" not in d
-                    ):
-                        raise ValueError("expected a 12-bit progressive JPEG")
-                except ValueError:
-                    if strict:
-                        raise
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            **{
-                                k: None
-                                for k in (
-                                    "width", "height", "n_scans", "sample_sum",
-                                    "first_sample", "last_sample", "max_sample",
-                                )
-                            },
-                        }
-                    )
-                    continue
-                s = d["samples16"]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": d["width"],
-                        "height": d["height"],
-                        "n_scans": d["n_scans"],
-                        "sample_sum": sum(s),
-                        "first_sample": s[0],
-                        "last_sample": s[-1],
-                        "max_sample": max(s),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def stats(d: dict) -> Iterator[dict]:
+        if (
+            d.get("bit_depth") != 12
+            or not d.get("progressive")
+            or _lacks(d, "width", "height", "n_scans", "samples16")
+        ):
+            raise ValueError("expected a 12-bit progressive JPEG")
+        s = d["samples16"]
+        yield {
+            "width": d["width"],
+            "height": d["height"],
+            "n_scans": d["n_scans"],
+            "sample_sum": sum(s),
+            "first_sample": s[0],
+            "last_sample": s[-1],
+            "max_sample": max(s),
+        }
 
-    return media.mapInPandas(run, schema=JPEG12P_STATS_SCHEMA)
+    return _decode_map(media, JPEG12P_STATS_SCHEMA, stats, strict)
 
 
 POISON_STATS_SCHEMA = (
@@ -2595,74 +2305,64 @@ def synthesize_mixed_media(df: DataFrame, id_col: str) -> DataFrame:
     from .jpegcodec import jpeg_pixel_bytes
     from .tiffcodec import tiff_bytes
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
-                t = (d // 2) % 8
-                if t == 0:
-                    n = d % 9 + 2
-                    raster = bytes(
-                        (3 * x + 5 * y + d) % 256
-                        for y in range(n)
-                        for x in range(n)
-                    )
-                    p = png_pixel_bytes(n, n, raster, 0)
-                elif t == 1:
-                    p = jpeg_pixel_bytes(8, 8, bytes([(7 * d) % 256] * 64))
-                elif t == 2:
-                    n = d % 50 + 10
-                    p = wav_pcm_bytes(
-                        1, 8000, [((7 * d + 13 * i) % 2001) - 1000 for i in range(n)]
-                    )
-                elif t == 3:
-                    n = d % 40 + 16
-                    samples = [((7 * d + 13 * i) % 2001) - 1000 for i in range(n)]
-                    p = flac_bytes(8000, 16, [(samples, ("verbatim",))])
-                elif t == 4:
-                    spb = d % 30 + 9
-                    pred0 = (7 * d) % 2001 - 1000
-                    p = wav_adpcm_bytes(8000, [(pred0, 0, [8] * (spb - 1))], spb)
-                elif t == 5:
-                    gw, gh = d % 6 + 2, d % 4 + 2
-                    pal = bytes((7 * j) % 256 for j in range(12))
-                    idx = bytes(
-                        (x + 2 * y + d) % 4
-                        for y in range(gh)
-                        for x in range(gw)
-                    )
-                    p = gif_bytes(gw, gh, idx, pal)
-                elif t == 6:
-                    bw, bh = d % 7 + 2, d % 5 + 2
-                    rgb = bytes(
-                        (3 * x + 5 * y + 7 * d + 11 * c) % 256
-                        for y in range(bh)
-                        for x in range(bw)
-                        for c in range(3)
-                    )
-                    p = bmp_bytes(bw, bh, rgb)
-                else:
-                    tw, th = d % 8 + 3, d % 6 + 3
-                    raster = bytes(
-                        (3 * x + 5 * y + 7 * d) % 256
-                        for y in range(th)
-                        for x in range(tw)
-                    )
-                    p = tiff_bytes(tw, th, raster, channels=1)
-                if d % 4 == 1:  # poison: stomp the magic
-                    p = b"\xde\xad\xbe\xef" + p[4:]
-                elif d % 4 == 3:  # poison: magic intact, structure gone
-                    p = p[:8]
-                payloads.append(p)
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+    def payload(d: int) -> bytes:
+        t = (d // 2) % 8
+        if t == 0:
+            n = d % 9 + 2
+            raster = bytes(
+                (3 * x + 5 * y + d) % 256
+                for y in range(n)
+                for x in range(n)
+            )
+            p = png_pixel_bytes(n, n, raster, 0)
+        elif t == 1:
+            p = jpeg_pixel_bytes(8, 8, bytes([(7 * d) % 256] * 64))
+        elif t == 2:
+            n = d % 50 + 10
+            p = wav_pcm_bytes(
+                1, 8000, [((7 * d + 13 * i) % 2001) - 1000 for i in range(n)]
+            )
+        elif t == 3:
+            n = d % 40 + 16
+            samples = [((7 * d + 13 * i) % 2001) - 1000 for i in range(n)]
+            p = flac_bytes(8000, 16, [(samples, ("verbatim",))])
+        elif t == 4:
+            spb = d % 30 + 9
+            pred0 = (7 * d) % 2001 - 1000
+            p = wav_adpcm_bytes(8000, [(pred0, 0, [8] * (spb - 1))], spb)
+        elif t == 5:
+            gw, gh = d % 6 + 2, d % 4 + 2
+            pal = bytes((7 * j) % 256 for j in range(12))
+            idx = bytes(
+                (x + 2 * y + d) % 4
+                for y in range(gh)
+                for x in range(gw)
+            )
+            p = gif_bytes(gw, gh, idx, pal)
+        elif t == 6:
+            bw, bh = d % 7 + 2, d % 5 + 2
+            rgb = bytes(
+                (3 * x + 5 * y + 7 * d + 11 * c) % 256
+                for y in range(bh)
+                for x in range(bw)
+                for c in range(3)
+            )
+            p = bmp_bytes(bw, bh, rgb)
+        else:
+            tw, th = d % 8 + 3, d % 6 + 3
+            raster = bytes(
+                (3 * x + 5 * y + 7 * d) % 256
+                for y in range(th)
+                for x in range(tw)
+            )
+            p = tiff_bytes(tw, th, raster, channels=1)
+        if d % 4 == 1:  # poison: stomp the magic
+            p = b"\xde\xad\xbe\xef" + p[4:]
+        elif d % 4 == 3:  # poison: magic intact, structure gone
+            p = p[:8]
+        return p
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 def decode_media_poison_stats(media: DataFrame) -> DataFrame:
@@ -2672,6 +2372,7 @@ def decode_media_poison_stats(media: DataFrame) -> DataFrame:
     a NULL-stats row with ``decoded = false`` instead of killing the
     stage — the per-type stats (pixel sum / linear sample sum) prove
     the good rows still run the full decode path next to the poison."""
+    null_row = _null_row(POISON_STATS_SCHEMA)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -2699,15 +2400,7 @@ def decode_media_poison_stats(media: DataFrame) -> DataFrame:
                         }
                     )
                 except ValueError:
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "media_type": None,
-                            "decoded": False,
-                            "n_units": None,
-                            "value_sum": None,
-                        }
-                    )
+                    rows.append({"doc_id": doc_id, **null_row, "decoded": False})
             yield pd.DataFrame(rows)
 
     return media.mapInPandas(run, schema=POISON_STATS_SCHEMA)
@@ -2735,35 +2428,23 @@ def synthesize_tiff(df: DataFrame, id_col: str) -> DataFrame:
     zlib / raw strips."""
     from .tiffcodec import tiff_bytes
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
-                w, h = d % 12 + 3, d % 8 + 3
-                ch = 1 if d % 2 == 0 else 3
-                raster = bytes(
-                    (3 * x + 5 * y + 7 * d + 11 * c) % 256
-                    for y in range(h)
-                    for x in range(w)
-                    for c in range(ch)
-                )
-                payloads.append(
-                    tiff_bytes(
-                        w, h, raster, channels=ch, rows_per_strip=d % 4 + 1,
-                        packbits=d % 4 == 0, big_endian=d % 5 == 0,
-                        lzw=d % 4 == 1, deflate=d % 4 == 2,
-                        predictor=2 if d % 8 in (1, 2) else 1,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+    def payload(d: int) -> bytes:
+        w, h = d % 12 + 3, d % 8 + 3
+        ch = 1 if d % 2 == 0 else 3
+        raster = bytes(
+            (3 * x + 5 * y + 7 * d + 11 * c) % 256
+            for y in range(h)
+            for x in range(w)
+            for c in range(ch)
+        )
+        return tiff_bytes(
+            w, h, raster, channels=ch, rows_per_strip=d % 4 + 1,
+            packbits=d % 4 == 0, big_endian=d % 5 == 0,
+            lzw=d % 4 == 1, deflate=d % 4 == 2,
+            predictor=2 if d % 8 in (1, 2) else 1,
+        )
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 def decode_tiff_stats(media: DataFrame, strict: bool = True) -> DataFrame:
@@ -2774,52 +2455,24 @@ def decode_tiff_stats(media: DataFrame, strict: bool = True) -> DataFrame:
     un-differencing pass lands on px_sum or the corner pixels.
     ``strict=False`` = poison-safe NULL-stats rows."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    d = decode_real(bytes(payload))
-                    if d.get("media_type") != "image/tiff":
-                        raise ValueError("expected a TIFF")
-                except ValueError:
-                    if strict:
-                        raise
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            **{
-                                k: None
-                                for k in (
-                                    "width", "height", "channels", "n_strips",
-                                    "compression", "predictor", "big_endian",
-                                    "px_sum", "first_px", "last_px",
-                                )
-                            },
-                        }
-                    )
-                    continue
-                r = d["raster"]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": d["width"],
-                        "height": d["height"],
-                        "channels": d["channels"],
-                        "n_strips": d["n_strips"],
-                        "compression": d["compression"],
-                        "predictor": d["predictor"],
-                        "big_endian": d["big_endian"],
-                        "px_sum": sum(r),
-                        "first_px": r[0],
-                        "last_px": r[-1],
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def stats(d: dict) -> Iterator[dict]:
+        if d.get("media_type") != "image/tiff":
+            raise ValueError("expected a TIFF")
+        r = d["raster"]
+        yield {
+            "width": d["width"],
+            "height": d["height"],
+            "channels": d["channels"],
+            "n_strips": d["n_strips"],
+            "compression": d["compression"],
+            "predictor": d["predictor"],
+            "big_endian": d["big_endian"],
+            "px_sum": sum(r),
+            "first_px": r[0],
+            "last_px": r[-1],
+        }
 
-    return media.mapInPandas(run, schema=TIFF_STATS_SCHEMA)
+    return _decode_map(media, TIFF_STATS_SCHEMA, stats, strict)
 
 
 TIFF_TILED_STATS_SCHEMA = (
@@ -2841,35 +2494,23 @@ def synthesize_tiff_tiled(df: DataFrame, id_col: str) -> DataFrame:
     tile grid."""
     from .tiffcodec import tiff_bytes
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
-                w, h = 16 + d % 21, 16 + d % 19
-                ch = 1 if d % 2 == 0 else 3
-                raster = bytes(
-                    (3 * x + 5 * y + 7 * d + 11 * c) % 256
-                    for y in range(h)
-                    for x in range(w)
-                    for c in range(ch)
-                )
-                payloads.append(
-                    tiff_bytes(
-                        w, h, raster, channels=ch, tile=(16, 16),
-                        big_endian=d % 5 == 0,
-                        lzw=d % 3 == 0, deflate=d % 3 == 1,
-                        predictor=2 if (d % 3 < 2 and d % 4 < 2) else 1,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+    def payload(d: int) -> bytes:
+        w, h = 16 + d % 21, 16 + d % 19
+        ch = 1 if d % 2 == 0 else 3
+        raster = bytes(
+            (3 * x + 5 * y + 7 * d + 11 * c) % 256
+            for y in range(h)
+            for x in range(w)
+            for c in range(ch)
+        )
+        return tiff_bytes(
+            w, h, raster, channels=ch, tile=(16, 16),
+            big_endian=d % 5 == 0,
+            lzw=d % 3 == 0, deflate=d % 3 == 1,
+            predictor=2 if (d % 3 < 2 and d % 4 < 2) else 1,
+        )
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 def decode_tiff_tiled_stats(media: DataFrame, strict: bool = True) -> DataFrame:
@@ -2879,52 +2520,24 @@ def decode_tiff_tiled_stats(media: DataFrame, strict: bool = True) -> DataFrame:
     lands on px_sum or a corner pixel. ``strict=False`` = poison-safe
     NULL-stats rows."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    d = decode_real(bytes(payload))
-                    if d.get("media_type") != "image/tiff" or not d.get("tiled"):
-                        raise ValueError("expected a tiled TIFF")
-                except ValueError:
-                    if strict:
-                        raise
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            **{
-                                k: None
-                                for k in (
-                                    "width", "height", "channels", "n_tiles",
-                                    "compression", "predictor", "big_endian",
-                                    "px_sum", "first_px", "last_px",
-                                )
-                            },
-                        }
-                    )
-                    continue
-                r = d["raster"]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": d["width"],
-                        "height": d["height"],
-                        "channels": d["channels"],
-                        "n_tiles": d["n_strips"],
-                        "compression": d["compression"],
-                        "predictor": d["predictor"],
-                        "big_endian": d["big_endian"],
-                        "px_sum": sum(r),
-                        "first_px": r[0],
-                        "last_px": r[-1],
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def stats(d: dict) -> Iterator[dict]:
+        if d.get("media_type") != "image/tiff" or not d.get("tiled"):
+            raise ValueError("expected a tiled TIFF")
+        r = d["raster"]
+        yield {
+            "width": d["width"],
+            "height": d["height"],
+            "channels": d["channels"],
+            "n_tiles": d["n_strips"],
+            "compression": d["compression"],
+            "predictor": d["predictor"],
+            "big_endian": d["big_endian"],
+            "px_sum": sum(r),
+            "first_px": r[0],
+            "last_px": r[-1],
+        }
 
-    return media.mapInPandas(run, schema=TIFF_TILED_STATS_SCHEMA)
+    return _decode_map(media, TIFF_TILED_STATS_SCHEMA, stats, strict)
 
 
 TIFF_PALETTE_STATS_SCHEMA = (
@@ -2944,32 +2557,20 @@ def synthesize_tiff_palette(df: DataFrame, id_col: str) -> DataFrame:
     ColorMap through the offset-array path and look every index up."""
     from .tiffcodec import tiff_bytes
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
-                w, h, nc = d % 9 + 2, d % 6 + 2, d % 5 + 2
-                pal = bytes(
-                    v % 256 for i in range(nc) for v in (7 * i, 13 * i, 29 * i)
-                )
-                idx = bytes(
-                    (x + 2 * y + d) % nc for y in range(h) for x in range(w)
-                )
-                payloads.append(
-                    tiff_bytes(
-                        w, h, idx, channels=1, rows_per_strip=d % 3 + 1,
-                        big_endian=d % 2 == 0, lzw=d % 3 == 0, palette=pal,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+    def payload(d: int) -> bytes:
+        w, h, nc = d % 9 + 2, d % 6 + 2, d % 5 + 2
+        pal = bytes(
+            v % 256 for i in range(nc) for v in (7 * i, 13 * i, 29 * i)
+        )
+        idx = bytes(
+            (x + 2 * y + d) % nc for y in range(h) for x in range(w)
+        )
+        return tiff_bytes(
+            w, h, idx, channels=1, rows_per_strip=d % 3 + 1,
+            big_endian=d % 2 == 0, lzw=d % 3 == 0, palette=pal,
+        )
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 def decode_tiff_palette_stats(media: DataFrame, strict: bool = True) -> DataFrame:
@@ -2979,52 +2580,24 @@ def decode_tiff_palette_stats(media: DataFrame, strict: bool = True) -> DataFram
     interleaved), or a dropped high-byte conversion lands on the
     channel sums. ``strict=False`` = poison-safe NULL-stats rows."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    d = decode_real(bytes(payload))
-                    if d.get("media_type") != "image/tiff" or not d.get("palette"):
-                        raise ValueError("expected a palette TIFF")
-                except ValueError:
-                    if strict:
-                        raise
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            **{
-                                k: None
-                                for k in (
-                                    "width", "height", "n_strips", "compression",
-                                    "big_endian", "r_sum", "g_sum", "b_sum",
-                                    "first_px", "last_px",
-                                )
-                            },
-                        }
-                    )
-                    continue
-                r = d["raster"]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": d["width"],
-                        "height": d["height"],
-                        "n_strips": d["n_strips"],
-                        "compression": d["compression"],
-                        "big_endian": d["big_endian"],
-                        "r_sum": sum(r[0::3]),
-                        "g_sum": sum(r[1::3]),
-                        "b_sum": sum(r[2::3]),
-                        "first_px": r[0],
-                        "last_px": r[-1],
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def stats(d: dict) -> Iterator[dict]:
+        if d.get("media_type") != "image/tiff" or not d.get("palette"):
+            raise ValueError("expected a palette TIFF")
+        r = d["raster"]
+        yield {
+            "width": d["width"],
+            "height": d["height"],
+            "n_strips": d["n_strips"],
+            "compression": d["compression"],
+            "big_endian": d["big_endian"],
+            "r_sum": sum(r[0::3]),
+            "g_sum": sum(r[1::3]),
+            "b_sum": sum(r[2::3]),
+            "first_px": r[0],
+            "last_px": r[-1],
+        }
 
-    return media.mapInPandas(run, schema=TIFF_PALETTE_STATS_SCHEMA)
+    return _decode_map(media, TIFF_PALETTE_STATS_SCHEMA, stats, strict)
 
 
 WARC_STATS_SCHEMA = (
@@ -3094,31 +2667,21 @@ def synthesize_warc(df: DataFrame, id_col: str) -> DataFrame:
     recomputes per-record lengths and byte sums arithmetically."""
     import gzip
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
-                members = []
-                for r in range(d % 4 + 1):
-                    if r % 2 == 0:
-                        body = "R:" + "a" * ((3 * d + 7 * r) % 50 + 10)
-                        payload = (WARC_RESP_HDR + body).encode()
-                        wtype = "response"
-                    else:
-                        payload = WARC_REQ_PAYLOAD.format(r=r).encode()
-                        wtype = "request"
-                    rec = _warc_record(wtype, f"http://example.com/{d}/{r}", payload)
-                    members.append(gzip.compress(rec, compresslevel=6, mtime=0))
-                payloads.append(b"".join(members))
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+    def payload(d: int) -> bytes:
+        members = []
+        for r in range(d % 4 + 1):
+            if r % 2 == 0:
+                body = "R:" + "a" * ((3 * d + 7 * r) % 50 + 10)
+                content = (WARC_RESP_HDR + body).encode()
+                wtype = "response"
+            else:
+                content = WARC_REQ_PAYLOAD.format(r=r).encode()
+                wtype = "request"
+            rec = _warc_record(wtype, f"http://example.com/{d}/{r}", content)
+            members.append(gzip.compress(rec, compresslevel=6, mtime=0))
+        return b"".join(members)
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 def parse_warc_stats(media: DataFrame, strict: bool = True) -> DataFrame:
@@ -3130,52 +2693,29 @@ def parse_warc_stats(media: DataFrame, strict: bool = True) -> DataFrame:
     = poison-safe NULL-stats rows."""
     import gzip
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    raw = gzip.decompress(bytes(payload))
-                    recs = []
-                    for h, clen, block in _walk_warc_records(raw):
-                        http_split = block.find(b"\r\n\r\n")
-                        body = block[http_split + 4 :] if http_split >= 0 else b""
-                        recs.append((h.get("warc-type", ""), clen, body))
-                except (ValueError, OSError, EOFError, KeyError) as exc:
-                    if strict:
-                        if isinstance(exc, ValueError):
-                            raise
-                        raise ValueError(str(exc)) from exc
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            **{
-                                k: None
-                                for k in (
-                                    "rec_index", "n_records", "warc_type",
-                                    "content_length", "body_chars", "body_sum",
-                                )
-                            },
-                        }
-                    )
-                    continue
-                for ri, (wtype, clen, body) in enumerate(recs):
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "rec_index": ri,
-                            "n_records": len(recs),
-                            "warc_type": wtype,
-                            "content_length": clen,
-                            "body_chars": len(body),
-                            "body_sum": sum(body),
-                        }
-                    )
-            yield pd.DataFrame(rows)
+    def decode(raw: bytes) -> list[tuple[str, int, bytes]]:
+        try:
+            recs = []
+            for h, clen, block in _walk_warc_records(gzip.decompress(raw)):
+                http_split = block.find(b"\r\n\r\n")
+                body = block[http_split + 4 :] if http_split >= 0 else b""
+                recs.append((h.get("warc-type", ""), clen, body))
+        except (OSError, EOFError, KeyError) as exc:
+            raise ValueError(str(exc)) from exc
+        return recs
 
-    return media.mapInPandas(run, schema=WARC_STATS_SCHEMA)
+    def stats(recs: list) -> Iterator[dict]:
+        for ri, (wtype, clen, body) in enumerate(recs):
+            yield {
+                "rec_index": ri,
+                "n_records": len(recs),
+                "warc_type": wtype,
+                "content_length": clen,
+                "body_chars": len(body),
+                "body_sum": sum(body),
+            }
+
+    return _decode_map(media, WARC_STATS_SCHEMA, stats, strict, decode=decode)
 
 
 WARC_POISON_SCHEMA = (
@@ -3200,65 +2740,50 @@ def synthesize_warc_mixed(df: DataFrame, id_col: str) -> DataFrame:
     * 3: POISON — bytes that are neither gzip nor WARC."""
     import gzip
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
-                kind = d % 4
-                if kind == 0:
-                    k = (3 * d + 7) % 50 + 10
-                    recs = [
-                        _warc_record(
-                            "warcinfo", f"file://crawl/{d}.warc",
-                            WARC_INFO_PAYLOAD.encode(),
-                        ),
-                        _warc_record(
-                            "response", f"http://example.com/{d}/1",
-                            (WARC_RESP_HDR + "R:" + "a" * k).encode(),
-                        ),
-                        _warc_record("metadata", f"http://example.com/{d}/2", b""),
-                        _warc_record(
-                            "request", f"http://example.com/{d}/3",
-                            WARC_REQ_PAYLOAD.format(r=3).encode(),
-                        ),
-                    ]
-                    payloads.append(
-                        b"".join(
-                            gzip.compress(r, compresslevel=6, mtime=0) for r in recs
-                        )
-                    )
-                elif kind == 1:
-                    k = 3 * d % 50 + 10
-                    payloads.append(
-                        _warc_record(
-                            "response", f"http://example.com/{d}/0",
-                            (WARC_RESP_HDR + "R:" + "a" * k).encode(),
-                        )
-                        + _warc_record(
-                            "request", f"http://example.com/{d}/1",
-                            WARC_REQ_PAYLOAD.format(r=1).encode(),
-                        )
-                    )
-                elif kind == 2:
-                    member = gzip.compress(
-                        _warc_record(
-                            "response", f"http://example.com/{d}/0",
-                            (WARC_RESP_HDR + "R:" + "a" * 30).encode(),
-                        ),
-                        compresslevel=6, mtime=0,
-                    )
-                    payloads.append(member[: max(4, len(member) - 7)])
-                else:
-                    payloads.append(b"NOTAWARC" + bytes([d % 256]) * 16)
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+    def payload(d: int) -> bytes:
+        kind = d % 4
+        if kind == 0:
+            k = (3 * d + 7) % 50 + 10
+            recs = [
+                _warc_record(
+                    "warcinfo", f"file://crawl/{d}.warc",
+                    WARC_INFO_PAYLOAD.encode(),
+                ),
+                _warc_record(
+                    "response", f"http://example.com/{d}/1",
+                    (WARC_RESP_HDR + "R:" + "a" * k).encode(),
+                ),
+                _warc_record("metadata", f"http://example.com/{d}/2", b""),
+                _warc_record(
+                    "request", f"http://example.com/{d}/3",
+                    WARC_REQ_PAYLOAD.format(r=3).encode(),
+                ),
+            ]
+            return b"".join(
+                gzip.compress(r, compresslevel=6, mtime=0) for r in recs
+            )
+        elif kind == 1:
+            k = 3 * d % 50 + 10
+            return _warc_record(
+                "response", f"http://example.com/{d}/0",
+                (WARC_RESP_HDR + "R:" + "a" * k).encode(),
+            ) + _warc_record(
+                "request", f"http://example.com/{d}/1",
+                WARC_REQ_PAYLOAD.format(r=1).encode(),
+            )
+        elif kind == 2:
+            member = gzip.compress(
+                _warc_record(
+                    "response", f"http://example.com/{d}/0",
+                    (WARC_RESP_HDR + "R:" + "a" * 30).encode(),
+                ),
+                compresslevel=6, mtime=0,
+            )
+            return member[: max(4, len(member) - 7)]
+        else:
+            return b"NOTAWARC" + bytes([d % 256]) * 16
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 def parse_warc_poison_stats(media: DataFrame) -> DataFrame:
@@ -3270,6 +2795,8 @@ def parse_warc_poison_stats(media: DataFrame) -> DataFrame:
     of a stage kill — the strict=False contract extended to the crawl
     container tier. One output row per record on good docs."""
     import gzip
+
+    null_row = _null_row(WARC_POISON_SCHEMA)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -3296,20 +2823,7 @@ def parse_warc_poison_stats(media: DataFrame) -> DataFrame:
                             body = block
                         recs.append((wtype, clen, body))
                 except (ValueError, OSError, EOFError, KeyError):
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            **{
-                                k: None
-                                for k in (
-                                    "rec_index", "n_records", "warc_type",
-                                    "content_length", "body_chars", "body_sum",
-                                    "gzipped",
-                                )
-                            },
-                            "parsed": False,
-                        }
-                    )
+                    rows.append({"doc_id": doc_id, **null_row, "parsed": False})
                     continue
                 for ri, (wtype, clen, body) in enumerate(recs):
                     rows.append(
@@ -3358,36 +2872,24 @@ def synthesize_warc_html(df: DataFrame, id_col: str, text_col: str) -> DataFrame
     Crawl style."""
     import gzip
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id, text in zip(ids, pdf[text_col]):
-                d = int(doc_id)
-                uri = f"http://crawl.example/{d}"
-                page = (
-                    CRAWL_HTML_HEAD + str(d) + CRAWL_HTML_MID
-                    + str(text)[:CRAWL_TEXT_CHARS] + CRAWL_HTML_TAIL
-                )
-                req = _warc_record(
-                    "request", uri, WARC_REQ_PAYLOAD.format(r=0).encode()
-                )
-                resp = _warc_record(
-                    "response", uri,
-                    WARC_RESP_HDR.replace("text/plain", "text/html").encode()
-                    + page.encode(),
-                )
-                payloads.append(
-                    gzip.compress(req, compresslevel=6, mtime=0)
-                    + gzip.compress(resp, compresslevel=6, mtime=0)
-                )
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+    def payload(d: int, text) -> bytes:
+        uri = f"http://crawl.example/{d}"
+        page = (
+            CRAWL_HTML_HEAD + str(d) + CRAWL_HTML_MID
+            + str(text)[:CRAWL_TEXT_CHARS] + CRAWL_HTML_TAIL
+        )
+        req = _warc_record("request", uri, WARC_REQ_PAYLOAD.format(r=0).encode())
+        resp = _warc_record(
+            "response", uri,
+            WARC_RESP_HDR.replace("text/plain", "text/html").encode()
+            + page.encode(),
+        )
+        return (
+            gzip.compress(req, compresslevel=6, mtime=0)
+            + gzip.compress(resp, compresslevel=6, mtime=0)
+        )
 
-    return df.select(
-        F.col(id_col).cast("long").alias(id_col), F.col(text_col)
-    ).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth_map(df, id_col, payload, text_col)
 
 
 def extract_warc_pages(warc: DataFrame) -> DataFrame:
@@ -3437,39 +2939,29 @@ def synthesize_bmp(df: DataFrame, id_col: str) -> DataFrame:
     indexed over a ``d%5+2``-entry color table for odd docs (index
     ``(x + 2y + d) mod nc``, table entry ``(7j, 13j, 29j) mod 256``)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
-                w, h = d % 9 + 2, d % 6 + 2
-                if d % 2 == 0:
-                    rgb = bytes(
-                        (3 * x + 5 * y + 7 * d + 11 * c) % 256
-                        for y in range(h)
-                        for x in range(w)
-                        for c in range(3)
-                    )
-                    payloads.append(bmp_bytes(w, h, rgb))
-                else:
-                    nc = d % 5 + 2
-                    pal = bytes(
-                        v
-                        for j in range(nc)
-                        for v in ((7 * j) % 256, (13 * j) % 256, (29 * j) % 256)
-                    )
-                    idx = bytes(
-                        (x + 2 * y + d) % nc for y in range(h) for x in range(w)
-                    )
-                    payloads.append(bmp_bytes(w, h, idx, palette=pal))
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+    def payload(d: int) -> bytes:
+        w, h = d % 9 + 2, d % 6 + 2
+        if d % 2 == 0:
+            rgb = bytes(
+                (3 * x + 5 * y + 7 * d + 11 * c) % 256
+                for y in range(h)
+                for x in range(w)
+                for c in range(3)
+            )
+            return bmp_bytes(w, h, rgb)
+        else:
+            nc = d % 5 + 2
+            pal = bytes(
+                v
+                for j in range(nc)
+                for v in ((7 * j) % 256, (13 * j) % 256, (29 * j) % 256)
+            )
+            idx = bytes(
+                (x + 2 * y + d) % nc for y in range(h) for x in range(w)
+            )
+            return bmp_bytes(w, h, idx, palette=pal)
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 def decode_bmp_stats(media: DataFrame, strict: bool = True) -> DataFrame:
@@ -3479,51 +2971,23 @@ def decode_bmp_stats(media: DataFrame, strict: bool = True) -> DataFrame:
     bottom-up row order lands on r_sum/b_sum or first/last pixels.
     ``strict=False`` = poison-safe NULL-stats rows."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    d = decode_real(bytes(payload))
-                    if d.get("media_type") != "image/bmp":
-                        raise ValueError("expected a BMP")
-                except ValueError:
-                    if strict:
-                        raise
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            **{
-                                k: None
-                                for k in (
-                                    "width", "height", "bpp", "palette_size",
-                                    "r_sum", "g_sum", "b_sum",
-                                    "first_px", "last_px",
-                                )
-                            },
-                        }
-                    )
-                    continue
-                r = d["raster"]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": d["width"],
-                        "height": d["height"],
-                        "bpp": d["bpp"],
-                        "palette_size": d["palette_size"],
-                        "r_sum": sum(r[0::3]),
-                        "g_sum": sum(r[1::3]),
-                        "b_sum": sum(r[2::3]),
-                        "first_px": r[0],
-                        "last_px": r[-1],
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def stats(d: dict) -> Iterator[dict]:
+        if d.get("media_type") != "image/bmp":
+            raise ValueError("expected a BMP")
+        r = d["raster"]
+        yield {
+            "width": d["width"],
+            "height": d["height"],
+            "bpp": d["bpp"],
+            "palette_size": d["palette_size"],
+            "r_sum": sum(r[0::3]),
+            "g_sum": sum(r[1::3]),
+            "b_sum": sum(r[2::3]),
+            "first_px": r[0],
+            "last_px": r[-1],
+        }
 
-    return media.mapInPandas(run, schema=BMP_STATS_SCHEMA)
+    return _decode_map(media, BMP_STATS_SCHEMA, stats, strict)
 
 
 G711_STATS_SCHEMA = (
@@ -3538,24 +3002,12 @@ def synthesize_g711(df: DataFrame, id_col: str) -> DataFrame:
     docs, A-law (fmt 6) for odd — so every code value, both laws, and
     both sign conventions appear across the corpus."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
-                n = d % 300 + 50
-                codes = bytes((13 * i + 7 * d) % 256 for i in range(n))
-                payloads.append(
-                    wav_g711_bytes(1, 8000, codes, "ulaw" if d % 2 == 0 else "alaw")
-                )
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+    def payload(d: int) -> bytes:
+        n = d % 300 + 50
+        codes = bytes((13 * i + 7 * d) % 256 for i in range(n))
+        return wav_g711_bytes(1, 8000, codes, "ulaw" if d % 2 == 0 else "alaw")
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 def decode_g711_stats(media: DataFrame, strict: bool = True) -> DataFrame:
@@ -3563,51 +3015,23 @@ def decode_g711_stats(media: DataFrame, strict: bool = True) -> DataFrame:
     from the EXPANDED 16-bit linear samples, so a wrong bias (0x84),
     toggle (0x55), segment shift or sign convention shifts
     sum_linear/sum_abs/peak immediately. ``strict=False`` =
-    poison-safe NULL-stats rows (see :func:`decode_png_stats`)."""
+    poison-safe NULL-stats rows (see :func:`_decode_map`)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    d = decode_real(bytes(payload))
-                    if d.get("encoding") not in ("alaw", "ulaw"):
-                        raise ValueError("expected a G.711 WAV")
-                except ValueError:
-                    if strict:
-                        raise
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            **{
-                                k: None
-                                for k in (
-                                    "encoding", "n_samples", "sum_linear",
-                                    "sum_abs", "peak", "first_sample",
-                                    "last_sample",
-                                )
-                            },
-                        }
-                    )
-                    continue
-                s = d["samples"]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "encoding": d["encoding"],
-                        "n_samples": len(s),
-                        "sum_linear": sum(s),
-                        "sum_abs": sum(abs(v) for v in s),
-                        "peak": max(abs(v) for v in s),
-                        "first_sample": s[0],
-                        "last_sample": s[-1],
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def stats(d: dict) -> Iterator[dict]:
+        if d.get("encoding") not in ("alaw", "ulaw"):
+            raise ValueError("expected a G.711 WAV")
+        s = d["samples"]
+        yield {
+            "encoding": d["encoding"],
+            "n_samples": len(s),
+            "sum_linear": sum(s),
+            "sum_abs": sum(abs(v) for v in s),
+            "peak": max(abs(v) for v in s),
+            "first_sample": s[0],
+            "last_sample": s[-1],
+        }
 
-    return media.mapInPandas(run, schema=G711_STATS_SCHEMA)
+    return _decode_map(media, G711_STATS_SCHEMA, stats, strict)
 
 
 ADPCM_STATS_SCHEMA = (
@@ -3625,28 +3049,18 @@ def synthesize_adpcm(df: DataFrame, id_col: str) -> DataFrame:
     re-seed path all appear across the corpus; nibbles are the
     closed-form ``(5i + 3d + 7b) mod 16`` the oracle can replay."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
-                n_nib = d % 90 + 30
-                blocks = []
-                for blk in range(1 + d % 2):
-                    blocks.append((
-                        (37 * d + 101 * blk) % 4001 - 2000,
-                        (d + 11 * blk) % 89,
-                        [(5 * i + 3 * d + 7 * blk) % 16 for i in range(n_nib)],
-                    ))
-                payloads.append(wav_adpcm_bytes(8000, blocks, n_nib + 1))
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+    def payload(d: int) -> bytes:
+        n_nib = d % 90 + 30
+        blocks = []
+        for blk in range(1 + d % 2):
+            blocks.append((
+                (37 * d + 101 * blk) % 4001 - 2000,
+                (d + 11 * blk) % 89,
+                [(5 * i + 3 * d + 7 * blk) % 16 for i in range(n_nib)],
+            ))
+        return wav_adpcm_bytes(8000, blocks, n_nib + 1)
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 def synthesize_msadpcm(df: DataFrame, id_col: str) -> DataFrame:
@@ -3662,30 +3076,20 @@ def synthesize_msadpcm(df: DataFrame, id_col: str) -> DataFrame:
     nibble walk makes the adaptive delta grow past int64 mid-stream,
     which is why the oracle carries it as HUGEINT."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
-                n_nib = 2 * (d % 10 + 15)
-                blocks = []
-                for blk in range(1 + d % 2):
-                    blocks.append((
-                        (d + blk) % 7,
-                        16 + (13 * d + 29 * blk) % 1500,
-                        (37 * d + 101 * blk) % 4001 - 2000,
-                        (53 * d + 7 * blk) % 4001 - 2000,
-                        [(5 * i + 3 * d + 7 * blk) % 16 for i in range(n_nib)],
-                    ))
-                payloads.append(wav_msadpcm_bytes(8000, blocks, n_nib + 2))
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+    def payload(d: int) -> bytes:
+        n_nib = 2 * (d % 10 + 15)
+        blocks = []
+        for blk in range(1 + d % 2):
+            blocks.append((
+                (d + blk) % 7,
+                16 + (13 * d + 29 * blk) % 1500,
+                (37 * d + 101 * blk) % 4001 - 2000,
+                (53 * d + 7 * blk) % 4001 - 2000,
+                [(5 * i + 3 * d + 7 * blk) % 16 for i in range(n_nib)],
+            ))
+        return wav_msadpcm_bytes(8000, blocks, n_nib + 2)
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 AHASH_SCHEMA = (
@@ -3763,37 +3167,18 @@ def image_ahash(media: DataFrame, strict: bool = True) -> DataFrame:
     the text-dedup tiers. ``strict=False`` = poison-safe NULL-hash
     rows."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    d = decode_real(bytes(payload))
-                    if "raster" not in d:
-                        raise ValueError(
-                            f"not a hashable raster: {d.get('media_type')}"
-                        )
-                    if d.get("channels", 1) not in (None, 1):
-                        raise ValueError("ahash expects a grayscale raster")
-                    h = ahash_bits(d["raster"], d["width"], d["height"])
-                    dh = dhash_bits(d["raster"], d["width"], d["height"])
-                except ValueError:
-                    if strict:
-                        raise
-                    rows.append(
-                        {"doc_id": doc_id, "ahash": None, "dhash": None,
-                         "width": None, "height": None}
-                    )
-                    continue
-                rows.append(
-                    {"doc_id": doc_id, "ahash": h, "dhash": dh,
-                     "width": d["width"], "height": d["height"]}
-                )
-            yield pd.DataFrame(rows)
+    def stats(d: dict) -> Iterator[dict]:
+        if _lacks(d, "width", "height", "raster"):
+            raise ValueError(
+                f"not a hashable raster: {d.get('media_type')}"
+            )
+        if d.get("channels", 1) not in (None, 1):
+            raise ValueError("ahash expects a grayscale raster")
+        h = ahash_bits(d["raster"], d["width"], d["height"])
+        dh = dhash_bits(d["raster"], d["width"], d["height"])
+        yield {"ahash": h, "dhash": dh, "width": d["width"], "height": d["height"]}
 
-    return media.mapInPandas(run, schema=AHASH_SCHEMA)
+    return _decode_map(media, AHASH_SCHEMA, stats, strict)
 
 
 def synthesize_ahash_pngs(df: DataFrame, id_col: str) -> DataFrame:
@@ -3820,33 +3205,23 @@ def synthesize_ahash_pngs(df: DataFrame, id_col: str) -> DataFrame:
     (g, v, x, y), so the oracle recomputes the hash arithmetically
     while the engine must decode the real PNG."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
-                g, v = d // 11, d % 11 - 2
-                w, h = 8 * (g % 3 + 1), 8 * (g % 2 + 1)
-                bw, bh = w // 8, h // 8
-                raster = bytes(
-                    (
-                        3 * x + 5 * y + 7 * g
-                        + x * x * (g % 11) + y * y * (g % 13)
-                        + (100 if v == 2 and (x // bw + y // bh) % 2 == 0 else 0)
-                        + (100 if v == 3 and x < bw and y < bh else 0)
-                    ) % 256
-                    for y in range(h)
-                    for x in range(w)
-                )
-                payloads.append(png_pixel_bytes(w, h, raster, 0))
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+    def payload(d: int) -> bytes:
+        g, v = d // 11, d % 11 - 2
+        w, h = 8 * (g % 3 + 1), 8 * (g % 2 + 1)
+        bw, bh = w // 8, h // 8
+        raster = bytes(
+            (
+                3 * x + 5 * y + 7 * g
+                + x * x * (g % 11) + y * y * (g % 13)
+                + (100 if v == 2 and (x // bw + y // bh) % 2 == 0 else 0)
+                + (100 if v == 3 and x < bw and y < bh else 0)
+            ) % 256
+            for y in range(h)
+            for x in range(w)
+        )
+        return png_pixel_bytes(w, h, raster, 0)
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 AVI_STATS_SCHEMA = (
@@ -3875,31 +3250,19 @@ def synthesize_avi_mjpeg(df: DataFrame, id_col: str) -> DataFrame:
     from .avicodec import avi_mjpeg_bytes
     from .jpegcodec import jpeg_pixel_bytes
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
-                w, h = 8 * (d % 3 + 1), 8 * (d % 2 + 1)
-                frames = []
-                for f in range(d % 4 + 2):
-                    raster = bytes(
-                        (11 * (x // 8) + 23 * (y // 8) + 7 * d + 41 * f) % 256
-                        for y in range(h)
-                        for x in range(w)
-                    )
-                    frames.append(jpeg_pixel_bytes(w, h, raster))
-                payloads.append(
-                    avi_mjpeg_bytes(w, h, frames, fps=5 + d % 10)
-                )
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+    def payload(d: int) -> bytes:
+        w, h = 8 * (d % 3 + 1), 8 * (d % 2 + 1)
+        frames = []
+        for f in range(d % 4 + 2):
+            raster = bytes(
+                (11 * (x // 8) + 23 * (y // 8) + 7 * d + 41 * f) % 256
+                for y in range(h)
+                for x in range(w)
+            )
+            frames.append(jpeg_pixel_bytes(w, h, raster))
+        return avi_mjpeg_bytes(w, h, frames, fps=5 + d % 10)
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 def synthesize_avi_av(df: DataFrame, id_col: str) -> DataFrame:
@@ -3916,41 +3279,29 @@ def synthesize_avi_av(df: DataFrame, id_col: str) -> DataFrame:
     decoder to concatenate before sample-decoding."""
     from .avicodec import avi_av_bytes
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
-                w, h = d % 5 + 3, d % 4 + 2
-                frames = [
-                    bytes(
-                        (3 * x + 5 * y + 11 * c + 7 * d + 41 * f) % 256
-                        for y in range(h)
-                        for x in range(w)
-                        for c in range(3)
-                    )
-                    for f in range(d % 3 + 2)
-                ]
-                n = 40 + d % 50
-                audio = struct.pack(
-                    f"<{n}h", *((37 * i + 13 * d) % 4001 - 2000 for i in range(n))
-                )
-                payloads.append(
-                    avi_av_bytes(
-                        w, h, frames, codec="DIB",
-                        audio=audio, audio_rate=8000 + 100 * (d % 5),
-                        fps=5 + d % 10, bottom_up=(d % 2 == 0),
-                        audio_splits=[7, len(audio) - 7],
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+    def payload(d: int) -> bytes:
+        w, h = d % 5 + 3, d % 4 + 2
+        frames = [
+            bytes(
+                (3 * x + 5 * y + 11 * c + 7 * d + 41 * f) % 256
+                for y in range(h)
+                for x in range(w)
+                for c in range(3)
+            )
+            for f in range(d % 3 + 2)
+        ]
+        n = 40 + d % 50
+        audio = struct.pack(
+            f"<{n}h", *((37 * i + 13 * d) % 4001 - 2000 for i in range(n))
+        )
+        return avi_av_bytes(
+            w, h, frames, codec="DIB",
+            audio=audio, audio_rate=8000 + 100 * (d % 5),
+            fps=5 + d % 10, bottom_up=(d % 2 == 0),
+            audio_splits=[7, len(audio) - 7],
+        )
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 def decode_avi_stats(media: DataFrame, strict: bool = True) -> DataFrame:
@@ -3973,77 +3324,43 @@ def decode_avi_stats(media: DataFrame, strict: bool = True) -> DataFrame:
     ARE (consecutive frames of one video sit in one Arrow batch, so
     the 100 TB shape needs no self-join of rasters and no pixel ever
     crosses an Exchange). ``strict=False`` = poison-safe NULL-stats
-    rows (see :func:`decode_png_stats`)."""
+    rows (see :func:`_decode_map`)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    d = decode_real(bytes(payload))
-                    if d.get("media_type") != "video/avi":
-                        raise ValueError("expected an AVI stream")
-                except ValueError:
-                    if strict:
-                        raise
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            **{
-                                k: None
-                                for k in (
-                                    "frame_idx", "codec", "width",
-                                    "height", "n_frames", "px_sum",
-                                    "first_px", "last_px",
-                                    "audio_n_samples", "audio_sum",
-                                    "diff_prev", "is_scene_cut",
-                                )
-                            },
-                        }
-                    )
-                    continue
-                audio = d.get("audio")
-                audio_n = audio["n_samples"] if audio else None
-                audio_sum = sum(audio["samples"]) if audio else None
-                prev = None
-                for k, fr in enumerate(d["frames"]):
-                    raster = fr["raster"]
-                    diff_prev = (
-                        None
-                        if prev is None
-                        else sum(abs(a - b) for a, b in zip(raster, prev))
-                    )
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "frame_idx": k,
-                            "codec": d["codec"],
-                            "width": d["width"],
-                            "height": d["height"],
-                            "n_frames": d["n_frames"],
-                            "px_sum": sum(raster),
-                            "first_px": raster[0],
-                            "last_px": raster[-1],
-                            "audio_n_samples": audio_n,
-                            "audio_sum": audio_sum,
-                            "diff_prev": diff_prev,
-                            "is_scene_cut": (
-                                None
-                                if diff_prev is None
-                                else bool(
-                                    diff_prev
-                                    > SCENE_CUT_MEAN_DIFF * len(raster)
-                                )
-                            ),
-                        }
-                    )
-                    prev = raster
-            if rows:  # an all-poison batch must not yield a 0-column frame
-                yield pd.DataFrame(rows)
+    def stats(d: dict) -> Iterator[dict]:
+        if d.get("media_type") != "video/avi":
+            raise ValueError("expected an AVI stream")
+        audio = d.get("audio")
+        audio_n = audio["n_samples"] if audio else None
+        audio_sum = sum(audio["samples"]) if audio else None
+        prev = None
+        for k, fr in enumerate(d["frames"]):
+            raster = fr["raster"]
+            diff_prev = (
+                None
+                if prev is None
+                else sum(abs(a - b) for a, b in zip(raster, prev))
+            )
+            yield {
+                "frame_idx": k,
+                "codec": d["codec"],
+                "width": d["width"],
+                "height": d["height"],
+                "n_frames": d["n_frames"],
+                "px_sum": sum(raster),
+                "first_px": raster[0],
+                "last_px": raster[-1],
+                "audio_n_samples": audio_n,
+                "audio_sum": audio_sum,
+                "diff_prev": diff_prev,
+                "is_scene_cut": (
+                    None
+                    if diff_prev is None
+                    else bool(diff_prev > SCENE_CUT_MEAN_DIFF * len(raster))
+                ),
+            }
+            prev = raster
 
-    return media.mapInPandas(run, schema=AVI_STATS_SCHEMA)
+    return _decode_map(media, AVI_STATS_SCHEMA, stats, strict)
 
 
 def decode_adpcm_stats(media: DataFrame, strict: bool = True) -> DataFrame:
@@ -4055,51 +3372,23 @@ def decode_adpcm_stats(media: DataFrame, strict: bool = True) -> DataFrame:
     nibble order (IMA low-first, MS HIGH-first!) or a block header
     not re-seeding the state lands on sum_linear/peak immediately.
     ``strict=False`` = poison-safe NULL-stats rows (see
-    :func:`decode_png_stats`)."""
+    :func:`_decode_map`)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    d = decode_real(bytes(payload))
-                    if d.get("encoding") not in ("ima_adpcm", "ms_adpcm"):
-                        raise ValueError("expected an IMA or MS ADPCM WAV")
-                except ValueError:
-                    if strict:
-                        raise
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            **{
-                                k: None
-                                for k in (
-                                    "encoding", "n_samples", "sum_linear",
-                                    "sum_abs", "peak", "first_sample",
-                                    "last_sample",
-                                )
-                            },
-                        }
-                    )
-                    continue
-                s = d["samples"]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "encoding": d["encoding"],
-                        "n_samples": len(s),
-                        "sum_linear": sum(s),
-                        "sum_abs": sum(abs(v) for v in s),
-                        "peak": max(abs(v) for v in s),
-                        "first_sample": s[0],
-                        "last_sample": s[-1],
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def stats(d: dict) -> Iterator[dict]:
+        if d.get("encoding") not in ("ima_adpcm", "ms_adpcm"):
+            raise ValueError("expected an IMA or MS ADPCM WAV")
+        s = d["samples"]
+        yield {
+            "encoding": d["encoding"],
+            "n_samples": len(s),
+            "sum_linear": sum(s),
+            "sum_abs": sum(abs(v) for v in s),
+            "peak": max(abs(v) for v in s),
+            "first_sample": s[0],
+            "last_sample": s[-1],
+        }
 
-    return media.mapInPandas(run, schema=ADPCM_STATS_SCHEMA)
+    return _decode_map(media, ADPCM_STATS_SCHEMA, stats, strict)
 
 
 FLAC_STATS_SCHEMA = (
@@ -4122,45 +3411,33 @@ def synthesize_flac(df: DataFrame, id_col: str) -> DataFrame:
     STREAMINFO MD5 are computed by the real encoder."""
     from .flaccodec import flac_bytes
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
-                m = 2 if d % 4 == 1 else 1
-                f0 = [(17 * d) % 4001 - 2000] * (d % 40 + 24)
-                f1 = [
-                    m * ((13 * i * i + 7 * i + 31 * d) % 3900 - 1950)
-                    for i in range(2 * (d % 25 + 15))
-                ]
-                nb2 = d % 30 + 20
-                if d % 3 == 0:
-                    f2 = [(17 * i + 29 * d) % 3001 - 1500 for i in range(nb2)]
-                    spec2 = ("verbatim",)
-                else:
-                    f2 = [
-                        (11 * i * i + 5 * i + 23 * d) % 3800 - 1900
-                        for i in range(nb2)
-                    ]
-                    spec2 = ("lpc", [3, -1], 1, 4, 0)
-                payloads.append(
-                    flac_bytes(
-                        44100, 16,
-                        [
-                            (f0, ("constant",)),
-                            (f1, ("fixed", d % 5, d % 2)),
-                            (f2, spec2),
-                        ],
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+    def payload(d: int) -> bytes:
+        m = 2 if d % 4 == 1 else 1
+        f0 = [(17 * d) % 4001 - 2000] * (d % 40 + 24)
+        f1 = [
+            m * ((13 * i * i + 7 * i + 31 * d) % 3900 - 1950)
+            for i in range(2 * (d % 25 + 15))
+        ]
+        nb2 = d % 30 + 20
+        if d % 3 == 0:
+            f2 = [(17 * i + 29 * d) % 3001 - 1500 for i in range(nb2)]
+            spec2 = ("verbatim",)
+        else:
+            f2 = [
+                (11 * i * i + 5 * i + 23 * d) % 3800 - 1900
+                for i in range(nb2)
+            ]
+            spec2 = ("lpc", [3, -1], 1, 4, 0)
+        return flac_bytes(
+            44100, 16,
+            [
+                (f0, ("constant",)),
+                (f1, ("fixed", d % 5, d % 2)),
+                (f2, spec2),
+            ],
+        )
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 def decode_flac_stats(media: DataFrame, strict: bool = True) -> DataFrame:
@@ -4172,50 +3449,22 @@ def decode_flac_stats(media: DataFrame, strict: bool = True) -> DataFrame:
     paths (constant/fixed-N/verbatim/lpc-N) actually ran.
     ``strict=False`` = poison-safe NULL-stats rows."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    d = decode_real(bytes(payload))
-                    if d.get("encoding") != "flac":
-                        raise ValueError("expected a FLAC stream")
-                except ValueError:
-                    if strict:
-                        raise
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            **{
-                                k: None
-                                for k in (
-                                    "n_frames", "n_samples", "subframes",
-                                    "sum_linear", "sum_abs", "peak",
-                                    "first_sample", "last_sample",
-                                )
-                            },
-                        }
-                    )
-                    continue
-                s = d["samples"]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "n_frames": d["n_frames"],
-                        "n_samples": len(s),
-                        "subframes": d["subframes"],
-                        "sum_linear": sum(s),
-                        "sum_abs": sum(abs(v) for v in s),
-                        "peak": max(abs(v) for v in s),
-                        "first_sample": s[0],
-                        "last_sample": s[-1],
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def stats(d: dict) -> Iterator[dict]:
+        if d.get("encoding") != "flac":
+            raise ValueError("expected a FLAC stream")
+        s = d["samples"]
+        yield {
+            "n_frames": d["n_frames"],
+            "n_samples": len(s),
+            "subframes": d["subframes"],
+            "sum_linear": sum(s),
+            "sum_abs": sum(abs(v) for v in s),
+            "peak": max(abs(v) for v in s),
+            "first_sample": s[0],
+            "last_sample": s[-1],
+        }
 
-    return media.mapInPandas(run, schema=FLAC_STATS_SCHEMA)
+    return _decode_map(media, FLAC_STATS_SCHEMA, stats, strict)
 
 
 FLAC_STEREO_STATS_SCHEMA = (
@@ -4241,40 +3490,28 @@ def synthesize_flac_stereo(df: DataFrame, id_col: str) -> DataFrame:
     arithmetic."""
     from .flaccodec import flac_bytes
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
-                n0, n1 = d % 30 + 20, d % 20 + 16
-                left = [(13 * j + 29 * d) % 3001 - 1500 for j in range(n0 + n1)]
-                right = [(7 * j + 17 * d) % 2801 - 1400 for j in range(n0 + n1)]
-                frames = [
-                    (
-                        [left[:n0], right[:n0]],
-                        [("fixed", d % 5, 0), ("fixed", (d + 2) % 5, 0)],
-                    ),
-                    (
-                        [left[n0:], right[n0:]],
-                        [("verbatim",), ("fixed", 1, 0)],
-                    ),
-                ]
-                payloads.append(
-                    flac_bytes(
-                        44100, 16, frames, channels=2,
-                        assignment=["independent", "left_side", "right_side",
-                                    "mid_side"][d % 4],
-                        variable_blocking=d % 2 == 0,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+    def payload(d: int) -> bytes:
+        n0, n1 = d % 30 + 20, d % 20 + 16
+        left = [(13 * j + 29 * d) % 3001 - 1500 for j in range(n0 + n1)]
+        right = [(7 * j + 17 * d) % 2801 - 1400 for j in range(n0 + n1)]
+        frames = [
+            (
+                [left[:n0], right[:n0]],
+                [("fixed", d % 5, 0), ("fixed", (d + 2) % 5, 0)],
+            ),
+            (
+                [left[n0:], right[n0:]],
+                [("verbatim",), ("fixed", 1, 0)],
+            ),
+        ]
+        return flac_bytes(
+            44100, 16, frames, channels=2,
+            assignment=["independent", "left_side", "right_side",
+                        "mid_side"][d % 4],
+            variable_blocking=d % 2 == 0,
+        )
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 def decode_flac_stereo_stats(media: DataFrame, strict: bool = True) -> DataFrame:
@@ -4286,56 +3523,27 @@ def decode_flac_stereo_stats(media: DataFrame, strict: bool = True) -> DataFrame
     intended decorrelated paths actually ran. ``strict=False`` =
     poison-safe NULL-stats rows."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    d = decode_real(bytes(payload))
-                    if d.get("encoding") != "flac" or d.get("channels") != 2:
-                        raise ValueError("expected a stereo FLAC stream")
-                except ValueError:
-                    if strict:
-                        raise
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            **{
-                                k: None
-                                for k in (
-                                    "channels", "n_frames", "n_samples",
-                                    "assignments", "subframes", "sum_left",
-                                    "sum_right", "peak", "first_left",
-                                    "first_right", "last_left", "last_right",
-                                )
-                            },
-                        }
-                    )
-                    continue
-                s = d["samples"]
-                left, right = s[0::2], s[1::2]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "channels": d["channels"],
-                        "n_frames": d["n_frames"],
-                        "n_samples": d["n_samples"],
-                        "assignments": d["assignments"],
-                        "subframes": d["subframes"],
-                        "sum_left": sum(left),
-                        "sum_right": sum(right),
-                        "peak": max(abs(v) for v in s),
-                        "first_left": left[0],
-                        "first_right": right[0],
-                        "last_left": left[-1],
-                        "last_right": right[-1],
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def stats(d: dict) -> Iterator[dict]:
+        if d.get("encoding") != "flac" or d.get("channels") != 2:
+            raise ValueError("expected a stereo FLAC stream")
+        s = d["samples"]
+        left, right = s[0::2], s[1::2]
+        yield {
+            "channels": d["channels"],
+            "n_frames": d["n_frames"],
+            "n_samples": d["n_samples"],
+            "assignments": d["assignments"],
+            "subframes": d["subframes"],
+            "sum_left": sum(left),
+            "sum_right": sum(right),
+            "peak": max(abs(v) for v in s),
+            "first_left": left[0],
+            "first_right": right[0],
+            "last_left": left[-1],
+            "last_right": right[-1],
+        }
 
-    return media.mapInPandas(run, schema=FLAC_STEREO_STATS_SCHEMA)
+    return _decode_map(media, FLAC_STEREO_STATS_SCHEMA, stats, strict)
 
 
 AUDIO_LINEAR_STATS_SCHEMA = (
@@ -4354,32 +3562,22 @@ def decode_audio_linear_stats(media: DataFrame) -> DataFrame:
     clean by construction (poison safety is media_poison_battery's
     job)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = decode_real(bytes(payload))
-                if "samples" not in d:
-                    raise ValueError(
-                        f"not an audio payload ({d.get('media_type')})"
-                    )
-                s = d["samples"]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "media_type": d["media_type"],
-                        "encoding": d.get("encoding"),
-                        "n_samples": len(s),
-                        "sum_linear": sum(s),
-                        "sum_abs": sum(abs(v) for v in s),
-                        "peak": max(abs(v) for v in s),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def stats(d: dict) -> Iterator[dict]:
+        if "samples" not in d:
+            raise ValueError(
+                f"not an audio payload ({d.get('media_type')})"
+            )
+        s = d["samples"]
+        yield {
+            "media_type": d["media_type"],
+            "encoding": d.get("encoding"),
+            "n_samples": len(s),
+            "sum_linear": sum(s),
+            "sum_abs": sum(abs(v) for v in s),
+            "peak": max(abs(v) for v in s),
+        }
 
-    return media.mapInPandas(run, schema=AUDIO_LINEAR_STATS_SCHEMA)
+    return _decode_map(media, AUDIO_LINEAR_STATS_SCHEMA, stats, strict=True)
 
 
 GIF_STATS_SCHEMA = (
@@ -4400,35 +3598,23 @@ def synthesize_gif(df: DataFrame, id_col: str) -> DataFrame:
     lookup and deinterlacing."""
     from .gifcodec import gif_bytes
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
-                nf, w, h = d % 3 + 1, d % 11 + 4, d % 7 + 4
-                nc = 2 << (d % 4)
-                pal = bytes(
-                    v
-                    for j in range(nc)
-                    for v in ((7 * j) % 256, (13 * j) % 256, (29 * j) % 256)
-                )
-                idx = bytes(
-                    (x + 2 * y + 3 * f + d) % nc
-                    for f in range(nf)
-                    for y in range(h)
-                    for x in range(w)
-                )
-                payloads.append(
-                    gif_bytes(w, h, idx, pal, interlace=d % 2 == 0, n_frames=nf)
-                )
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+    def payload(d: int) -> bytes:
+        nf, w, h = d % 3 + 1, d % 11 + 4, d % 7 + 4
+        nc = 2 << (d % 4)
+        pal = bytes(
+            v
+            for j in range(nc)
+            for v in ((7 * j) % 256, (13 * j) % 256, (29 * j) % 256)
+        )
+        idx = bytes(
+            (x + 2 * y + 3 * f + d) % nc
+            for f in range(nf)
+            for y in range(h)
+            for x in range(w)
+        )
+        return gif_bytes(w, h, idx, pal, interlace=d % 2 == 0, n_frames=nf)
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 def decode_gif_stats(media: DataFrame, strict: bool = True) -> DataFrame:
@@ -4437,56 +3623,26 @@ def decode_gif_stats(media: DataFrame, strict: bool = True) -> DataFrame:
     from the post-palette RGB raster, so a wrong LZW dictionary step,
     code-width growth, sub-block reassembly, or deinterlace row order
     lands on r_sum/g_sum/b_sum. ``strict=False`` = poison-safe
-    NULL-stats rows (see :func:`decode_png_stats`)."""
+    NULL-stats rows (see :func:`_decode_map`)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    d = decode_real(bytes(payload))
-                    if d.get("media_type") != "image/gif":
-                        raise ValueError("expected a GIF")
-                except ValueError:
-                    if strict:
-                        raise
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            **{
-                                k: None
-                                for k in (
-                                    "frame_index", "n_frames", "width", "height",
-                                    "palette_size", "r_sum", "g_sum", "b_sum",
-                                    "first_px", "last_px",
-                                )
-                            },
-                        }
-                    )
-                    continue
-                for fi, (frame, (fw, fh)) in enumerate(
-                    zip(d["frames"], d["frame_dims"])
-                ):
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "frame_index": fi,
-                            "n_frames": d["n_frames"],
-                            "width": fw,
-                            "height": fh,
-                            "palette_size": d["palette_size"],
-                            "r_sum": sum(frame[0::3]),
-                            "g_sum": sum(frame[1::3]),
-                            "b_sum": sum(frame[2::3]),
-                            "first_px": frame[0],
-                            "last_px": frame[-1],
-                        }
-                    )
-            yield pd.DataFrame(rows)
+    def stats(d: dict) -> Iterator[dict]:
+        if d.get("media_type") != "image/gif":
+            raise ValueError("expected a GIF")
+        for fi, (frame, (fw, fh)) in enumerate(zip(d["frames"], d["frame_dims"])):
+            yield {
+                "frame_index": fi,
+                "n_frames": d["n_frames"],
+                "width": fw,
+                "height": fh,
+                "palette_size": d["palette_size"],
+                "r_sum": sum(frame[0::3]),
+                "g_sum": sum(frame[1::3]),
+                "b_sum": sum(frame[2::3]),
+                "first_px": frame[0],
+                "last_px": frame[-1],
+            }
 
-    return media.mapInPandas(run, schema=GIF_STATS_SCHEMA)
+    return _decode_map(media, GIF_STATS_SCHEMA, stats, strict)
 
 
 JPEG_LL_STATS_SCHEMA = (
@@ -4505,30 +3661,16 @@ def synthesize_jpeg_lossless(df: DataFrame, id_col: str) -> DataFrame:
     recomputes raw sample arithmetic — no DCT-exactness argument."""
     from .jpegcodec import jpeg_lossless_bytes
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
-                w, h = d % 13 + 4, d % 9 + 4
-                samples = [
-                    (513 * x + 1021 * y + 131 * d) % 65536
-                    for y in range(h)
-                    for x in range(w)
-                ]
-                payloads.append(
-                    jpeg_lossless_bytes(
-                        w, h, [samples], predictor=d % 7 + 1, precision=16
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+    def payload(d: int) -> bytes:
+        w, h = d % 13 + 4, d % 9 + 4
+        samples = [
+            (513 * x + 1021 * y + 131 * d) % 65536
+            for y in range(h)
+            for x in range(w)
+        ]
+        return jpeg_lossless_bytes(w, h, [samples], predictor=d % 7 + 1, precision=16)
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 def decode_jpeg_lossless_stats(media: DataFrame, strict: bool = True) -> DataFrame:
@@ -4538,52 +3680,26 @@ def decode_jpeg_lossless_stats(media: DataFrame, strict: bool = True) -> DataFra
     (first line → a, first column → b), or modulo-2^16 reconstruction
     bug lands on sample_sum exactly (lossless means EXACT; there is no
     tolerance to hide in). ``strict=False`` = poison-safe NULL-stats
-    rows (see :func:`decode_png_stats`)."""
+    rows (see :func:`_decode_map`)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    d = decode_real(bytes(payload))
-                    if not d.get("lossless") or "samples16" not in d:
-                        raise ValueError("expected a 16-bit lossless JPEG")
-                except ValueError:
-                    if strict:
-                        raise
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            **{
-                                k: None
-                                for k in (
-                                    "width", "height", "predictor", "n_samples",
-                                    "sample_sum", "first_sample", "last_sample",
-                                    "max_sample",
-                                )
-                            },
-                        }
-                    )
-                    continue
-                s = d["samples16"]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": d["width"],
-                        "height": d["height"],
-                        "predictor": d["predictor"],
-                        "n_samples": len(s),
-                        "sample_sum": sum(s),
-                        "first_sample": s[0],
-                        "last_sample": s[-1],
-                        "max_sample": max(s),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def stats(d: dict) -> Iterator[dict]:
+        if not d.get("lossless") or _lacks(
+            d, "width", "height", "predictor", "samples16"
+        ):
+            raise ValueError("expected a 16-bit lossless JPEG")
+        s = d["samples16"]
+        yield {
+            "width": d["width"],
+            "height": d["height"],
+            "predictor": d["predictor"],
+            "n_samples": len(s),
+            "sample_sum": sum(s),
+            "first_sample": s[0],
+            "last_sample": s[-1],
+            "max_sample": max(s),
+        }
 
-    return media.mapInPandas(run, schema=JPEG_LL_STATS_SCHEMA)
+    return _decode_map(media, JPEG_LL_STATS_SCHEMA, stats, strict)
 
 
 JPEG_420_SCHEMA = (
@@ -4604,36 +3720,24 @@ def synthesize_jpeg_subsampled(df: DataFrame, id_col: str) -> DataFrame:
     DC predictors) to reproduce them."""
     from .jpegcodec import jpeg_planes_bytes
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
-                w, h = 16 * (d % 3 + 1), 16 * (d % 2 + 1)
+    def payload(d: int) -> bytes:
+        w, h = 16 * (d % 3 + 1), 16 * (d % 2 + 1)
 
-                def tiles(cw: int, ch: int, c: int) -> bytes:
-                    return bytes(
-                        (11 * (x // 8) + 23 * (y // 8) + 7 * d + 31 * c) % 256
-                        for y in range(ch)
-                        for x in range(cw)
-                    )
+        def tiles(cw: int, ch: int, c: int) -> bytes:
+            return bytes(
+                (11 * (x // 8) + 23 * (y // 8) + 7 * d + 31 * c) % 256
+                for y in range(ch)
+                for x in range(cw)
+            )
 
-                payloads.append(
-                    jpeg_planes_bytes(
-                        w, h,
-                        [tiles(w, h, 0), tiles(w // 2, h // 2, 1),
-                         tiles(w // 2, h // 2, 2)],
-                        sampling=[(2, 2), (1, 1), (1, 1)],
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+        return jpeg_planes_bytes(
+            w, h,
+            [tiles(w, h, 0), tiles(w // 2, h // 2, 1),
+             tiles(w // 2, h // 2, 2)],
+            sampling=[(2, 2), (1, 1), (1, 1)],
+        )
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 def synthesize_jpeg_411(df: DataFrame, id_col: str) -> DataFrame:
@@ -4646,35 +3750,23 @@ def synthesize_jpeg_411(df: DataFrame, id_col: str) -> DataFrame:
     per-plane sums."""
     from .jpegcodec import jpeg_planes_bytes
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
-                w, h = 32 * (d % 2 + 1), 8 * (d % 3 + 1)
+    def payload(d: int) -> bytes:
+        w, h = 32 * (d % 2 + 1), 8 * (d % 3 + 1)
 
-                def tiles(cw: int, ch: int, c: int) -> bytes:
-                    return bytes(
-                        (11 * (x // 8) + 23 * (y // 8) + 7 * d + 31 * c) % 256
-                        for y in range(ch)
-                        for x in range(cw)
-                    )
+        def tiles(cw: int, ch: int, c: int) -> bytes:
+            return bytes(
+                (11 * (x // 8) + 23 * (y // 8) + 7 * d + 31 * c) % 256
+                for y in range(ch)
+                for x in range(cw)
+            )
 
-                payloads.append(
-                    jpeg_planes_bytes(
-                        w, h,
-                        [tiles(w, h, 0), tiles(w // 4, h, 1), tiles(w // 4, h, 2)],
-                        sampling=[(4, 1), (1, 1), (1, 1)],
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+        return jpeg_planes_bytes(
+            w, h,
+            [tiles(w, h, 0), tiles(w // 4, h, 1), tiles(w // 4, h, 2)],
+            sampling=[(4, 1), (1, 1), (1, 1)],
+        )
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 def decode_jpeg411_stats(media: DataFrame, strict: bool = True) -> DataFrame:
@@ -4685,52 +3777,24 @@ def decode_jpeg411_stats(media: DataFrame, strict: bool = True) -> DataFrame:
     4-block MCU mismatches cb_width/cb_height or the plane sums).
     ``strict=False`` = poison-safe NULL-stats rows."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    d = decode_real(bytes(payload))
-                    if d.get("sampling") != [(4, 1), (1, 1), (1, 1)]:
-                        raise ValueError("expected a 4:1:1 three-component JPEG")
-                except ValueError:
-                    if strict:
-                        raise
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            **{
-                                k: None
-                                for k in (
-                                    "width", "height", "cb_width", "cb_height",
-                                    "n_mcus", "y_sum", "cb_sum", "cr_sum",
-                                    "first_px", "last_px",
-                                )
-                            },
-                        }
-                    )
-                    continue
-                sums = [sum(p) for p in d["planes"]]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": d["width"],
-                        "height": d["height"],
-                        "cb_width": d["plane_dims"][1][0],
-                        "cb_height": d["plane_dims"][1][1],
-                        "n_mcus": (d["width"] // 32) * (d["height"] // 8),
-                        "y_sum": sums[0],
-                        "cb_sum": sums[1],
-                        "cr_sum": sums[2],
-                        "first_px": d["planes"][0][0],
-                        "last_px": d["planes"][2][-1],
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def stats(d: dict) -> Iterator[dict]:
+        if d.get("sampling") != [(4, 1), (1, 1), (1, 1)]:
+            raise ValueError("expected a 4:1:1 three-component JPEG")
+        sums = [sum(p) for p in d["planes"]]
+        yield {
+            "width": d["width"],
+            "height": d["height"],
+            "cb_width": d["plane_dims"][1][0],
+            "cb_height": d["plane_dims"][1][1],
+            "n_mcus": (d["width"] // 32) * (d["height"] // 8),
+            "y_sum": sums[0],
+            "cb_sum": sums[1],
+            "cr_sum": sums[2],
+            "first_px": d["planes"][0][0],
+            "last_px": d["planes"][2][-1],
+        }
 
-    return media.mapInPandas(run, schema=JPEG_420_SCHEMA)
+    return _decode_map(media, JPEG_420_SCHEMA, stats, strict)
 
 
 JPEG_311_SCHEMA = (
@@ -4749,36 +3813,26 @@ def synthesize_jpeg_311(df: DataFrame, id_col: str) -> DataFrame:
     ``(11tx + 23ty + 7d + 31c) mod 256`` on its OWN grid."""
     from .jpegcodec import jpeg_planes_bytes
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
+    def payload(d: int) -> bytes:
 
-                def tiles(cw: int, ch: int, c: int) -> bytes:
-                    return bytes(
-                        (11 * (x // 8) + 23 * (y // 8) + 7 * d + 31 * c) % 256
-                        for y in range(ch)
-                        for x in range(cw)
-                    )
+        def tiles(cw: int, ch: int, c: int) -> bytes:
+            return bytes(
+                (11 * (x // 8) + 23 * (y // 8) + 7 * d + 31 * c) % 256
+                for y in range(ch)
+                for x in range(cw)
+            )
 
-                if d % 2 == 0:
-                    w, h = 24 * (d % 3 + 1), 8 * ((d // 2) % 2 + 1)
-                    planes = [tiles(w, h, 0), tiles(w // 3, h, 1), tiles(w // 3, h, 2)]
-                    samp = [(3, 1), (1, 1), (1, 1)]
-                else:
-                    w, h = 8 * ((d // 2) % 2 + 1), 24 * (d % 3 + 1)
-                    planes = [tiles(w, h, 0), tiles(w, h // 3, 1), tiles(w, h // 3, 2)]
-                    samp = [(1, 3), (1, 1), (1, 1)]
-                payloads.append(jpeg_planes_bytes(w, h, planes, sampling=samp))
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+        if d % 2 == 0:
+            w, h = 24 * (d % 3 + 1), 8 * ((d // 2) % 2 + 1)
+            planes = [tiles(w, h, 0), tiles(w // 3, h, 1), tiles(w // 3, h, 2)]
+            samp = [(3, 1), (1, 1), (1, 1)]
+        else:
+            w, h = 8 * ((d // 2) % 2 + 1), 24 * (d % 3 + 1)
+            planes = [tiles(w, h, 0), tiles(w, h // 3, 1), tiles(w, h // 3, 2)]
+            samp = [(1, 3), (1, 1), (1, 1)]
+        return jpeg_planes_bytes(w, h, planes, sampling=samp)
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 def decode_jpeg311_stats(media: DataFrame, strict: bool = True) -> DataFrame:
@@ -4788,53 +3842,25 @@ def decode_jpeg311_stats(media: DataFrame, strict: bool = True) -> DataFrame:
     MCU and lands on the plane sums or chroma dims immediately).
     ``strict=False`` = poison-safe NULL-stats rows."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    d = decode_real(bytes(payload))
-                    samp = d.get("sampling")
-                    if samp not in ([(3, 1), (1, 1), (1, 1)], [(1, 3), (1, 1), (1, 1)]):
-                        raise ValueError("expected a factor-3 three-component JPEG")
-                except ValueError:
-                    if strict:
-                        raise
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            **{
-                                k: None
-                                for k in (
-                                    "width", "height", "samp", "cb_width",
-                                    "cb_height", "y_sum", "cb_sum", "cr_sum",
-                                    "first_px", "last_px",
-                                )
-                            },
-                        }
-                    )
-                    continue
-                sums = [sum(p) for p in d["planes"]]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": d["width"],
-                        "height": d["height"],
-                        "samp": f"{samp[0][0]}x{samp[0][1]}",
-                        "cb_width": d["plane_dims"][1][0],
-                        "cb_height": d["plane_dims"][1][1],
-                        "y_sum": sums[0],
-                        "cb_sum": sums[1],
-                        "cr_sum": sums[2],
-                        "first_px": d["planes"][0][0],
-                        "last_px": d["planes"][2][-1],
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def stats(d: dict) -> Iterator[dict]:
+        samp = d.get("sampling")
+        if samp not in ([(3, 1), (1, 1), (1, 1)], [(1, 3), (1, 1), (1, 1)]):
+            raise ValueError("expected a factor-3 three-component JPEG")
+        sums = [sum(p) for p in d["planes"]]
+        yield {
+            "width": d["width"],
+            "height": d["height"],
+            "samp": f"{samp[0][0]}x{samp[0][1]}",
+            "cb_width": d["plane_dims"][1][0],
+            "cb_height": d["plane_dims"][1][1],
+            "y_sum": sums[0],
+            "cb_sum": sums[1],
+            "cr_sum": sums[2],
+            "first_px": d["planes"][0][0],
+            "last_px": d["planes"][2][-1],
+        }
 
-    return media.mapInPandas(run, schema=JPEG_311_SCHEMA)
+    return _decode_map(media, JPEG_311_SCHEMA, stats, strict)
 
 
 def decode_jpeg_subsampled_stats(media: DataFrame, strict: bool = True) -> DataFrame:
@@ -4844,54 +3870,26 @@ def decode_jpeg_subsampled_stats(media: DataFrame, strict: bool = True) -> DataF
     half-resolution chroma geometry — a sampling-factor, MCU-block-order
     or plane-size bug mismatches before any sum is compared.
     ``strict=False`` = poison-safe NULL-stats rows (see
-    :func:`decode_png_stats`)."""
+    :func:`_decode_map`)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    d = decode_real(bytes(payload))
-                    if d.get("sampling") != [(2, 2), (1, 1), (1, 1)]:
-                        raise ValueError("expected a 4:2:0 three-component JPEG")
-                except ValueError:
-                    if strict:
-                        raise
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            **{
-                                k: None
-                                for k in (
-                                    "width", "height", "cb_width", "cb_height",
-                                    "n_mcus", "y_sum", "cb_sum", "cr_sum",
-                                    "first_px", "last_px",
-                                )
-                            },
-                        }
-                    )
-                    continue
-                sums = [sum(p) for p in d["planes"]]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": d["width"],
-                        "height": d["height"],
-                        "cb_width": d["plane_dims"][1][0],
-                        "cb_height": d["plane_dims"][1][1],
-                        "n_mcus": (d["width"] // 16) * (d["height"] // 16),
-                        "y_sum": sums[0],
-                        "cb_sum": sums[1],
-                        "cr_sum": sums[2],
-                        "first_px": d["planes"][0][0],
-                        "last_px": d["planes"][2][-1],
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def stats(d: dict) -> Iterator[dict]:
+        if d.get("sampling") != [(2, 2), (1, 1), (1, 1)]:
+            raise ValueError("expected a 4:2:0 three-component JPEG")
+        sums = [sum(p) for p in d["planes"]]
+        yield {
+            "width": d["width"],
+            "height": d["height"],
+            "cb_width": d["plane_dims"][1][0],
+            "cb_height": d["plane_dims"][1][1],
+            "n_mcus": (d["width"] // 16) * (d["height"] // 16),
+            "y_sum": sums[0],
+            "cb_sum": sums[1],
+            "cr_sum": sums[2],
+            "first_px": d["planes"][0][0],
+            "last_px": d["planes"][2][-1],
+        }
 
-    return media.mapInPandas(run, schema=JPEG_420_SCHEMA)
+    return _decode_map(media, JPEG_420_SCHEMA, stats, strict)
 
 
 AUDIO_STATS_SCHEMA = (
@@ -4908,22 +3906,12 @@ def synthesize_wav_pcm(df: DataFrame, id_col: str) -> DataFrame:
     doc_id so the oracle recomputes every feature by arithmetic while
     the engine must unpack the actual PCM bytes."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
-                n = d % 400 + 100
-                samples = [((7 * d + 13 * k) % 2001) - 1000 for k in range(n)]
-                payloads.append(wav_pcm_bytes(1, 8000, samples))
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+    def payload(d: int) -> bytes:
+        n = d % 400 + 100
+        samples = [((7 * d + 13 * k) % 2001) - 1000 for k in range(n)]
+        return wav_pcm_bytes(1, 8000, samples)
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 def decode_audio_stats(media: DataFrame, strict: bool = True) -> DataFrame:
@@ -4933,54 +3921,26 @@ def decode_audio_stats(media: DataFrame, strict: bool = True) -> DataFrame:
     the PCM samples :func:`wav_decode_samples` unpacks from the actual
     ``data`` chunk. Exact integer outputs, so both engines agree
     bit-for-bit. ``strict=False`` = poison-safe NULL-stats rows (see
-    :func:`decode_png_stats`)."""
+    :func:`_decode_map`)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    d = decode_real(bytes(payload))
-                    if "raster" not in d and "samples" not in d:
-                        raise ValueError(f"undecodable payload: {d['media_type']}")
-                except ValueError:
-                    if strict:
-                        raise
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            **{
-                                k: None
-                                for k in (
-                                    "n_samples", "sample_rate", "sum_abs",
-                                    "energy", "zero_crossings", "peak",
-                                    "first_sample", "last_sample",
-                                )
-                            },
-                        }
-                    )
-                    continue
-                s = d["samples"]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "n_samples": d["n_samples"],
-                        "sample_rate": d["sample_rate"],
-                        "sum_abs": sum(abs(x) for x in s),
-                        "energy": sum(x * x for x in s),
-                        "zero_crossings": sum(
-                            1 for a, b in zip(s, s[1:]) if a * b < 0
-                        ),
-                        "peak": max(abs(x) for x in s),
-                        "first_sample": s[0],
-                        "last_sample": s[-1],
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def stats(d: dict) -> Iterator[dict]:
+        if _lacks(d, "n_samples", "sample_rate", "samples"):
+            raise ValueError(f"undecodable payload: {d.get('media_type')}")
+        s = d["samples"]
+        yield {
+            "n_samples": d["n_samples"],
+            "sample_rate": d["sample_rate"],
+            "sum_abs": sum(abs(x) for x in s),
+            "energy": sum(x * x for x in s),
+            "zero_crossings": sum(
+                1 for a, b in zip(s, s[1:]) if a * b < 0
+            ),
+            "peak": max(abs(x) for x in s),
+            "first_sample": s[0],
+            "last_sample": s[-1],
+        }
 
-    return media.mapInPandas(run, schema=AUDIO_STATS_SCHEMA)
+    return _decode_map(media, AUDIO_STATS_SCHEMA, stats, strict)
 
 
 AUDIO_DS_SCHEMA = (
@@ -5041,76 +4001,45 @@ def downsample_audio(
     full-resolution samples in the same pass — silence/segment
     statistics computed where the samples already are, no second
     decode and nothing but counts leaving the pass. ``strict=False`` =
-    poison-safe NULL-stats rows (see :func:`decode_png_stats`)."""
+    poison-safe NULL-stats rows (see :func:`_decode_map`)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    d = wav_decode_samples(bytes(payload))
-                    ch, s = d["channels"], d["samples"]
-                    n_frames = d["n_samples"]
-                    out_frames = n_frames // factor
-                    if out_frames == 0:
-                        raise ValueError("clip shorter than one block")
-                    out = [
-                        sum(s[(j * factor + t) * ch + c] for t in range(factor))
-                        // factor
-                        for j in range(out_frames)
-                        for c in range(ch)
-                    ]
-                    out_rate = d["sample_rate"] // factor
-                    out_wav = wav_pcm_bytes(ch, out_rate, out)
-                    check = wav_decode_samples(out_wav)  # round-trip proof
-                except ValueError:
-                    if strict:
-                        raise
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            **{
-                                k: None
-                                for k in (
-                                    "in_samples", "out_samples", "in_rate",
-                                    "out_rate", "channels", "payload",
-                                    "sum_abs", "energy", "first_sample",
-                                    "last_sample", "vad_windows",
-                                    "vad_silent", "vad_segments",
-                                    "vad_longest",
-                                )
-                            },
-                        }
-                    )
-                    continue
-                cs = check["samples"]
-                vw, vs, vseg, vlong = vad_segment_counts(
-                    s, ch, vad_window, vad_threshold
-                )
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "in_samples": n_frames,
-                        "out_samples": check["n_samples"],
-                        "in_rate": d["sample_rate"],
-                        "out_rate": check["sample_rate"],
-                        "channels": check["channels"],
-                        "payload": out_wav,
-                        "sum_abs": sum(abs(x) for x in cs),
-                        "energy": sum(x * x for x in cs),
-                        "first_sample": cs[0],
-                        "last_sample": cs[-1],
-                        "vad_windows": vw,
-                        "vad_silent": vs,
-                        "vad_segments": vseg,
-                        "vad_longest": vlong,
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def stats(d: dict) -> Iterator[dict]:
+        ch, s = d["channels"], d["samples"]
+        n_frames = d["n_samples"]
+        out_frames = n_frames // factor
+        if out_frames == 0:
+            raise ValueError("clip shorter than one block")
+        out = [
+            sum(s[(j * factor + t) * ch + c] for t in range(factor))
+            // factor
+            for j in range(out_frames)
+            for c in range(ch)
+        ]
+        out_rate = d["sample_rate"] // factor
+        out_wav = wav_pcm_bytes(ch, out_rate, out)
+        check = wav_decode_samples(out_wav)  # round-trip proof
+        cs = check["samples"]
+        vw, vs, vseg, vlong = vad_segment_counts(
+            s, ch, vad_window, vad_threshold
+        )
+        yield {
+            "in_samples": n_frames,
+            "out_samples": check["n_samples"],
+            "in_rate": d["sample_rate"],
+            "out_rate": check["sample_rate"],
+            "channels": check["channels"],
+            "payload": out_wav,
+            "sum_abs": sum(abs(x) for x in cs),
+            "energy": sum(x * x for x in cs),
+            "first_sample": cs[0],
+            "last_sample": cs[-1],
+            "vad_windows": vw,
+            "vad_silent": vs,
+            "vad_segments": vseg,
+            "vad_longest": vlong,
+        }
 
-    return media.mapInPandas(run, schema=AUDIO_DS_SCHEMA)
+    return _decode_map(media, AUDIO_DS_SCHEMA, stats, strict, decode=wav_decode_samples)
 
 
 def _decode_stub_batch(payload: pd.Series) -> pd.DataFrame:
@@ -5241,103 +4170,76 @@ def resize_image(media: DataFrame, factor: int = 2, strict: bool = True) -> Data
     ``out_last_px``) are computed by DECODING THE RE-ENCODED payload,
     so they prove the full decode→resize→encode→decode cycle, not just
     the scaling math. ``strict=False`` = poison-safe NULL-stats rows
-    (see :func:`decode_png_stats`)."""
+    (see :func:`_decode_map`)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    raw = bytes(payload)
-                    d = (
-                        png_decode_pixels(raw)
-                        if raw[:8] == _PNG_SIG
-                        else decode_real(raw)
-                    )
-                    if "raster" not in d or d.get("channels") not in (1, 2, 3, 4):
-                        raise ValueError("payload is not a decodable image")
-                    if d["media_type"] == "image/jpeg" and d["channels"] != 1:
-                        # color JPEG planes may be subsampled (different
-                        # dims per plane) — resize the luma plane alone
-                        # would silently drop chroma; refuse instead
-                        raise ValueError("only grayscale JPEG resize supported")
-                    if d.get("bit_depth", 8) > 8:
-                        # deep-sample path (round 10; 16-bit PNG and
-                        # 12-bit JPEG): box means over u16/u12 SAMPLES —
-                        # not raster bytes — then a 16-bit PNG re-encode;
-                        # stats below read the re-decoded samples so
-                        # dynamic range survives end to end
-                        small16, out_w, out_h = box_downscale16(
-                            d["samples16"], d["width"], d["height"],
-                            d["channels"], factor,
-                        )
-                        out_png = png_pixel16_bytes(
-                            out_w, out_h, small16,
-                            _COLOR_TYPE_FOR_CHANNELS[d["channels"]],
-                        )
-                    else:
-                        small, out_w, out_h = box_downscale(
-                            d["raster"], d["width"], d["height"],
-                            d["channels"], factor,
-                        )
-                        out_png = png_pixel_bytes(
-                            out_w, out_h, small,
-                            _COLOR_TYPE_FOR_CHANNELS[d["channels"]],
-                        )
-                    check = png_decode_pixels(out_png)  # round-trip proof
-                    stats_px = check.get("samples16") or check["raster"]
-                except ValueError:
-                    if strict:
-                        raise
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            **{
-                                k: None
-                                for k in (
-                                    "in_width", "in_height", "out_width",
-                                    "out_height", "channels", "orig_bytes",
-                                    "resized_bytes", "payload", "out_px_sum",
-                                    "out_first_px", "out_last_px",
-                                    "crop_size", "crop_px_sum",
-                                    "crop_first_px", "crop_last_px",
-                                )
-                            },
-                        }
-                    )
-                    continue
-                # crop stats over the ORIGINAL decoded samples (the
-                # same Arrow pass — round 14c): deep inputs crop their
-                # 16/12-bit samples, 8-bit inputs their raster
-                ccs, cct, ccf, ccl = center_crop_stats(
-                    d.get("samples16") or d["raster"],
-                    d["width"], d["height"], d["channels"],
-                )
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "in_width": d["width"],
-                        "in_height": d["height"],
-                        "out_width": check["width"],
-                        "out_height": check["height"],
-                        "channels": check["channels"],
-                        "orig_bytes": len(payload),
-                        "resized_bytes": len(out_png),
-                        "payload": out_png,
-                        "out_px_sum": sum(stats_px),
-                        "out_first_px": stats_px[0],
-                        "out_last_px": stats_px[-1],
-                        "crop_size": ccs,
-                        "crop_px_sum": cct,
-                        "crop_first_px": ccf,
-                        "crop_last_px": ccl,
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def decode(raw: bytes) -> tuple[int, dict]:
+        return len(raw), (
+            png_decode_pixels(raw) if raw[:8] == _PNG_SIG else decode_real(raw)
+        )
 
-    return media.mapInPandas(run, schema=RESIZE_SCHEMA)
+    def stats(decoded: tuple[int, dict]) -> Iterator[dict]:
+        orig_bytes, d = decoded
+        if (
+            _lacks(d, "width", "height", "raster")
+            or d.get("channels") not in (1, 2, 3, 4)
+        ):
+            raise ValueError("payload is not a decodable image")
+        if d.get("media_type") == "image/jpeg" and d["channels"] != 1:
+            # color JPEG planes may be subsampled (different
+            # dims per plane) — resize the luma plane alone
+            # would silently drop chroma; refuse instead
+            raise ValueError("only grayscale JPEG resize supported")
+        if d.get("bit_depth", 8) > 8:
+            # deep-sample path (round 10; 16-bit PNG and
+            # 12-bit JPEG): box means over u16/u12 SAMPLES —
+            # not raster bytes — then a 16-bit PNG re-encode;
+            # stats below read the re-decoded samples so
+            # dynamic range survives end to end
+            small16, out_w, out_h = box_downscale16(
+                d["samples16"], d["width"], d["height"],
+                d["channels"], factor,
+            )
+            out_png = png_pixel16_bytes(
+                out_w, out_h, small16,
+                _COLOR_TYPE_FOR_CHANNELS[d["channels"]],
+            )
+        else:
+            small, out_w, out_h = box_downscale(
+                d["raster"], d["width"], d["height"],
+                d["channels"], factor,
+            )
+            out_png = png_pixel_bytes(
+                out_w, out_h, small,
+                _COLOR_TYPE_FOR_CHANNELS[d["channels"]],
+            )
+        check = png_decode_pixels(out_png)  # round-trip proof
+        stats_px = check.get("samples16") or check["raster"]
+        # crop stats over the ORIGINAL decoded samples (the
+        # same Arrow pass — round 14c): deep inputs crop their
+        # 16/12-bit samples, 8-bit inputs their raster
+        ccs, cct, ccf, ccl = center_crop_stats(
+            d.get("samples16") or d["raster"],
+            d["width"], d["height"], d["channels"],
+        )
+        yield {
+            "in_width": d["width"],
+            "in_height": d["height"],
+            "out_width": check["width"],
+            "out_height": check["height"],
+            "channels": check["channels"],
+            "orig_bytes": orig_bytes,
+            "resized_bytes": len(out_png),
+            "payload": out_png,
+            "out_px_sum": sum(stats_px),
+            "out_first_px": stats_px[0],
+            "out_last_px": stats_px[-1],
+            "crop_size": ccs,
+            "crop_px_sum": cct,
+            "crop_first_px": ccf,
+            "crop_last_px": ccl,
+        }
+
+    return _decode_map(media, RESIZE_SCHEMA, stats, strict, decode=decode)
 
 
 FRAME_SCHEMA = (
@@ -5378,35 +4280,23 @@ def synthesize_png_stream(df: DataFrame, id_col: str) -> DataFrame:
     per-frame pixel stats arithmetically while the engine must walk the
     container AND decode each sampled frame's IDAT stream."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for doc_id in ids:
-                d = int(doc_id)
-                n_frames, w, h = d % 5 + 2, d % 11 + 4, d % 9 + 4
-                payloads.append(
-                    b"".join(
-                        png_pixel_bytes(
-                            w,
-                            h,
-                            bytes(
-                                (3 * x + 5 * y + 11 * f + d) % 256
-                                for y in range(h)
-                                for x in range(w)
-                            ),
-                            0,
-                        )
-                        for f in range(n_frames)
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "payload": payloads})
+    def payload(d: int) -> bytes:
+        n_frames, w, h = d % 5 + 2, d % 11 + 4, d % 9 + 4
+        return b"".join(
+            png_pixel_bytes(
+                w,
+                h,
+                bytes(
+                    (3 * x + 5 * y + 11 * f + d) % 256
+                    for y in range(h)
+                    for x in range(w)
+                ),
+                0,
+            )
+            for f in range(n_frames)
+        )
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return _synth_map(df, id_col, payload)
 
 
 def sample_frames(media: DataFrame, every_n: int = 2, strict: bool = True) -> DataFrame:
@@ -5429,61 +4319,38 @@ def sample_frames(media: DataFrame, every_n: int = 2, strict: bool = True) -> Da
     stage."""
     from .avicodec import avi_frame_blobs, decode_avi_frame
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    raw = bytes(payload)
-                    if raw[:4] == b"RIFF" and raw[8:12] == b"AVI ":
-                        meta = avi_frame_blobs(raw)
-                        frames = meta["frame_blobs"]
-                        decoded = [
-                            (i, frames[i], decode_avi_frame(meta, i))
-                            for i in range(0, len(frames), every_n)
-                        ]
-                    else:
-                        frames = split_png_stream(raw)
-                        decoded = [
-                            (i, frames[i], png_decode_pixels(frames[i]))
-                            for i in range(0, len(frames), every_n)
-                        ]
-                except ValueError:
-                    if strict:
-                        raise
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            **{
-                                k: None
-                                for k in (
-                                    "frame_index", "n_frames", "width",
-                                    "height", "frame_bytes", "px_sum",
-                                    "first_px", "last_px", "payload",
-                                )
-                            },
-                        }
-                    )
-                    continue
-                for i, raw, d in decoded:
-                    raster = d["raster"]
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "frame_index": i,
-                            "n_frames": len(frames),
-                            "width": d["width"],
-                            "height": d["height"],
-                            "frame_bytes": len(raw),
-                            "px_sum": sum(raster),
-                            "first_px": raster[0],
-                            "last_px": raster[-1],
-                            "payload": raw,
-                        }
-                    )
-            if rows:
-                yield pd.DataFrame(rows)
+    def decode(raw: bytes) -> tuple[list, list]:
+        if raw[:4] == b"RIFF" and raw[8:12] == b"AVI ":
+            meta = avi_frame_blobs(raw)
+            frames = meta["frame_blobs"]
+            decoded = [
+                (i, frames[i], decode_avi_frame(meta, i))
+                for i in range(0, len(frames), every_n)
+            ]
+        else:
+            frames = split_png_stream(raw)
+            decoded = [
+                (i, frames[i], png_decode_pixels(frames[i]))
+                for i in range(0, len(frames), every_n)
+            ]
+        return frames, decoded
 
-    return media.mapInPandas(run, schema=FRAME_SCHEMA)
+    def stats(walk: tuple[list, list]) -> Iterator[dict]:
+        frames, decoded = walk
+        if not decoded:
+            raise ValueError("stream holds no frames")
+        for i, raw, d in decoded:
+            raster = d["raster"]
+            yield {
+                "frame_index": i,
+                "n_frames": len(frames),
+                "width": d["width"],
+                "height": d["height"],
+                "frame_bytes": len(raw),
+                "px_sum": sum(raster),
+                "first_px": raster[0],
+                "last_px": raster[-1],
+                "payload": raw,
+            }
+
+    return _decode_map(media, FRAME_SCHEMA, stats, strict, decode=decode)

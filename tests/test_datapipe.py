@@ -3193,22 +3193,37 @@ def test_wav_pcm_feature_extraction():
     assert st["samples"] == inter and st["n_samples"] == 3
 
 
-def test_decode_stats_poison_safety(docs):
-    """strict=False is the external-corpus posture: a corrupt payload
-    becomes a NULL-stats row (doc_id kept for quarantine), never a
-    stage-killing exception; strict=True (the gates' posture over
-    synthesized payloads) surfaces the error."""
-    import pyspark
-    import pytest as _pytest
-    from pyspark.sql import functions as F2
+def _strict_decoders() -> list[str]:
+    """Every public multimodal operator with a ``strict`` parameter,
+    found by signature so a new decoder is covered automatically."""
+    import inspect
 
-    from lfb_data_warehouse_spark.operators.multimodal import (
-        decode_audio_stats,
-        decode_jpeg_color_stats,
-        decode_jpeg_stats,
-        decode_png_stats,
+    from lfb_data_warehouse_spark.operators import multimodal
+
+    return sorted(
+        name
+        for name, fn in vars(multimodal).items()
+        if inspect.isfunction(fn)
+        and not name.startswith("_")
+        and fn.__module__ == multimodal.__name__
+        and "strict" in inspect.signature(fn).parameters
     )
 
+
+# a valid payload of a FOREIGN format must be poison too: a PNG for the
+# audio decoders, a WAV for every other (image, video, crawl) decoder
+_AUDIO_DECODER_MARKS = ("audio", "g711", "adpcm", "flac")
+
+
+@pytest.fixture(scope="module")
+def poison_media(spark):
+    """Corruption classes that fail AFTER container sniffing (they
+    used to escape as struct.error / KeyError / IndexError and kill
+    the stage): never-a-media-container junk, an empty payload, a
+    truncated PNG IHDR, a truncated WAV fmt, a JPEG whose scan
+    references tables no DHT defined, a zero-area PNG, an empty-data
+    WAV, a JPEG truncated inside SOF0 — plus a NULL payload and a
+    valid payload of a foreign format (doc 10)."""
     from lfb_data_warehouse_spark.operators.jpegcodec import jpeg_pixel_bytes
     from lfb_data_warehouse_spark.operators.multimodal import (
         _PNG_SIG,
@@ -3216,13 +3231,6 @@ def test_decode_stats_poison_safety(docs):
         wav_pcm_bytes,
     )
 
-    spark = docs.sparkSession
-    # Beyond never-a-media-container junk, cover the corruption classes
-    # that fail AFTER container sniffing (round-8 ADVICE: these used to
-    # escape as struct.error / KeyError / IndexError and kill the
-    # stage): truncated PNG IHDR, truncated WAV fmt, a JPEG whose scan
-    # references tables no DHT defined, a zero-area PNG, an empty-data
-    # WAV, and a JPEG truncated inside SOF0.
     real_jpeg = jpeg_pixel_bytes(8, 8, bytes(range(64)))
     no_tables = bytearray(real_jpeg)  # strip every DHT: tables undefined
     while True:
@@ -3231,33 +3239,68 @@ def test_decode_stats_poison_safety(docs):
             break
         seglen = int.from_bytes(no_tables[p + 2 : p + 4], "big")
         del no_tables[p : p + 2 + seglen]
-    poison = spark.createDataFrame(
-        [
-            (1, bytearray(b"not a media payload")),
-            (2, bytearray(b"")),
-            (3, bytearray(_PNG_SIG + b"\x00\x00\x00\x0dIHDR\x00\x01")),
-            (4, bytearray(b"RIFF\x10\x00\x00\x00WAVEfmt \x10\x00\x00\x00\x01\x00")),
-            (5, bytearray(no_tables)),
-            (6, bytearray(png_pixel_bytes(0, 0, b"", 0))),
-            (7, bytearray(wav_pcm_bytes(1, 8000, [1]))[:-2] + b""),
-            (8, bytearray(real_jpeg[: real_jpeg.find(b"\xff\xc0") + 6])),
-        ],
-        "doc_id long, payload binary",
-    )
-    for op in (
-        decode_png_stats,
-        decode_jpeg_stats,
-        decode_jpeg_color_stats,
-        decode_audio_stats,
-    ):
-        rows = op(poison, strict=False).collect()
-        assert sorted(r["doc_id"] for r in rows) == [1, 2, 3, 4, 5, 6, 7, 8]
-        assert all(
-            v is None for r in rows for k, v in r.asDict().items() if k != "doc_id"
+    rows = [
+        (1, bytearray(b"not a media payload")),
+        (2, bytearray(b"")),
+        (3, bytearray(_PNG_SIG + b"\x00\x00\x00\x0dIHDR\x00\x01")),
+        (4, bytearray(b"RIFF\x10\x00\x00\x00WAVEfmt \x10\x00\x00\x00\x01\x00")),
+        (5, bytearray(no_tables)),
+        (6, bytearray(png_pixel_bytes(0, 0, b"", 0))),
+        (7, bytearray(wav_pcm_bytes(1, 8000, [1]))[:-2] + b""),
+        (8, bytearray(real_jpeg[: real_jpeg.find(b"\xff\xc0") + 6])),
+        (9, None),
+    ]
+    foreign = {
+        "audio": png_pixel_bytes(2, 2, bytes([7, 9, 11, 13]), 0),
+        "other": wav_pcm_bytes(1, 8000, [5, -7, 9]),
+    }
+    return {
+        kind: spark.createDataFrame(
+            rows + [(10, bytearray(p))], "doc_id long, payload binary"
         )
-        with _pytest.raises(pyspark.errors.PythonException):
-            op(poison).collect()  # strict default surfaces the error
-    _ = F2  # imported for parity with sibling tests
+        for kind, p in foreign.items()
+    }
+
+
+@pytest.mark.parametrize("name", _strict_decoders())
+def test_decode_stats_poison_safety(poison_media, name):
+    """strict=False is the external-corpus posture: a corrupt, NULL or
+    foreign-format payload becomes ONE NULL-stats row (doc_id kept for
+    quarantine), never a stage-killing exception; strict=True (the
+    gates' posture over synthesized payloads) surfaces the error."""
+    import pyspark
+
+    from lfb_data_warehouse_spark.operators import multimodal
+
+    op = getattr(multimodal, name)
+    kind = "audio" if any(m in name for m in _AUDIO_DECODER_MARKS) else "other"
+    poison = poison_media[kind]
+    rows = op(poison, strict=False).collect()
+    assert sorted(r["doc_id"] for r in rows) == list(range(1, 11))
+    assert all(
+        v is None for r in rows for k, v in r.asDict().items() if k != "doc_id"
+    )
+    with pytest.raises(pyspark.errors.PythonException):
+        op(poison, strict=True).collect()
+
+
+def test_decode_poison_row_keeps_int64_stats_exact(spark):
+    """A poison row sharing an Arrow batch with good rows must not
+    route their 64-bit stats through float64: the energy (Σs²) of a
+    32-bit PCM clip sits just under 2^63, where float64 steps by 1024."""
+    from lfb_data_warehouse_spark.operators.multimodal import (
+        decode_audio_stats,
+        wav_pcm_bytes,
+    )
+
+    wav = wav_pcm_bytes(1, 8000, [2**31 - 1, -(2**31 - 1), 3], bits=32)
+    media = spark.createDataFrame(
+        [(1, bytearray(wav)), (2, bytearray(b"junk"))],
+        "doc_id long, payload binary",
+    ).coalesce(1)
+    rows = {r["doc_id"]: r for r in decode_audio_stats(media, strict=False).collect()}
+    assert rows[1]["energy"] == 9223372028264841227
+    assert rows[2]["energy"] is None
 
 
 def test_decode_real_dispatch():
