@@ -2368,10 +2368,11 @@ def synthesize_mixed_media(df: DataFrame, id_col: str) -> DataFrame:
 def decode_media_poison_stats(media: DataFrame) -> DataFrame:
     """Arrow-batched heterogeneous decode with POISON-SAFE rows: every
     payload goes through :func:`decode_real`'s sniff-and-dispatch; a
-    payload that fails to sniff (octet-stream) or fails to parse emits
-    a NULL-stats row with ``decoded = false`` instead of killing the
-    stage — the per-type stats (pixel sum / linear sample sum) prove
-    the good rows still run the full decode path next to the poison."""
+    NULL payload, or one that fails to sniff (octet-stream) or to
+    parse, emits a NULL-stats row with ``decoded = false`` instead of
+    killing the stage — the per-type stats (pixel sum / linear sample
+    sum) prove the good rows still run the full decode path next to the
+    poison."""
     null_row = _null_row(POISON_STATS_SCHEMA)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -2381,6 +2382,8 @@ def decode_media_poison_stats(media: DataFrame) -> DataFrame:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 try:
+                    if payload is None:
+                        raise ValueError("NULL payload")
                     d = decode_real(bytes(payload))
                     mt = d.get("media_type")
                     if mt in ("image/png", "image/jpeg", "image/gif",
@@ -2790,9 +2793,9 @@ def parse_warc_poison_stats(media: DataFrame) -> DataFrame:
     """Robust WARC parse over heterogeneous payloads (round 11): sniff
     gzip magic vs identity encoding, walk every record type (HTTP
     header/body split ONLY for response/request records — warcinfo and
-    metadata content IS the payload), and turn truncated members or
-    non-WARC bytes into one NULL-stats ``parsed = false`` row instead
-    of a stage kill — the strict=False contract extended to the crawl
+    metadata content IS the payload), and turn truncated members,
+    non-WARC bytes or a NULL payload into one NULL-stats
+    ``parsed = false`` row instead of a stage kill — the strict=False contract extended to the crawl
     container tier. One output row per record on good docs."""
     import gzip
 
@@ -2804,8 +2807,10 @@ def parse_warc_poison_stats(media: DataFrame) -> DataFrame:
                 continue
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(payload)
                 try:
+                    if payload is None:
+                        raise ValueError("NULL payload")
+                    raw = bytes(payload)
                     if raw[:2] == b"\x1f\x8b":
                         gzipped = True
                         raw = gzip.decompress(raw)

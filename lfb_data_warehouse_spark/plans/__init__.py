@@ -7,9 +7,12 @@ from . import curation_queries  # noqa: F401  (registers curation battery)
 from . import analytics_queries  # noqa: F401  (registers extended analytics battery)
 from . import rotation
 
-# The driver oracle-checks the first 50 registry entries per round;
-# rotation.reorder puts the queries that most need a green CORRECTNESS
-# row in front (see rotation.py for the per-round policy).
-_ordered = rotation.reorder(REGISTRY)
+# The driver oracle-checks the first rotation.WINDOW registry entries per
+# round. rotation.reorder derives their order from the committed
+# CORRECTNESS_r<N>.json rows and tools/oracle_hashes.json: flagship,
+# never-green or red, changed oracle, then stalest-first.
+_ordered = rotation.reorder(
+    REGISTRY, rotation.load_last_green(), rotation.load_snapshot()
+)
 REGISTRY.clear()
 REGISTRY.update(_ordered)

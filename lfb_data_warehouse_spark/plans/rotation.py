@@ -1,1486 +1,92 @@
-"""CORRECTNESS-rotation ordering for the query registry.
+"""CORRECTNESS-rotation order for the query registry.
 
-The driver oracle-checks the FIRST 50 registry entries (dict insertion
-order) each round. With far more registered queries than slots
-(len(REGISTRY) is the truth — never trust a hardcoded count here),
-coverage rotates: each round the front of the registry holds the
-queries that most need a green CORRECTNESS row, and queries already
-verified green in a previous round move to the back. NOTE: brand-new
-queries (in no list below) jump the queue via reorder()'s new-query
-branch, each displacing one slot from the 50-slot window.
-
-History:
-- Round 1 (CORRECTNESS_r01.json): 38 green, 12 red (events-loader bug,
-  fixed round 2).
-- Round 2 (CORRECTNESS_r02.json): 47 green, 3 red — all three were
-  oracle/driver-canonicalization defects (HUGEINT SUM → pandas float64;
-  list column crashing the pandas sort), fixed in round 3 alongside the
-  queued `array_hof_battery` landmine. Engine answers were verified
-  value-exact vs DuckDB in both cases.
-- Round 3 (CORRECTNESS_r03.json): 50/50 green — the three round-2 reds
-  flipped, and the similarity/ANN, IO round-trip, streaming-slide,
-  curation, and observability batteries got their first driver rows.
-- Round 4 (this file): ALL 41 queries that have never had a driver
-  CORRECTNESS row, plus the six round-4 additions, fit in the window
-  with TWO spare slots; the spares re-verify the two previously-green
-  queries whose ORACLE text round 4 changed (the kmeans seeding CTE —
-  historically the riskiest change class). The other touched-but-green
-  queries (sql_api temp-view retirement, zorder long-cast, clustering
-  writes) were re-verified locally in two full vanilla sweeps and
-  queue first for round 5. A green round 4 means every registry query
-  has been driver-proven at least once.
-
-- Round 4 (CORRECTNESS_r04.json): 50/50 green — the 41-query backlog
-  plus the six round-4 additions all flipped; union(r1..r4) covers the
-  whole registry.
-- Round 5 (CORRECTNESS_r05.json): 50/50 green — the registry grew 181 → 202 — the
-  3 formerly-staged operators + IVF×PQ + the incremental-dedup pair
-  early in the round, then residual IVFPQ (+recall audit), IVF
-  append, PCA, MG heavy hitters, HLL set algebra, EWMA, rolling
-  anomaly, RFM, basket affinity, Markov transitions, Pareto/ABC,
-  order-gap stats, the cluster histogram, the seasonality index,
-  and new-vs-returning growth accounting late in it. Window =
-  flagship + all 21 never-checked round-5 additions + the 3 priority
-  rechecks (the two round-4 drops + the changed-oracle corpus
-  composite) + the oldest (round-1) greens in the remaining spares.
-  Oracle-text drift is mechanically tracked
-  (tools/oracle_hashes.json + tools/rotation_check.py); every
-  registered query was locally vanilla-oracle-green at least twice
-  this round (LOCAL_CORRECTNESS_r05 refreshed per batch).
-- Round 6 (CORRECTNESS_r06.json): 50/50 green — the staleness sweep
-  (_R6_RECHECK ordering: events battery, then r1-era, then r2-era)
-  plus the two round-6 additions (io_contract_battery,
-  history_length_audit; registry 202 → 204). The sweep's tail — 10
-  queries whose last driver row stayed r2 — leads round 7.
-- Round 7 (CORRECTNESS_r07.json): 50/50 green — pure freshness round.
-  _R7_RECHECK was the mechanical `tools/freshness.py` staleness queue
-  (the 10 r2-tail queries, then every r3-era row oldest-first); only the first
-  window-size − 1 − (# new round-7 queries) land, the rest queue for
-  round 8. VERIFIED_GREEN is now deduped keeping each name's LAST
-  green round (round-7 ADVICE: duplicated names used to order
-  freshly-regreen queries by their stale first-occurrence positions).
-- Round 8 (CORRECTNESS_r08.json): 50/50 green — the flagship, the five
-  round-8 additions (the real media-decode gates + the structured-
-  corpus PQ audit), the 8-query round-3 IO tail, and 36 round-4-era
-  rechecks. The 13-query r4 tail that missed the window queues first
-  for round 9.
-- Round 9 (CORRECTNESS_r09.json): 50/50 green. _R9_RECHECK was the mechanical
-  `tools/freshness.py` queue after round 8 — the 13 queries whose last
-  driver row is round 4 (the round-8 verdict's named set: the kmeans
-  pair, salted_join_events, semantic_dedup_kmeans,
-  doc_containment_pairs, the cogroup/analytics tail), then every
-  round-5-era row oldest-first in registry order. With only 13 r4-era
-  rows and ~44 spare slots, a green round 9 leaves NO registry row
-  older than round 5 — the round-8 verdict's stated goal (achieved:
-  histogram after r9 = {r5: 25, r6: 49, r7: 49, r8: 47, r9: 50}).
-- Round 10 (this file): freshness again. _R10_RECHECK is the
-  mechanical `tools/freshness.py` queue after round 9 — the 25
-  queries whose last driver row is round 5 (marts, SCD battery, DQ
-  checks, hash_surrogate_keys, topk_parts_per_brand, composite
-  joins), then the round-6-era rows oldest-first in registry order.
-  The round-10 additions (progressive-restart JPEG, 16-bit resize,
-  12-bit JPEG, 4:1:1 JPEG, lossless JPEG, GIF, G.711, BMP — registry
-  220 → 228) sit in UNCHECKED_PRIORITY ahead of them; the window still
-  holds flagship + 9 new + all 25 r5-era rows + the r6 head, so a
-  green round 10 leaves no registry row older than round 6.
-
-Maintenance: after each round, append that round's green names to
-the _R{N}_GREEN block and rebuild UNCHECKED_PRIORITY from whatever has
-no driver row yet. ``python tools/freshness.py`` derives the inputs
-mechanically (last-green histogram, never-checked set, oldest-first
-recheck queue); run it before editing, and
-``tools/rotation_check.py --update-hashes`` after positioning. The ordering below is deterministic and derived, so
-the next unverified queries automatically move to the front.
+The driver oracle-checks the first ``WINDOW`` registry entries (dict
+insertion order) each round. The order is derived from committed files
+only: the driver's rows in the repo-root ``CORRECTNESS_r<N>.json``
+files and the oracle snapshot ``tools/oracle_hashes.json``. Nothing
+here is kept by hand, so no round needs an edit to this file.
 """
 
 from __future__ import annotations
 
-# Green in CORRECTNESS_r01.json (round 1, registry slots 1-50).
-_R1_GREEN: list[str] = [
-    "mart_per_month",
-    "mart_per_segment",
-    "mart_types_per_segment",
-    "pivot_priority_by_year",
-    "dim_collapse_first",
-    "scd_latest_order",
-    "scd2_customer_priority",
-    "scd2_point_in_time_join",
-    "incremental_mart_update",
-    "topk_parts_per_brand",
-    "join_enrich_brand_revenue",
-    "join_composite_customer_year",
-    "incremental_new_orders",
-    "dq_referential_integrity",
-    "dq_profile_customer",
-    "hash_surrogate_keys",
-    "dim_region_sentinel",
-    "date_spine_orders",
-    "bucketize_acctbal",
-    "zscore_scrub_prices",
-    "try_cast_dirty_ingest",
-    "string_function_battery",
-    "unpivot_priority_measures",
-    "percentile_prices_by_flag",
-    "rollup_priority_year",
-    "window_battery_customer_orders",
-    "window_trailing_30d",
-    "histogram_order_prices",
-    "tpch_q1_pricing_summary",
-    "sql_api_top_segment_customers",
-    "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q4_order_priority",
-    "tpch_q6_forecast_revenue",
-    "tpch_q13_customer_distribution",
-    "tpch_q16_supplier_variety",
-    "tpch_q18_large_volume",
-    "approx_distinct_segments",
-]
+import hashlib
+import json
+import re
+from pathlib import Path
 
-# Green in CORRECTNESS_r02.json (round 2 window).
-_R2_GREEN: list[str] = [
-    "flagship_star_fact",
-    "cdc_merge_orders",
-    "reconcile_order_snapshots",
-    "bloom_semijoin_revenue",
-    "asof_backward_last_click",
-    "dedup_keep_canonical",
-    "remix_token_budget",
-    "text_bigram_novelty",
-    "text_vocab_oov",
-    "near_dup_recall_audit",
-    "semantic_dedup_keep",
-    "prepare_training_corpus",
-    "text_sentences_udtf",
-    "text_readability_stats",
-    "stream_dedup_events",
-    "stream_dedup_jittered",
-    "dpp_partitioned_fact_join",
-    "xml_roundtrip_part",
-    "python_datasource_weekday_orders",
-    "asof_nearest_purchase",
-    "interval_join_purchase_clicks",
-    "funnel_view_click_purchase",
-    "sessionize_events",
-    "tumbling_hourly_events",
-    "sliding_window_events",
-    "salted_agg_events",
-    "json_extract_events",
-    "variant_shred_events",
-    "map_explode_props",
-    "tpch_q7_nation_volume",
-    "tpch_q8_market_share",
-    "tpch_q9_product_profit",
-    "tpch_q10_returned_items",
-    "tpch_q11_important_parts",
-    "tpch_q14_promo_effect",
-    "tpch_q15_top_supplier",
-    "tpch_q17_small_qty_revenue",
-    "tpch_q19_disjunctive_revenue",
-    "tpch_q20_promo_suppliers",
-    "tpch_q21_waiting_supplier",
-    "tpch_q2_cheapest_supplier",
-    "tpch_q22_prospects",
-    "dedup_exact_documents",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_components",
-    "dedup_simhash_fingerprints",
-]
-
-# Green in CORRECTNESS_r03.json (round 3 window, 50/50 — includes the
-# three round-2 oracle-canonicalization reds, now fixed and green).
-_R3_GREEN: list[str] = [
-    "span_dedup_documents",
-    "text_unigram_logprob",
-    "kmeans_fit_centroids",
-    "ann_ivf_kmeans_recall",
-    "ivf_recall_audit",
-    "embedding_random_projection",
-    "stream_late_data_drop",
-    "stream_sliding_halfhour",
-    "stratified_split_documents",
-    "shard_assignment_documents",
-    "url_parse_battery",
-    "grouping_sets_mart",
-    "ntile_quartile_acctbal",
-    "text_token_diversity",
-    "cross_source_dup_matrix",
-    "split_drift_audit",
-    "window_frames_battery",
-    "mode_priority_per_segment",
-    "user_event_type_profile",
-    "winsorize_prices_by_flag",
-    "pandas_grouped_agg_median",
-    "maparrow_embedding_norms",
-    "observe_ingest_metrics",
-    "file_provenance_documents",
-    "zorder_clustering_locality",
-    "skew_audit_user_events",
-    "schema_drift_union_safe_math",
-    "mad_scrub_event_values",
-    "tpch_q12_late_priority",
-    "user_event_sequences",
-    "array_hof_battery",
-    "dedup_simhash_near_dups",
-    "knn_bruteforce_cosine",
-    "embedding_near_dup_pairs",
-    "ann_ivf_topk",
-    "embedding_lsh_near_dups",
-    "int8_ann_topk_claim",
-    "ivf_centroid_assign",
-    "decontaminate_test_split",
-    "bucketed_join_colocated",
-    "partitioned_scan_pruning",
-    "partition_overwrite_backfill",
-    "csv_roundtrip_orders",
-    "orc_roundtrip_lineitem",
-    "jsonl_roundtrip_events",
-    "csv_permissive_corrupt_rows",
-    "clustered_write_skipping",
-    "schema_evolution_merge",
-    "compaction_roundtrip",
-]
-
-# Green in CORRECTNESS_r04.json (round 4): all 50 window slots, closing
-# the never-driver-checked backlog entirely.
-_R4_GREEN: list[str] = [
-    "flagship_star_fact",
-    "dedup_components_star",
-    "ann_pq_adc_topk",
-    "gopher_quality_gates",
-    "gopher_repetition_gates",
-    "text_char_entropy",
-    "retention_cohort_weekly",
-    "text_quality_stats",
-    "text_lang_id",
-    "text_token_counts",
-    "c4_clean_documents",
-    "text_tfidf_top_terms",
-    "text_heavy_hitters",
-    "text_pii_redact",
-    "doc_fingerprints",
-    "doc_rolling_hash",
-    "text_repeated_ngrams",
-    "chunk_documents_sliding",
-    "pandas_udf_quality_sigmoid",
-    "dense_ids_documents",
-    "pack_sequences_documents",
-    "multimodal_decode",
-    "multimodal_resize",
-    "multimodal_frame_sample",
-    "stream_tumbling_hourly",
-    "stream_stateful_user_stats",
-    "stream_upsert_idempotent",
-    "stream_sessionize",
-    "stream_interval_join",
-    "stream_static_enrich",
-    "sketch_mart_mergeable",
-    "approx_percentile_claim",
-    "remix_source_mixture",
-    "sample_orders_deterministic",
-    "quality_weighted_sample",
-    "per_source_sample",
-    "ivf_persisted_search",
-    "salted_join_events",
-    "semantic_dedup_kmeans",
-    "doc_containment_pairs",
-    "cogroup_click_purchase_profile",
-    "mom_revenue_growth",
-    "gap_fill_daily_revenue",
-    "null_semantics_battery",
-    "cube_segment_priority",
-    "cohort_intersect_except",
-    "grouped_zscore_chars",
-    "regression_chars_vs_tokens",
-    "kmeans_fit_centroids",
-    "ann_ivf_kmeans_recall",
-]
-
-# Round 4 spare-slot re-verification, in priority order: only the
-# first len(window) - 1 - len(UNCHECKED_PRIORITY) of these actually
-# land (TWO with the final 47-entry unchecked list — run
-# tools/rotation_check.py after any edit here). The kmeans pair leads
-# because round 4 changed their ORACLE text (seed CTE `ORDER BY vec_id
-# LIMIT k` replacing `WHERE vec_id < k`) — oracle edits are the
-# historically riskiest class. The rest were touched (sql() temp-view
-# retirement, morton long-cast, clustering writes) but re-verified
-# locally green in two full vanilla sweeps; they queue first for the
-# round-5 window.
-_R4_RECHECK: list[str] = [
-    "kmeans_fit_centroids",
-    "ann_ivf_kmeans_recall",
-    "sql_api_top_segment_customers",
-    "ivf_recall_audit",
-    "dedup_components",
-    "zorder_clustering_locality",
-    "clustered_write_skipping",
-]
-
-# Green in CORRECTNESS_r05.json (round 5 window, 50/50): the flagship,
-# all 21 round-5 additions, the 3 priority rechecks, and the 25 oldest
-# round-1 greens. With this block the union of r1..r5 driver rows
-# covers the entire registry.
-_R5_GREEN: list[str] = [
-    "flagship_star_fact",
-    "approx_ntile_price_quartiles",
-    "incremental_dedup_components",
-    "incremental_dedup_survivors",
-    "pq_codebook_learned",
-    "ann_ivf_pq_topk",
-    "ann_ivf_pq_residual_topk",
-    "ivfpq_residual_recall_audit",
-    "ivf_incremental_append",
-    "embedding_pca_claim",
-    "heavy_hitters_sketch",
-    "sketch_overlap_yoy",
-    "ewma_customer_spend",
-    "anomaly_daily_revenue",
-    "rfm_customer_scores",
-    "basket_brand_affinity",
-    "event_transition_matrix",
-    "pareto_abc_brands",
-    "customer_order_gap_stats",
-    "dup_cluster_size_histogram",
-    "seasonality_month_index",
-    "new_vs_returning_revenue",
-    "sql_api_top_segment_customers",
-    "ivf_recall_audit",
-    "prepare_training_corpus",
-    "mart_per_month",
-    "mart_per_segment",
-    "mart_types_per_segment",
-    "pivot_priority_by_year",
-    "dim_collapse_first",
-    "scd_latest_order",
-    "scd2_customer_priority",
-    "scd2_point_in_time_join",
-    "incremental_mart_update",
-    "topk_parts_per_brand",
-    "join_enrich_brand_revenue",
-    "join_composite_customer_year",
-    "incremental_new_orders",
-    "dq_referential_integrity",
-    "dq_profile_customer",
-    "hash_surrogate_keys",
-    "dim_region_sentinel",
-    "date_spine_orders",
-    "bucketize_acctbal",
-    "zscore_scrub_prices",
-    "try_cast_dirty_ingest",
-    "string_function_battery",
-    "unpivot_priority_measures",
-    "percentile_prices_by_flag",
-    "rollup_priority_year",
-]
-
-# Round 6 re-verification, in priority order: the 57 queries whose most
-# recent driver row is >= 3 rounds old (histogram after r5: r1-stale 12,
-# r2-stale 45). Ordering within the block:
-#   1. the events-table battery (13 rows) — red in round 1 (events
-#      loader bug), fixed and proven green exactly once in round 2,
-#      never re-proven since; the oldest *risk*, not just the oldest
-#      timestamp;
-#   2. the 12 rows whose last driver green is round 1 (window/TPC-H
-#      early battery) — the oldest timestamps;
-#   3. the remaining round-2 rows in their original registry order.
-# Only the first len(window) - 1 - (# new round-6 queries) land this
-# round; the tail queues for round 7 under the same derived ordering.
-_R6_RECHECK: list[str] = [
-    # -- 1. events-table battery (r2, never re-proven since its fix) --
-    "asof_nearest_purchase",
-    "interval_join_purchase_clicks",
-    "funnel_view_click_purchase",
-    "sessionize_events",
-    "tumbling_hourly_events",
-    "sliding_window_events",
-    "salted_agg_events",
-    "json_extract_events",
-    "variant_shred_events",
-    "map_explode_props",
-    "asof_backward_last_click",
-    "stream_dedup_events",
-    "stream_dedup_jittered",
-    # -- 2. last driver green is round 1 --
-    "window_battery_customer_orders",
-    "window_trailing_30d",
-    "histogram_order_prices",
-    "tpch_q1_pricing_summary",
-    "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q4_order_priority",
-    "tpch_q6_forecast_revenue",
-    "tpch_q13_customer_distribution",
-    "tpch_q16_supplier_variety",
-    "tpch_q18_large_volume",
-    "approx_distinct_segments",
-    # -- 3. remaining round-2 rows, original order --
-    "cdc_merge_orders",
-    "reconcile_order_snapshots",
-    "bloom_semijoin_revenue",
-    "dedup_keep_canonical",
-    "remix_token_budget",
-    "text_bigram_novelty",
-    "text_vocab_oov",
-    "near_dup_recall_audit",
-    "semantic_dedup_keep",
-    "text_sentences_udtf",
-    "text_readability_stats",
-    "dpp_partitioned_fact_join",
-    "xml_roundtrip_part",
-    "python_datasource_weekday_orders",
-    "tpch_q7_nation_volume",
-    "tpch_q8_market_share",
-    "tpch_q9_product_profit",
-    "tpch_q10_returned_items",
-    "tpch_q11_important_parts",
-    "tpch_q14_promo_effect",
-    "tpch_q15_top_supplier",
-    "tpch_q17_small_qty_revenue",
-    "tpch_q19_disjunctive_revenue",
-    "tpch_q20_promo_suppliers",
-    "tpch_q21_waiting_supplier",
-    "tpch_q2_cheapest_supplier",
-    "tpch_q22_prospects",
-    "dedup_exact_documents",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_components",
-    "dedup_simhash_fingerprints",
-]
-
-# Green in CORRECTNESS_r06.json (round 6 window, 50/50): the flagship,
-# the two round-6 additions, and the head of the _R6_RECHECK staleness
-# sweep (events battery, r1-era, r2-era through tpch_q17).
-_R6_GREEN: list[str] = [
-    "flagship_star_fact",
-    "history_length_audit",
-    "io_contract_battery",
-    "asof_nearest_purchase",
-    "interval_join_purchase_clicks",
-    "funnel_view_click_purchase",
-    "sessionize_events",
-    "tumbling_hourly_events",
-    "sliding_window_events",
-    "salted_agg_events",
-    "json_extract_events",
-    "variant_shred_events",
-    "map_explode_props",
-    "asof_backward_last_click",
-    "stream_dedup_events",
-    "stream_dedup_jittered",
-    "window_battery_customer_orders",
-    "window_trailing_30d",
-    "histogram_order_prices",
-    "tpch_q1_pricing_summary",
-    "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q4_order_priority",
-    "tpch_q6_forecast_revenue",
-    "tpch_q13_customer_distribution",
-    "tpch_q16_supplier_variety",
-    "tpch_q18_large_volume",
-    "approx_distinct_segments",
-    "cdc_merge_orders",
-    "reconcile_order_snapshots",
-    "bloom_semijoin_revenue",
-    "dedup_keep_canonical",
-    "remix_token_budget",
-    "text_bigram_novelty",
-    "text_vocab_oov",
-    "near_dup_recall_audit",
-    "semantic_dedup_keep",
-    "text_sentences_udtf",
-    "text_readability_stats",
-    "dpp_partitioned_fact_join",
-    "xml_roundtrip_part",
-    "python_datasource_weekday_orders",
-    "tpch_q7_nation_volume",
-    "tpch_q8_market_share",
-    "tpch_q9_product_profit",
-    "tpch_q10_returned_items",
-    "tpch_q11_important_parts",
-    "tpch_q14_promo_effect",
-    "tpch_q15_top_supplier",
-    "tpch_q17_small_qty_revenue",
-]
-
-# Round 7 re-verification, in priority order: tools/freshness.py's
-# staleness queue after round 6 — the 10 queries whose last driver row
-# is round 2 (the documented _R6_RECHECK tail: the late-TPC-H battery
-# and the exact/near-dup dedup chain), then every round-3-era row
-# oldest-first in registry order. 56 candidates for ~48 spare slots:
-# the tail that misses the window queues for round 8 under the same
-# derived ordering.
-_R7_RECHECK: list[str] = [
-    # -- 1. last driver green is round 2 (the round-6 sweep tail) --
-    "tpch_q19_disjunctive_revenue",
-    "tpch_q20_promo_suppliers",
-    "tpch_q21_waiting_supplier",
-    "tpch_q2_cheapest_supplier",
-    "tpch_q22_prospects",
-    "dedup_exact_documents",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_components",
-    "dedup_simhash_fingerprints",
-    # -- 2. last driver green is round 3, registry order --
-    "span_dedup_documents",
-    "text_unigram_logprob",
-    "embedding_random_projection",
-    "stream_late_data_drop",
-    "stream_sliding_halfhour",
-    "stratified_split_documents",
-    "shard_assignment_documents",
-    "url_parse_battery",
-    "grouping_sets_mart",
-    "ntile_quartile_acctbal",
-    "text_token_diversity",
-    "cross_source_dup_matrix",
-    "split_drift_audit",
-    "window_frames_battery",
-    "mode_priority_per_segment",
-    "user_event_type_profile",
-    "winsorize_prices_by_flag",
-    "pandas_grouped_agg_median",
-    "maparrow_embedding_norms",
-    "observe_ingest_metrics",
-    "file_provenance_documents",
-    "zorder_clustering_locality",
-    "skew_audit_user_events",
-    "schema_drift_union_safe_math",
-    "mad_scrub_event_values",
-    "tpch_q12_late_priority",
-    "user_event_sequences",
-    "array_hof_battery",
-    "dedup_simhash_near_dups",
-    "knn_bruteforce_cosine",
-    "embedding_near_dup_pairs",
-    "ann_ivf_topk",
-    "embedding_lsh_near_dups",
-    "int8_ann_topk_claim",
-    "ivf_centroid_assign",
-    "decontaminate_test_split",
-    "bucketed_join_colocated",
-    "partitioned_scan_pruning",
-    "partition_overwrite_backfill",
-    "csv_roundtrip_orders",
-    "orc_roundtrip_lineitem",
-    "jsonl_roundtrip_events",
-    "csv_permissive_corrupt_rows",
-    "clustered_write_skipping",
-    "schema_evolution_merge",
-    "compaction_roundtrip",
-]
+WINDOW = 50
+FLAGSHIP = "flagship_star_fact"
+REPO = Path(__file__).resolve().parents[2]
+SNAPSHOT = REPO / "tools" / "oracle_hashes.json"
 
 
-# Green in CORRECTNESS_r07.json (round 7 window, 50/50): the flagship,
-# the round-7 addition (fillna_value_battery), the 10 r2-tail queries,
-# and the head of the r3-era staleness queue through
-# partitioned_scan_pruning.
-_R7_GREEN: list[str] = [
-    "flagship_star_fact",
-    "fillna_value_battery",
-    "tpch_q19_disjunctive_revenue",
-    "tpch_q20_promo_suppliers",
-    "tpch_q21_waiting_supplier",
-    "tpch_q2_cheapest_supplier",
-    "tpch_q22_prospects",
-    "dedup_exact_documents",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_components",
-    "dedup_simhash_fingerprints",
-    "span_dedup_documents",
-    "text_unigram_logprob",
-    "embedding_random_projection",
-    "stream_late_data_drop",
-    "stream_sliding_halfhour",
-    "stratified_split_documents",
-    "shard_assignment_documents",
-    "url_parse_battery",
-    "grouping_sets_mart",
-    "ntile_quartile_acctbal",
-    "text_token_diversity",
-    "cross_source_dup_matrix",
-    "split_drift_audit",
-    "window_frames_battery",
-    "mode_priority_per_segment",
-    "user_event_type_profile",
-    "winsorize_prices_by_flag",
-    "pandas_grouped_agg_median",
-    "maparrow_embedding_norms",
-    "observe_ingest_metrics",
-    "file_provenance_documents",
-    "zorder_clustering_locality",
-    "skew_audit_user_events",
-    "schema_drift_union_safe_math",
-    "mad_scrub_event_values",
-    "tpch_q12_late_priority",
-    "user_event_sequences",
-    "array_hof_battery",
-    "dedup_simhash_near_dups",
-    "knn_bruteforce_cosine",
-    "embedding_near_dup_pairs",
-    "ann_ivf_topk",
-    "embedding_lsh_near_dups",
-    "int8_ann_topk_claim",
-    "ivf_centroid_assign",
-    "decontaminate_test_split",
-    "bucketed_join_colocated",
-    "partitioned_scan_pruning",
-]
-
-# Round 8 re-verification, in priority order: tools/freshness.py's
-# staleness queue after round 7 — the 8 IO-battery queries whose last
-# driver row is round 3 (the round-7 verdict's named set), then every
-# round-4-era row oldest-first in registry order. The tail that misses
-# the window queues for round 9.
-_R8_RECHECK: list[str] = [
-    # -- 1. last driver green is round 3 (IO battery) --
-    "partition_overwrite_backfill",
-    "csv_roundtrip_orders",
-    "orc_roundtrip_lineitem",
-    "jsonl_roundtrip_events",
-    "csv_permissive_corrupt_rows",
-    "clustered_write_skipping",
-    "schema_evolution_merge",
-    "compaction_roundtrip",
-    # -- 2. last driver green is round 4, registry order --
-    "dedup_components_star",
-    "ann_pq_adc_topk",
-    "gopher_quality_gates",
-    "gopher_repetition_gates",
-    "text_char_entropy",
-    "retention_cohort_weekly",
-    "text_quality_stats",
-    "text_lang_id",
-    "text_token_counts",
-    "c4_clean_documents",
-    "text_tfidf_top_terms",
-    "text_heavy_hitters",
-    "text_pii_redact",
-    "doc_fingerprints",
-    "doc_rolling_hash",
-    "text_repeated_ngrams",
-    "chunk_documents_sliding",
-    "pandas_udf_quality_sigmoid",
-    "dense_ids_documents",
-    "pack_sequences_documents",
-    "multimodal_decode",
-    "multimodal_resize",
-    "multimodal_frame_sample",
-    "stream_tumbling_hourly",
-    "stream_stateful_user_stats",
-    "stream_upsert_idempotent",
-    "stream_sessionize",
-    "stream_interval_join",
-    "stream_static_enrich",
-    "sketch_mart_mergeable",
-    "approx_percentile_claim",
-    "remix_source_mixture",
-    "sample_orders_deterministic",
-    "quality_weighted_sample",
-    "per_source_sample",
-    "ivf_persisted_search",
-    "salted_join_events",
-    "semantic_dedup_kmeans",
-    "doc_containment_pairs",
-    "cogroup_click_purchase_profile",
-    "mom_revenue_growth",
-    "gap_fill_daily_revenue",
-    "null_semantics_battery",
-    "cube_segment_priority",
-    "cohort_intersect_except",
-    "grouped_zscore_chars",
-    "regression_chars_vs_tokens",
-    "kmeans_fit_centroids",
-    "ann_ivf_kmeans_recall",
-]
+def green(row: dict) -> bool:
+    """A driver row counts as green only on an explicit full match.
+    hash_match must be literally True: a missing key is a degraded row,
+    and counting it green would let a weaker check than the oracle
+    contract keep a query out of the window."""
+    return (
+        row.get("rows_match") is True
+        and row.get("schema_match") is True
+        and row.get("hash_match") is True
+    )
 
 
-# Green in CORRECTNESS_r08.json (round 8 window, 50/50): the flagship,
-# the five round-8 additions, the round-3 IO-battery tail, and the
-# head of the round-4-era staleness queue.
-_R8_GREEN: list[str] = [
-    "flagship_star_fact",
-    "png_pixel_decode_stats",
-    "ivfpq_structured_recall_audit",
-    "jpeg_pixel_decode_stats",
-    "audio_feature_stats",
-    "jpeg_color_decode_stats",
-    "partition_overwrite_backfill",
-    "csv_roundtrip_orders",
-    "orc_roundtrip_lineitem",
-    "jsonl_roundtrip_events",
-    "csv_permissive_corrupt_rows",
-    "clustered_write_skipping",
-    "schema_evolution_merge",
-    "compaction_roundtrip",
-    "dedup_components_star",
-    "ann_pq_adc_topk",
-    "gopher_quality_gates",
-    "gopher_repetition_gates",
-    "text_char_entropy",
-    "retention_cohort_weekly",
-    "text_quality_stats",
-    "text_lang_id",
-    "text_token_counts",
-    "c4_clean_documents",
-    "text_tfidf_top_terms",
-    "text_heavy_hitters",
-    "text_pii_redact",
-    "doc_fingerprints",
-    "doc_rolling_hash",
-    "text_repeated_ngrams",
-    "chunk_documents_sliding",
-    "pandas_udf_quality_sigmoid",
-    "dense_ids_documents",
-    "pack_sequences_documents",
-    "multimodal_decode",
-    "multimodal_resize",
-    "multimodal_frame_sample",
-    "stream_tumbling_hourly",
-    "stream_stateful_user_stats",
-    "stream_upsert_idempotent",
-    "stream_sessionize",
-    "stream_interval_join",
-    "stream_static_enrich",
-    "sketch_mart_mergeable",
-    "approx_percentile_claim",
-    "remix_source_mixture",
-    "sample_orders_deterministic",
-    "quality_weighted_sample",
-    "per_source_sample",
-    "ivf_persisted_search",
-]
+def driver_rounds(repo: Path = REPO) -> list[tuple[int, Path]]:
+    """``(round, path)`` for every driver row file, oldest first."""
+    found = (
+        (re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name), p)
+        for p in repo.glob("CORRECTNESS_r*.json")
+    )
+    return sorted((int(m.group(1)), p) for m, p in found if m)
 
 
-# Green in CORRECTNESS_r09.json (round 9: flagship + the 11 new/
-# rewritten media+BPE gates + the r4 tail + the r5-era head).
-_R9_GREEN: list[str] = [
-    "flagship_star_fact",
-    "multimodal_resize",
-    "multimodal_frame_sample",
-    "palette_png_decode_stats",
-    "jpeg_subsampled_decode_stats",
-    "jpeg_restart_decode_stats",
-    "audio_downsample_stats",
-    "jpeg_resize_stats",
-    "interlaced_png_decode_stats",
-    "jpeg_progressive_decode_stats",
-    "bpe_learned_merges",
-    "bpe_subword_counts",
-    "png16_decode_stats",
-    "salted_join_events",
-    "semantic_dedup_kmeans",
-    "doc_containment_pairs",
-    "cogroup_click_purchase_profile",
-    "mom_revenue_growth",
-    "gap_fill_daily_revenue",
-    "null_semantics_battery",
-    "cube_segment_priority",
-    "cohort_intersect_except",
-    "grouped_zscore_chars",
-    "regression_chars_vs_tokens",
-    "kmeans_fit_centroids",
-    "ann_ivf_kmeans_recall",
-    "approx_ntile_price_quartiles",
-    "incremental_dedup_components",
-    "incremental_dedup_survivors",
-    "pq_codebook_learned",
-    "ann_ivf_pq_topk",
-    "ann_ivf_pq_residual_topk",
-    "ivfpq_residual_recall_audit",
-    "ivf_incremental_append",
-    "embedding_pca_claim",
-    "heavy_hitters_sketch",
-    "sketch_overlap_yoy",
-    "ewma_customer_spend",
-    "anomaly_daily_revenue",
-    "rfm_customer_scores",
-    "basket_brand_affinity",
-    "event_transition_matrix",
-    "pareto_abc_brands",
-    "customer_order_gap_stats",
-    "dup_cluster_size_histogram",
-    "seasonality_month_index",
-    "new_vs_returning_revenue",
-    "sql_api_top_segment_customers",
-    "ivf_recall_audit",
-    "prepare_training_corpus",
-]
-
-# Round 9 re-verification, in priority order: tools/freshness.py's
-# staleness queue after round 8 — the 13 queries whose last driver
-# row is round 4 (the round-8 verdict's named set), then every
-# round-5-era row oldest-first in registry order. 13 + the r5 head
-# fit the ~44 spare slots, so a green round 9 leaves no registry row
-# older than round 5.
-_R9_RECHECK: list[str] = [
-    # -- 1. last driver green is round 4 (the round-8 window tail) --
-    "salted_join_events",
-    "semantic_dedup_kmeans",
-    "doc_containment_pairs",
-    "cogroup_click_purchase_profile",
-    "mom_revenue_growth",
-    "gap_fill_daily_revenue",
-    "null_semantics_battery",
-    "cube_segment_priority",
-    "cohort_intersect_except",
-    "grouped_zscore_chars",
-    "regression_chars_vs_tokens",
-    "kmeans_fit_centroids",
-    "ann_ivf_kmeans_recall",
-    # -- 2. last driver green is round 5, registry order --
-    "approx_ntile_price_quartiles",
-    "incremental_dedup_components",
-    "incremental_dedup_survivors",
-    "pq_codebook_learned",
-    "ann_ivf_pq_topk",
-    "ann_ivf_pq_residual_topk",
-    "ivfpq_residual_recall_audit",
-    "ivf_incremental_append",
-    "embedding_pca_claim",
-    "heavy_hitters_sketch",
-    "sketch_overlap_yoy",
-    "ewma_customer_spend",
-    "anomaly_daily_revenue",
-    "rfm_customer_scores",
-    "basket_brand_affinity",
-    "event_transition_matrix",
-    "pareto_abc_brands",
-    "customer_order_gap_stats",
-    "dup_cluster_size_histogram",
-    "seasonality_month_index",
-    "new_vs_returning_revenue",
-    "sql_api_top_segment_customers",
-    "ivf_recall_audit",
-    "prepare_training_corpus",
-    "mart_per_month",
-    "mart_per_segment",
-    "mart_types_per_segment",
-    "pivot_priority_by_year",
-    "dim_collapse_first",
-    "scd_latest_order",
-    "scd2_customer_priority",
-    "scd2_point_in_time_join",
-    "incremental_mart_update",
-    "topk_parts_per_brand",
-    "join_enrich_brand_revenue",
-    "join_composite_customer_year",
-    "incremental_new_orders",
-    "dq_referential_integrity",
-    "dq_profile_customer",
-    "hash_surrogate_keys",
-    "dim_region_sentinel",
-    "date_spine_orders",
-    "bucketize_acctbal",
-    "zscore_scrub_prices",
-    "try_cast_dirty_ingest",
-    "string_function_battery",
-    "unpivot_priority_measures",
-    "percentile_prices_by_flag",
-    "rollup_priority_year",
-]
-
-# Round 10 re-verification, in priority order: tools/freshness.py's
-# mechanical staleness queue after round 9 — the 25 queries whose last
-# driver row is round 5 (marts, SCD battery, DQ checks,
-# hash_surrogate_keys, topk_parts_per_brand, composite joins — the
-# round-9 verdict's named set), then every round-6-era row
-# oldest-first in registry order. 25 + the r6 head fit the ~47 spare
-# slots, so a green round 10 leaves NO registry row older than
-# round 6 — the round-9 verdict's stated goal.
-_R10_RECHECK: list[str] = [
-    "mart_per_month",
-    "mart_per_segment",
-    "mart_types_per_segment",
-    "pivot_priority_by_year",
-    "dim_collapse_first",
-    "scd_latest_order",
-    "scd2_customer_priority",
-    "scd2_point_in_time_join",
-    "incremental_mart_update",
-    "topk_parts_per_brand",
-    "join_enrich_brand_revenue",
-    "join_composite_customer_year",
-    "incremental_new_orders",
-    "dq_referential_integrity",
-    "dq_profile_customer",
-    "hash_surrogate_keys",
-    "dim_region_sentinel",
-    "date_spine_orders",
-    "bucketize_acctbal",
-    "zscore_scrub_prices",
-    "try_cast_dirty_ingest",
-    "string_function_battery",
-    "unpivot_priority_measures",
-    "percentile_prices_by_flag",
-    "rollup_priority_year",
-    "history_length_audit",
-    "io_contract_battery",
-    "asof_nearest_purchase",
-    "interval_join_purchase_clicks",
-    "funnel_view_click_purchase",
-    "sessionize_events",
-    "tumbling_hourly_events",
-    "sliding_window_events",
-    "salted_agg_events",
-    "json_extract_events",
-    "variant_shred_events",
-    "map_explode_props",
-    "asof_backward_last_click",
-    "stream_dedup_events",
-    "stream_dedup_jittered",
-    "window_battery_customer_orders",
-    "window_trailing_30d",
-    "histogram_order_prices",
-    "tpch_q1_pricing_summary",
-    "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q4_order_priority",
-    "tpch_q6_forecast_revenue",
-    "tpch_q13_customer_distribution",
-    "tpch_q16_supplier_variety",
-    "tpch_q18_large_volume",
-    "approx_distinct_segments",
-    "cdc_merge_orders",
-    "reconcile_order_snapshots",
-    "bloom_semijoin_revenue",
-    "dedup_keep_canonical",
-    "remix_token_budget",
-    "text_bigram_novelty",
-    "text_vocab_oov",
-    "near_dup_recall_audit",
-]
+def load_last_green(repo: Path = REPO) -> dict[str, int]:
+    """``{name: rank}``: the round of the query's latest driver row if
+    that row is green, 0 if it is red."""
+    rank: dict[str, int] = {}
+    for rnd, path in driver_rounds(repo):
+        for name, row in json.loads(path.read_text()).items():
+            rank[name] = rnd if green(row) else 0
+    return rank
 
 
-def _dedupe_keep_last(names: list[str]) -> list[str]:
-    """Dedupe preserving each name's LAST occurrence, so concatenated
-    round blocks order by most-recent green round (stalest first) —
-    a name re-greened in a later round must NOT keep its stale earlier
-    position (round-7 ADVICE)."""
-    seen: set[str] = set()
-    out: list[str] = []
-    for n in reversed(names):
-        if n not in seen:
-            seen.add(n)
-            out.append(n)
-    return out[::-1]
+def load_snapshot(path: Path = SNAPSHOT) -> dict[str, str]:
+    return json.loads(path.read_text()) if path.exists() else {}
 
 
-# Round 10's driver-green window, verbatim from CORRECTNESS_r10.json
-# (50/50): flagship + the 12 new media/crawl gates + the r5-era
-# recheck block + the r6 head.
-_R10_GREEN: list[str] = [
-    "flagship_star_fact",
-    "jpeg_progressive_restart_stats",
-    "resize_png16_stats",
-    "jpeg12_decode_stats",
-    "jpeg_411_decode_stats",
-    "jpeg_lossless_decode_stats",
-    "gif_decode_stats",
-    "g711_decode_stats",
-    "bmp_decode_stats",
-    "warc_parse_stats",
-    "html_text_extract",
-    "tiff_decode_stats",
-    "media_poison_battery",
-    "mart_per_month",
-    "mart_per_segment",
-    "mart_types_per_segment",
-    "pivot_priority_by_year",
-    "dim_collapse_first",
-    "scd_latest_order",
-    "scd2_customer_priority",
-    "scd2_point_in_time_join",
-    "incremental_mart_update",
-    "topk_parts_per_brand",
-    "join_enrich_brand_revenue",
-    "join_composite_customer_year",
-    "incremental_new_orders",
-    "dq_referential_integrity",
-    "dq_profile_customer",
-    "hash_surrogate_keys",
-    "dim_region_sentinel",
-    "date_spine_orders",
-    "bucketize_acctbal",
-    "zscore_scrub_prices",
-    "try_cast_dirty_ingest",
-    "string_function_battery",
-    "unpivot_priority_measures",
-    "percentile_prices_by_flag",
-    "rollup_priority_year",
-    "history_length_audit",
-    "io_contract_battery",
-    "asof_nearest_purchase",
-    "interval_join_purchase_clicks",
-    "funnel_view_click_purchase",
-    "sessionize_events",
-    "tumbling_hourly_events",
-    "sliding_window_events",
-    "salted_agg_events",
-    "json_extract_events",
-    "variant_shred_events",
-    "map_explode_props",
-]
-
-# Round 11 re-verification, in priority order: tools/freshness.py's
-# staleness queue after round 10 — the 37 queries whose last driver
-# row is round 6 (TPC-H core, the stream-dedup pair, window batteries,
-# CDC/reconcile, bloom semijoin, text gates, DPP/XML/datasource — the
-# round-10 verdict's named set), then the r7 head oldest-first. 37 + 7
-# fill the 44 slots left by flagship + ORACLE_FIXED (3) +
-# UNCHECKED_PRIORITY (2), so a green round 11 leaves NO registry row
-# older than round 7. (The third/fourth/fifth new gates displaced the
-# last three r7 fills — tpch_q2_cheapest_supplier, tpch_q22_prospects,
-# dedup_exact_documents — all still r7-fresh, front of the r12 queue.)
-_R11_RECHECK: list[str] = [
-    "asof_backward_last_click",
-    "stream_dedup_events",
-    "stream_dedup_jittered",
-    "window_battery_customer_orders",
-    "window_trailing_30d",
-    "histogram_order_prices",
-    "tpch_q1_pricing_summary",
-    "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q4_order_priority",
-    "tpch_q6_forecast_revenue",
-    "tpch_q13_customer_distribution",
-    "tpch_q16_supplier_variety",
-    "tpch_q18_large_volume",
-    "approx_distinct_segments",
-    "cdc_merge_orders",
-    "reconcile_order_snapshots",
-    "bloom_semijoin_revenue",
-    "dedup_keep_canonical",
-    "remix_token_budget",
-    "text_bigram_novelty",
-    "text_vocab_oov",
-    "near_dup_recall_audit",
-    "semantic_dedup_keep",
-    "text_sentences_udtf",
-    "text_readability_stats",
-    "dpp_partitioned_fact_join",
-    "xml_roundtrip_part",
-    "python_datasource_weekday_orders",
-    "tpch_q7_nation_volume",
-    "tpch_q8_market_share",
-    "tpch_q9_product_profit",
-    "tpch_q10_returned_items",
-    "tpch_q11_important_parts",
-    "tpch_q14_promo_effect",
-    "tpch_q15_top_supplier",
-    "tpch_q17_small_qty_revenue",
-    # r7 head (freshness order) — fills the window to exactly 50
-    "fillna_value_battery",
-    "tpch_q19_disjunctive_revenue",
-    "tpch_q20_promo_suppliers",
-    "tpch_q21_waiting_supplier",
-]
-
-# Round 11's driver window, 50/50 green (CORRECTNESS_r11): the three
-# r11 oracle-fixed rows, the nine r11-new gates, and the 37 stale
-# rechecks that fit after displacement (tpch_q15/q17 and the four
-# trailing r7 fills fell outside the 50 cut — tools/freshness.py keeps
-# them in the r7 queue below).
-_R11_GREEN: list[str] = [
-    "tiff_decode_stats",
-    "jpeg_progressive_restart_stats",
-    "html_text_extract",
-    "warc_poison_battery",
-    "crawl_to_corpus",
-    "tiff_palette_decode_stats",
-    "line_dedup_boilerplate",
-    "tiff_tiled_decode_stats",
-    "adpcm_decode_stats",
-    "flac_decode_stats",
-    "jpeg_311_decode_stats",
-    "jpeg12_progressive_stats",
-    "asof_backward_last_click",
-    "stream_dedup_events",
-    "stream_dedup_jittered",
-    "window_battery_customer_orders",
-    "window_trailing_30d",
-    "histogram_order_prices",
-    "tpch_q1_pricing_summary",
-    "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q4_order_priority",
-    "tpch_q6_forecast_revenue",
-    "tpch_q13_customer_distribution",
-    "tpch_q16_supplier_variety",
-    "tpch_q18_large_volume",
-    "approx_distinct_segments",
-    "cdc_merge_orders",
-    "reconcile_order_snapshots",
-    "bloom_semijoin_revenue",
-    "dedup_keep_canonical",
-    "remix_token_budget",
-    "text_bigram_novelty",
-    "text_vocab_oov",
-    "near_dup_recall_audit",
-    "semantic_dedup_keep",
-    "text_sentences_udtf",
-    "text_readability_stats",
-    "dpp_partitioned_fact_join",
-    "xml_roundtrip_part",
-    "python_datasource_weekday_orders",
-    "tpch_q7_nation_volume",
-    "tpch_q8_market_share",
-    "tpch_q9_product_profit",
-    "tpch_q10_returned_items",
-    "tpch_q11_important_parts",
-    "tpch_q14_promo_effect",
-    "tpch_q15_top_supplier",
-    "tpch_q17_small_qty_revenue",
-]
-
-# Round 12 re-verification, in priority order: tools/freshness.py's
-# staleness queue after round 11 — the 49 rows whose last driver row
-# is round 7, oldest-first exactly as the tool prints them. 46 fit
-# the 50-slot window after flagship + 1 oracle-fixed + 2 new gates;
-# the last three (decontaminate_test_split, bucketed_join_colocated,
-# partitioned_scan_pruning) spill to the front of the r13 queue.
-_R12_RECHECK: list[str] = [
-    "fillna_value_battery",
-    "tpch_q19_disjunctive_revenue",
-    "tpch_q20_promo_suppliers",
-    "tpch_q21_waiting_supplier",
-    "tpch_q2_cheapest_supplier",
-    "tpch_q22_prospects",
-    "dedup_exact_documents",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_components",
-    "dedup_simhash_fingerprints",
-    "span_dedup_documents",
-    "text_unigram_logprob",
-    "embedding_random_projection",
-    "stream_late_data_drop",
-    "stream_sliding_halfhour",
-    "stratified_split_documents",
-    "shard_assignment_documents",
-    "url_parse_battery",
-    "grouping_sets_mart",
-    "ntile_quartile_acctbal",
-    "text_token_diversity",
-    "cross_source_dup_matrix",
-    "split_drift_audit",
-    "window_frames_battery",
-    "mode_priority_per_segment",
-    "user_event_type_profile",
-    "winsorize_prices_by_flag",
-    "pandas_grouped_agg_median",
-    "maparrow_embedding_norms",
-    "observe_ingest_metrics",
-    "file_provenance_documents",
-    "zorder_clustering_locality",
-    "skew_audit_user_events",
-    "schema_drift_union_safe_math",
-    "mad_scrub_event_values",
-    "tpch_q12_late_priority",
-    "user_event_sequences",
-    "array_hof_battery",
-    "dedup_simhash_near_dups",
-    "knn_bruteforce_cosine",
-    "embedding_near_dup_pairs",
-    "ann_ivf_topk",
-    "embedding_lsh_near_dups",
-    "int8_ann_topk_claim",
-    "ivf_centroid_assign",
-]
-
-# Round 12's driver window, 50/50 green (CORRECTNESS_r12): flagship,
-# the oracle-fixed eight-format poison battery, the two r12 gates, and
-# the 46 r7-era stale rechecks that fit the window.
-_R12_GREEN: list[str] = [
-    "flagship_star_fact",
-    "media_poison_battery",
-    "salted_collect_users",
-    "flac_stereo_decode_stats",
-] + _R12_RECHECK
-
-# Round 13 re-verification, in priority order: the three r7-era rows
-# displaced from the r12 window, then the r8 tail oldest-first exactly
-# as tools/freshness.py prints it. clustered_write_skipping is NOT
-# here — its oracle changed this round (bloom point-lookup leg), so it
-# rides ORACLE_FIXED instead. 1 flagship + 1 oracle-fixed + 2 new gates
-# (dedup_edit_distance_pairs, stream_interval_join_outer) + these 49:
-# the last three rows (quality_weighted_sample, per_source_sample,
-# ivf_persisted_search) spill past the 50-slot cut to the front of the
-# r14 queue.
-_R13_RECHECK: list[str] = [
-    "decontaminate_test_split",
-    "bucketed_join_colocated",
-    "partitioned_scan_pruning",
-    "png_pixel_decode_stats",
-    "ivfpq_structured_recall_audit",
-    "jpeg_pixel_decode_stats",
-    "audio_feature_stats",
-    "jpeg_color_decode_stats",
-    "partition_overwrite_backfill",
-    "csv_roundtrip_orders",
-    "orc_roundtrip_lineitem",
-    "jsonl_roundtrip_events",
-    "csv_permissive_corrupt_rows",
-    "schema_evolution_merge",
-    "compaction_roundtrip",
-    "dedup_components_star",
-    "ann_pq_adc_topk",
-    "gopher_quality_gates",
-    "gopher_repetition_gates",
-    "text_char_entropy",
-    "retention_cohort_weekly",
-    "text_quality_stats",
-    "text_lang_id",
-    "text_token_counts",
-    "c4_clean_documents",
-    "text_tfidf_top_terms",
-    "text_heavy_hitters",
-    "text_pii_redact",
-    "doc_fingerprints",
-    "doc_rolling_hash",
-    "text_repeated_ngrams",
-    "chunk_documents_sliding",
-    "pandas_udf_quality_sigmoid",
-    "dense_ids_documents",
-    "pack_sequences_documents",
-    "multimodal_decode",
-    "stream_tumbling_hourly",
-    "stream_stateful_user_stats",
-    "stream_upsert_idempotent",
-    "stream_sessionize",
-    "stream_interval_join",
-    "stream_static_enrich",
-    "sketch_mart_mergeable",
-    "approx_percentile_claim",
-    "remix_source_mixture",
-    "sample_orders_deterministic",
-    "quality_weighted_sample",
-    "per_source_sample",
-    "ivf_persisted_search",
-]
-
-# Round 13's driver window, 50/50 green (CORRECTNESS_r13): flagship,
-# the oracle-fixed clustered_write_skipping, the two r13 gates, and
-# the 46 rechecks that fit before the 50-slot cut.
-_R13_GREEN: list[str] = [
-    "flagship_star_fact",
-    "clustered_write_skipping",
-    "dedup_edit_distance_pairs",
-    "stream_interval_join_outer",
-    "decontaminate_test_split",
-    "bucketed_join_colocated",
-    "partitioned_scan_pruning",
-    "png_pixel_decode_stats",
-    "ivfpq_structured_recall_audit",
-    "jpeg_pixel_decode_stats",
-    "audio_feature_stats",
-    "jpeg_color_decode_stats",
-    "partition_overwrite_backfill",
-    "csv_roundtrip_orders",
-    "orc_roundtrip_lineitem",
-    "jsonl_roundtrip_events",
-    "csv_permissive_corrupt_rows",
-    "schema_evolution_merge",
-    "compaction_roundtrip",
-    "dedup_components_star",
-    "ann_pq_adc_topk",
-    "gopher_quality_gates",
-    "gopher_repetition_gates",
-    "text_char_entropy",
-    "retention_cohort_weekly",
-    "text_quality_stats",
-    "text_lang_id",
-    "text_token_counts",
-    "c4_clean_documents",
-    "text_tfidf_top_terms",
-    "text_heavy_hitters",
-    "text_pii_redact",
-    "doc_fingerprints",
-    "doc_rolling_hash",
-    "text_repeated_ngrams",
-    "chunk_documents_sliding",
-    "pandas_udf_quality_sigmoid",
-    "dense_ids_documents",
-    "pack_sequences_documents",
-    "multimodal_decode",
-    "stream_tumbling_hourly",
-    "stream_stateful_user_stats",
-    "stream_upsert_idempotent",
-    "stream_sessionize",
-    "stream_interval_join",
-    "stream_static_enrich",
-    "sketch_mart_mergeable",
-    "approx_percentile_claim",
-    "remix_source_mixture",
-    "sample_orders_deterministic",
-]
-
-# Round 14 re-verification, in priority order: the three r8-era rows
-# displaced from the r13 window, then the whole r9 tail oldest-first
-# exactly as tools/freshness.py prints it. dedup_edit_distance_pairs
-# (ASCII-fold, ADVICE r13 medium), adpcm_decode_stats (MS ADPCM leg)
-# and text_unigram_logprob (interpolated-bigram upgrade) are NOT here
-# — their oracles changed this round, so they ride ORACLE_FIXED.
-# 1 flagship + 6 oracle-fixed (the three above + the frame-sample
-# AVI-leg upgrade and the round-14c legs on audio_downsample_stats
-# (VAD) and multimodal_resize (CenterCrop), all of which were already
-# in this queue) + 3 new gates (avi_mjpeg_decode_stats,
-# training_order_shuffle, image_ahash_dedup) + 40 recheck slots over
-# the 49 still-eligible rows below (multimodal_frame_sample,
-# audio_downsample_stats and multimodal_resize ride ORACLE_FIXED);
-# the last 9 spill past the 50-slot cut to the front of the r15 queue.
-_R14_RECHECK: list[str] = [
-    "quality_weighted_sample",
-    "per_source_sample",
-    "ivf_persisted_search",
-    "multimodal_frame_sample",
-    "palette_png_decode_stats",
-    "jpeg_subsampled_decode_stats",
-    "jpeg_restart_decode_stats",
-    "jpeg_resize_stats",
-    "interlaced_png_decode_stats",
-    "jpeg_progressive_decode_stats",
-    "bpe_learned_merges",
-    "bpe_subword_counts",
-    "png16_decode_stats",
-    "salted_join_events",
-    "semantic_dedup_kmeans",
-    "doc_containment_pairs",
-    "cogroup_click_purchase_profile",
-    "mom_revenue_growth",
-    "gap_fill_daily_revenue",
-    "null_semantics_battery",
-    "cube_segment_priority",
-    "cohort_intersect_except",
-    "grouped_zscore_chars",
-    "regression_chars_vs_tokens",
-    "kmeans_fit_centroids",
-    "ann_ivf_kmeans_recall",
-    "approx_ntile_price_quartiles",
-    "incremental_dedup_components",
-    "incremental_dedup_survivors",
-    "pq_codebook_learned",
-    "ann_ivf_pq_topk",
-    "ann_ivf_pq_residual_topk",
-    "ivfpq_residual_recall_audit",
-    "ivf_incremental_append",
-    "embedding_pca_claim",
-    "heavy_hitters_sketch",
-    "sketch_overlap_yoy",
-    "ewma_customer_spend",
-    "anomaly_daily_revenue",
-    "rfm_customer_scores",
-    "basket_brand_affinity",
-    "event_transition_matrix",
-    "pareto_abc_brands",
-    "customer_order_gap_stats",
-    "dup_cluster_size_histogram",
-    "seasonality_month_index",
-    "new_vs_returning_revenue",
-    "sql_api_top_segment_customers",
-    "ivf_recall_audit",
-    "prepare_training_corpus",
-]
-
-_ALL_GREEN: list[str] = _dedupe_keep_last(
-    _R1_GREEN
-    + _R2_GREEN
-    + _R3_GREEN
-    + _R4_GREEN
-    + _R5_GREEN
-    + _R6_GREEN
-    + _R7_GREEN
-    + _R8_GREEN
-    + _R9_GREEN
-    + _R10_GREEN
-    + _R11_GREEN
-    + _R12_GREEN
-    + _R13_GREEN
-)
-
-# Changed-oracle re-checks (the historically riskiest class), round 14
-# — three consolidations, zero registry growth among them:
-# dedup_edit_distance_pairs folds every non-ASCII codepoint to '?'
-# BEFORE the prefix cut on both sides (ADVICE r13 medium: DuckDB
-# levenshtein is byte-based, Spark's codepoint-based — they only
-# provably agree on pure ASCII); adpcm_decode_stats grew the MS ADPCM
-# (fmt 2) leg with its own recursive-CTE state machine (HUGEINT
-# delta); text_unigram_logprob upgraded from the unigram proxy to an
-# interpolated bigram LM trained on a held slice (verdict r13 item 8).
-# tools/rotation_check.py verifies the changed-hash set mechanically
-# against tools/oracle_hashes.json.
-ORACLE_FIXED: list[str] = [
-    "dedup_edit_distance_pairs",
-    "adpcm_decode_stats",
-    "text_unigram_logprob",
-    # frame sampling gained the REAL AVI leg (every-Nth MJPEG frame,
-    # decode-only-kept) — it was already in this round's recheck
-    # window (r9 freshness tail), so riding ORACLE_FIXED instead
-    # costs zero extra slots
-    "multimodal_frame_sample",
-    # round 14c: the downsample gate grew the VAD leg
-    # (vad_segment_counts — silence/segment stats over the
-    # full-resolution samples); it was already a window spare this
-    # round, so the move costs zero extra slots
-    "audio_downsample_stats",
-    # round 14c: the resize gate grew the CenterCrop audit leg
-    # (center_crop_stats); also already a window spare this round
-    "multimodal_resize",
-]
-
-VERIFIED_GREEN: list[str] = [
-    n
-    for n in _R14_RECHECK + [m for m in _ALL_GREEN if m not in set(_R14_RECHECK)]
-    if n not in set(ORACLE_FIXED)
-]
-
-# Never-driver-checked queries: round 14's three new registry rows
-# (budget ≤3, spent exactly; MS ADPCM, the bigram LM and the
-# AVI-frame-sample leg consolidated into existing
-# gates above, costing no registry growth). (reorder()'s new-query
-# branch still fronts anything not yet listed anywhere, so a query
-# added mid-round is window-checked the same round even before it
-# lands here.)
-UNCHECKED_PRIORITY: list[str] = [
-    "avi_mjpeg_decode_stats",  # r14: AVI/MJPEG container walk (video)
-    "training_order_shuffle",  # r14: seeded epoch-order shuffle
-    "image_ahash_dedup",       # r14: perceptual-hash image dedup
-]
-
-# Round-15 queue: the 9 r9-era rows the 50-slot window cuts this
-# round (ivf_recall_audit, prepare_training_corpus, and the 7 before
-# them in _R14_RECHECK order), then the r10 tail oldest-first
-# (resize_png16_stats, jpeg12_decode_stats, jpeg_411_decode_stats,
-# ... — run tools/freshness.py first, as always).
+def oracle_hashes(registry: dict) -> dict[str, str]:
+    return {
+        name: hashlib.sha256(spec.oracle.encode()).hexdigest()
+        for name, spec in registry.items()
+        if spec.oracle
+    }
 
 
-def reorder(registry: dict) -> dict:
-    """Return the registry reordered for this round's CORRECTNESS window.
+def changed_oracles(registry: dict, snapshot: dict[str, str]) -> list[str]:
+    """Queries whose oracle text differs from (or is missing in) the
+    snapshot, in registry order."""
+    return [n for n, h in oracle_hashes(registry).items() if snapshot.get(n) != h]
 
-    Order: flagship first (the entry() query must have a green row),
-    then anything new that no list mentions yet (new queries added
-    mid-round land right after the flagship block so they get checked
-    the same round they ship), then ORACLE_FIXED, then
-    UNCHECKED_PRIORITY, then previously-green queries.
+
+def reorder(registry: dict, last_green: dict[str, int], snapshot: dict[str, str]) -> dict:
+    """Return the registry in CORRECTNESS-window order:
+
+    1. the flagship (the ``entry()`` query);
+    2. queries whose latest driver row is red or that have none;
+    3. queries whose oracle text changed since the snapshot;
+    4. everything else, stalest last-green round first.
+
+    Ties keep the order ``registry`` arrives in (the sort is stable).
     """
-    front: list[str] = ["flagship_star_fact"]
-    listed = set(front)
-    for name in registry:
-        if name not in listed and name not in set(
-            ORACLE_FIXED + UNCHECKED_PRIORITY + VERIFIED_GREEN
-        ):
-            front.append(name)  # brand-new query: check it this round
-            listed.add(name)
-    for block in (ORACLE_FIXED, UNCHECKED_PRIORITY, VERIFIED_GREEN):
-        for name in block:
-            if name in registry and name not in listed:
-                front.append(name)
-                listed.add(name)
-    missing = [n for n in registry if n not in listed]  # defensive
-    ordered = front + missing
-    return {name: registry[name] for name in ordered if name in registry}
+    changed = set(changed_oracles(registry, snapshot))
+
+    def key(name: str) -> tuple[int, int]:
+        rank = last_green.get(name, 0)
+        if name == FLAGSHIP:
+            return (1, 0)
+        if rank == 0:
+            return (2, 0)
+        return (3, 0) if name in changed else (4, rank)
+
+    return {name: registry[name] for name in sorted(registry, key=key)}

@@ -1992,8 +1992,8 @@ def test_warc_poison_mixed(spark):
     """WARC robustness (round 11): identity vs gzip sniff, the full
     record-type spread (warcinfo content is the body — no HTTP split;
     metadata may be zero-length), and poison rows (truncated gzip
-    member, non-WARC bytes) landing as parsed=false instead of a
-    stage kill."""
+    member, non-WARC bytes, a NULL payload) landing as parsed=false
+    instead of a stage kill."""
     from lfb_data_warehouse_spark.operators.multimodal import (
         WARC_INFO_PAYLOAD,
         parse_warc_poison_stats,
@@ -2002,7 +2002,9 @@ def test_warc_poison_mixed(spark):
 
     # doc ids covering all four kinds: 8%4=0, 13%4=1, 6%4=2, 19%4=3
     docs = spark.createDataFrame([(8,), (13,), (6,), (19,)], "doc_id long")
-    rows = parse_warc_poison_stats(synthesize_warc_mixed(docs, "doc_id")).collect()
+    null = spark.createDataFrame([(99, None)], "doc_id long, payload binary")
+    media = synthesize_warc_mixed(docs, "doc_id").unionByName(null)
+    rows = parse_warc_poison_stats(media).collect()
     by_doc = {}
     for r in rows:
         by_doc.setdefault(r["doc_id"], []).append(r)
@@ -2019,7 +2021,7 @@ def test_warc_poison_mixed(spark):
     assert not ident[0]["gzipped"]
     k = 3 * 13 % 50 + 10
     assert ident[0]["body_chars"] == k + 2
-    for poison_doc in (6, 19):
+    for poison_doc in (6, 19, 99):  # 99: NULL payload
         (p,) = by_doc[poison_doc]
         assert p["parsed"] is False and p["warc_type"] is None
         assert p["body_sum"] is None and p["gzipped"] is None
@@ -4319,8 +4321,9 @@ def test_flac_deep_bit_depths():
 def test_mixed_media_eight_format_dispatch(spark):
     """The round-12 battery rotation covers every sniffable container
     in ONE pass: all eight media types decode next to both poison
-    variants (magic stomp, truncate-to-8) without killing the stage,
-    and per-type row counts match the (d//2)%8 selector."""
+    variants (magic stomp, truncate-to-8) and a NULL payload without
+    killing the stage, and per-type row counts match the (d//2)%8
+    selector."""
     from pyspark.sql import functions as F
 
     from lfb_data_warehouse_spark.operators.multimodal import (
@@ -4329,9 +4332,13 @@ def test_mixed_media_eight_format_dispatch(spark):
     )
 
     docs = spark.range(0, 256).select(F.col("id").alias("doc_id"))
-    out = decode_media_poison_stats(synthesize_mixed_media(docs, "doc_id"))
-    rows = {r["doc_id"]: r for r in out.collect()}
-    assert len(rows) == 256
+    null = spark.createDataFrame([(256, None)], "doc_id long, payload binary")
+    media = synthesize_mixed_media(docs, "doc_id").unionByName(null)
+    rows = {r["doc_id"]: r for r in decode_media_poison_stats(media).collect()}
+    assert len(rows) == 257
+    # a NULL payload is one more undecodable row, not a TypeError
+    nr = rows.pop(256)
+    assert nr["decoded"] is False and nr["media_type"] is None
     types = {}
     for d, r in rows.items():
         if d % 2 == 1:

@@ -986,18 +986,19 @@ def test_semdedup_mega_cluster_guard_routes_and_matches(spark):
 
 def test_lloyd_round_arrow_equals_hof_formulation(spark):
     """The r15 fused Arrow Lloyd round must return EXACTLY the centroid
-    set of the HOF formulation it replaced (ivf_index_from_cents +
-    label_centroids), including: a bit-exact cosine TIE between two
-    centroids (one is the other doubled — scaling by a power of two is
-    IEEE-exact, so scores match bitwise and the smaller label must win
-    on both sides), a zero-norm vector (scores 0.0 everywhere → falls
+    set of an independent crossJoin + min_by assignment followed by
+    label_centroids (neither touches the Arrow kernel), including: a
+    bit-exact cosine TIE between two centroids (one is the other
+    doubled — scaling by a power of two is IEEE-exact, so scores match
+    bitwise and the smaller label must win on both sides), a zero-norm vector (scores 0.0 everywhere → falls
     to the smallest label), a zero-norm centroid (never wins a member
     with positive scores), a centroid that loses every member (must
     DISAPPEAR from the output on both sides), negative components, and
     arbitrary input partitioning."""
     from lfb_data_warehouse_spark.operators.similarity import (
+        _cosine,
+        _dot,
         _lloyd_round,
-        ivf_index_from_cents,
         label_centroids,
     )
 
@@ -1026,14 +1027,18 @@ def test_lloyd_round_arrow_equals_hof_formulation(spark):
         r["centroid_label"]: (list(r["cq"]), r["cnorm"])
         for r in _lloyd_round(q, cents.collect(), "vec_id", 3)
     }
-    # reference: the pre-r15 HOF round, verbatim
-    assigned = ivf_index_from_cents(q, cents, "vec_id")
-    ql = assigned.select(
-        F.col("neighbor_id").alias("vec_id"),
-        F.col("assigned_label"),
-        F.col("nq").alias("q"),
-        F.col("nn").alias("norm"),
+    # reference: every (vector, centroid) pair scored by the JVM
+    # cosine; per vector the highest score wins and an exact tie goes
+    # to the smallest label (min_by over (-score, label))
+    scored = q.crossJoin(cents).withColumn(
+        "score", _cosine(_dot(F.col("q"), F.col("cq")), F.col("norm"), F.col("cnorm"))
     )
+    nearest = scored.groupBy("vec_id").agg(
+        F.min_by(
+            "centroid_label", F.struct(-F.col("score"), F.col("centroid_label"))
+        ).alias("assigned_label")
+    )
+    ql = q.join(nearest, "vec_id")
     exp = {
         r["centroid_label"]: (list(r["cq"]), r["cnorm"])
         for r in label_centroids(

@@ -1,34 +1,32 @@
-"""Validate the CORRECTNESS-rotation window (plans/rotation.py).
+"""Report and check the derived CORRECTNESS window (plans/rotation.py).
 
-Run after ANY registry or rotation edit. Checks the invariants the
-round goal depends on:
+The driver oracle-checks the first ``rotation.WINDOW`` registry entries
+each round; ``rotation.reorder`` derives that order from the committed
+CORRECTNESS_r<N>.json rows and tools/oracle_hashes.json. This tool
+prints:
 
-1. every registry name appears in exactly one rotation list (or is the
-   flagship) — an unlisted query silently jumps the queue and evicts a
-   window slot;
-2. every UNCHECKED_PRIORITY entry lands inside the 50-slot window —
-   if not, the round will end with never-driver-checked queries;
-3. no rotation list names a query that no longer exists (stale entries
-   make the derived ordering lie);
-4. ORACLE-TEXT DRIFT (VERDICT r4 item 6): every query whose oracle SQL
-   differs from the committed snapshot (tools/oracle_hashes.json) must
-   sit inside the window — edits to shared oracle CTEs are the
-   historically riskiest change class (the round-4 kmeans seeding CTE),
-   and a changed-oracle query outside the window would ship
-   driver-unverified. Run with --update-hashes AFTER the rotation is
-   positioned to re-snapshot (the manifest then records exactly what
-   the coming driver round will verify).
+1. the last-green histogram over registry queries, the never-green
+   names, and driver rows whose query is no longer registered;
+2. the queries whose oracle text changed since the snapshot;
+3. the derived window, each entry with its last-green round.
 
-Prints the window composition and exits non-zero on any violation.
+It exits non-zero if a never-green, red or changed-oracle query falls
+outside the window (more of them than the window holds).
 
-Usage: python tools/rotation_check.py [window_size] [--update-hashes]
+--update-hashes re-snapshots tools/oracle_hashes.json. Run it after a
+driver round's CORRECTNESS_r<N>.json is committed. It refuses while any
+changed-oracle query has no green row in the newest round: the new
+snapshot would move that oracle out of the window before the driver
+has verified it.
+
+Usage: python tools/rotation_check.py [--update-hashes]
 """
 
 from __future__ import annotations
 
-import hashlib
 import json
 import sys
+from collections import Counter
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -38,105 +36,46 @@ from lfb_data_warehouse_spark.plans import REGISTRY  # noqa: E402
 from lfb_data_warehouse_spark.plans import rotation as rot  # noqa: E402
 
 
-MANIFEST = Path(__file__).resolve().parent / "oracle_hashes.json"
-
-
-def oracle_hashes() -> dict[str, str]:
-    return {
-        name: hashlib.sha256(spec.oracle.encode()).hexdigest()
-        for name, spec in REGISTRY.items()
-        if spec.oracle
-    }
-
-
 def main() -> int:
-    args = [a for a in sys.argv[1:] if a != "--update-hashes"]
-    update = "--update-hashes" in sys.argv[1:]
-    window_size = int(args[0]) if args else 50
-    names = list(REGISTRY)
-    window = names[:window_size]
-    listed = set(rot.VERIFIED_GREEN) | set(rot.ORACLE_FIXED) | set(
-        rot.UNCHECKED_PRIORITY
-    ) | {"flagship_star_fact"}
+    last = rot.load_last_green()
+    snapshot = rot.load_snapshot()
+    changed = rot.changed_oracles(REGISTRY, snapshot)
+    window = list(rot.reorder(REGISTRY, last, snapshot))[: rot.WINDOW]
+    rounds = rot.driver_rounds()
     problems: list[str] = []
 
-    unlisted = [n for n in names if n not in listed]
-    if unlisted:
-        problems.append(f"registry names in NO rotation list (queue-jumpers): {unlisted}")
-    stale = [n for n in listed if n not in REGISTRY]
-    if stale:
-        problems.append(f"rotation entries not in the registry (stale): {stale}")
-    dupes = [
-        n
-        for n in listed
-        if sum(
-            n in block
-            for block in (rot.VERIFIED_GREEN, rot.ORACLE_FIXED, rot.UNCHECKED_PRIORITY)
-        )
-        > 1
-    ]
-    if dupes:
-        problems.append(f"names in more than one rotation list: {sorted(set(dupes))}")
-    # intra-list duplicates (round-7 ADVICE): a name repeated WITHIN a
-    # list is deduped by first occurrence at reorder() time, silently
-    # ordering a freshly-regreen query by its stale earlier position.
-    for label, block in (
-        ("VERIFIED_GREEN", rot.VERIFIED_GREEN),
-        ("ORACLE_FIXED", rot.ORACLE_FIXED),
-        ("UNCHECKED_PRIORITY", rot.UNCHECKED_PRIORITY),
-    ):
-        counts = {}
-        for n in block:
-            counts[n] = counts.get(n, 0) + 1
-        intra = sorted(n for n, c in counts.items() if c > 1)
-        if intra:
-            problems.append(f"duplicate names WITHIN {label}: {intra}")
-    evicted = [n for n in rot.UNCHECKED_PRIORITY if n in REGISTRY and n not in window]
-    if evicted:
-        problems.append(
-            f"UNCHECKED_PRIORITY entries OUTSIDE the {window_size}-slot window: {evicted}"
-        )
+    hist = Counter(last.get(n, 0) for n in REGISTRY)
+    print(f"registry: {len(REGISTRY)}; driver rounds: {[r for r, _ in rounds]}")
+    print("last-green histogram (0 = never green or latest row red):",
+          dict(sorted(hist.items())))
+    never = [n for n in REGISTRY if last.get(n, 0) == 0]
+    if never:
+        print(f"never green or latest row red ({len(never)}): {never}")
+    orphans = sorted(set(last) - set(REGISTRY))
+    if orphans:
+        print(f"driver rows with no registry entry ({len(orphans)}): {orphans}")
+    if changed:
+        print(f"oracle text changed since snapshot ({len(changed)}): {changed}")
 
-    cur = oracle_hashes()
-    if MANIFEST.exists():
-        prev = json.loads(MANIFEST.read_text())
-        changed = sorted(n for n in cur if n in prev and prev[n] != cur[n])
-        fresh = sorted(n for n in cur if n not in prev)
-        changed_out = [n for n in changed if n not in window]
-        if changed_out:
-            problems.append(
-                "queries whose ORACLE TEXT changed since the snapshot are "
-                f"OUTSIDE the window (would ship driver-unverified): {changed_out}"
-            )
-        fresh_out = [n for n in fresh if n not in window]
-        if fresh_out:
-            problems.append(
-                f"new-oracle queries outside the window: {fresh_out}"
-            )
-        if changed:
-            print(f"  oracle text changed since snapshot ({len(changed)}): {changed}")
-    else:
-        print("  NOTE: no oracle-hash snapshot yet — run with --update-hashes")
-    if update and not problems:
-        MANIFEST.write_text(json.dumps(cur, indent=0, sort_keys=True) + "\n")
-        print(f"  snapshot updated: {MANIFEST} ({len(cur)} oracles)")
-    elif update:
-        print("  snapshot NOT updated (violations present)")
+    print(f"\nwindow ({len(window)} of {len(REGISTRY)}):")
+    for n in window:
+        print(f"  r{last.get(n, 0):<3} {'changed ' if n in changed else ''}{n}")
+    out = [n for n in never + changed if n not in window]
+    if out:
+        problems.append(f"never-green, red or changed-oracle queries OUTSIDE the window: {out}")
 
-    n_unchecked = sum(1 for n in rot.UNCHECKED_PRIORITY if n in REGISTRY)
-    spares = window[1 + len(rot.ORACLE_FIXED) + n_unchecked :]
-    print(f"registry: {len(names)} queries; window: {window_size}")
-    print(f"  flagship + {len(rot.ORACLE_FIXED)} oracle-fixed + {n_unchecked} unchecked")
-    print(f"  re-verification spares ({len(spares)}): {spares}")
-    # the head of VERIFIED_GREEN is the round's declared recheck
-    # priority — report explicitly which of its first entries DROP out
-    # of the window, so a shrinking spare count is a visible decision,
-    # never a silent one (dropping rechecks is a legitimate trade —
-    # they are already driver-green — so this reports, not fails)
-    recheck_head = rot.VERIFIED_GREEN[: max(len(spares), 4)]
-    dropped = [n for n in recheck_head if n not in window]
-    if dropped:
-        print(f"  NOTE: recheck-priority entries NOT re-verified this round: {dropped}")
+    if "--update-hashes" in sys.argv[1:]:
+        newest = json.loads(rounds[-1][1].read_text()) if rounds else {}
+        unverified = [n for n in changed if not rot.green(newest.get(n, {}))]
+        if unverified:
+            problems.append(
+                "snapshot NOT updated: changed oracles without a green row in "
+                f"the newest driver round: {unverified}"
+            )
+        else:
+            cur = rot.oracle_hashes(REGISTRY)
+            rot.SNAPSHOT.write_text(json.dumps(cur, indent=0, sort_keys=True) + "\n")
+            print(f"snapshot updated: {rot.SNAPSHOT} ({len(cur)} oracles)")
     for p in problems:
         print(f"VIOLATION: {p}")
     return 1 if problems else 0
