@@ -25,12 +25,15 @@ def date_spine(
     start: Column | str,
     end: Column | str,
     date_col: str = "date",
+    bounds: DataFrame | None = None,
 ) -> DataFrame:
     """Daily date dimension over [start, end] with the reference's
-    attribute battery (date-dimension.py:51-75)."""
+    attribute battery (date-dimension.py:51-75). ``start``/``end`` are
+    evaluated over the one-row ``bounds`` frame when given (e.g. a lazy
+    min/max aggregate), else over a one-row range."""
     lo = F.lit(start).cast("date") if isinstance(start, str) else start.cast("date")
     hi = F.lit(end).cast("date") if isinstance(end, str) else end.cast("date")
-    spine = spark.range(1).select(
+    spine = (spark.range(1) if bounds is None else bounds).select(
         F.explode(F.sequence(lo, hi, F.expr("interval 1 day"))).alias(date_col)
     )
     d = F.col(date_col)

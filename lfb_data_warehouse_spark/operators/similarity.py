@@ -541,10 +541,17 @@ def _arrow_nearest_centroid(
     ``keep_cols`` pass through untouched; ``payload`` re-emits (q, norm)
     as (nq, nn); ``score`` emits the winning cosine (``centroid_score``,
     the identical IEEE ops → identical double). Empty centroid sets
-    yield the empty frame the crossJoin produced."""
+    yield the empty frame the crossJoin produced. A NULL label trains no
+    centroid (nor does a label whose vectors are all NULL); its rows are
+    still assigned by their vectors. A NULL vector has no nearest
+    centroid: its row passes through with a NULL ``assigned_label`` (and
+    score), which no pair stage groups."""
     import numpy as np
 
-    rows = cents.collect()
+    rows = [
+        r for r in cents.collect()  # bounded: nlist/k rows
+        if r["centroid_label"] is not None and r["cnorm"] is not None
+    ]
     id_t = q.schema[id_col].dataType.simpleString()
     keep_ts = [(c, q.schema[c].dataType.simpleString()) for c in keep_cols]
     label_t = cents.schema["centroid_label"].dataType.simpleString()
@@ -575,26 +582,44 @@ def _arrow_nearest_centroid(
 
     def assign(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            if not len(pdf):
+            valid = pdf["q"].notna().to_numpy()
+            if not valid.any():
+                if len(pdf):
+                    yield pd.DataFrame(unassigned(pdf))
                 continue
-            Qf = np.vstack(pdf["q"].to_numpy()).astype(np.float64)
+            Qf = np.vstack(pdf["q"].to_numpy()[valid]).astype(np.float64)
             _exactness_guard(dim, float(np.abs(Qf).max()), max_c)
-            nm = pdf["norm"].to_numpy().astype(np.float64)
+            nm = pdf["norm"].to_numpy()[valid].astype(np.float64)
             dot = Qf @ C.T  # exact: integer-valued float64 < 2^53
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = dot / (np.sqrt(nm)[:, None] * rt_c[None, :])
             cos = np.where((nm[:, None] > 0.0) & cpos[None, :], cos, 0.0)
             best = np.argmax(cos, axis=1)  # first max = smallest label
-            out = {out_id: pdf[id_col]}
-            for c, _ in keep_ts:
-                out[c] = pdf[c]
-            out["assigned_label"] = labels_arr.take(best)
-            if payload:
-                out["nq"] = pdf["q"]
-                out["nn"] = pdf["norm"]
+            out = unassigned(pdf)
+            out["assigned_label"] = scatter(valid, labels_arr.take(best))
             if score:
-                out["centroid_score"] = cos[np.arange(len(best)), best]
+                out["centroid_score"] = scatter(valid, cos[np.arange(len(best)), best])
             yield pd.DataFrame(out)
+
+    def unassigned(pdf: pd.DataFrame) -> dict:
+        out = {out_id: pdf[id_col]}
+        for c, _ in keep_ts:
+            out[c] = pdf[c]
+        out["assigned_label"] = np.full(len(pdf), None, dtype=object)
+        if payload:
+            out["nq"] = pdf["q"]
+            out["nn"] = pdf["norm"]
+        if score:
+            out["centroid_score"] = np.full(len(pdf), np.nan)
+        return out
+
+    def scatter(valid: np.ndarray, values: np.ndarray) -> np.ndarray:
+        """``values`` of the valid rows, NULL on the others."""
+        if valid.all():
+            return values
+        full = np.full(len(valid), None, dtype=object)
+        full[valid] = values
+        return full
 
     return q.select(*in_cols).mapInPandas(assign, schema=schema)
 

@@ -243,6 +243,29 @@ def test_ivf_assign_accepts_string_labels(emb):
     assert all(r["assigned_label"] == r["label"] for r in out)
 
 
+@pytest.mark.parametrize(
+    "extra, survivors",
+    [
+        # NULL label: trains no centroid, but the row is assigned by its
+        # vector; as 0's exact duplicate it is dropped
+        ([(5, [1.0, 0.0, 0.0], None)], {0: 0, 2: 1, 3: 1, 4: 2}),
+        # NULL vector: nothing proves it a duplicate, so it survives with
+        # a NULL assigned_label
+        ([(6, None, 1)], {0: 0, 2: 1, 3: 1, 4: 2, 6: None}),
+    ],
+    ids=["null_label", "null_vector"],
+)
+def test_semantic_dedup_null_inputs(emb, extra, survivors):
+    """SemDeDup degrades deterministically on NULL inputs instead of
+    raising. 1 is dropped in every case: cosine 0.995 to 0 in the same
+    cluster."""
+    from lfb_data_warehouse_spark.operators.similarity import semantic_dedup
+
+    corpus = emb.unionByName(emb.sparkSession.createDataFrame(extra, emb.schema))
+    out = semantic_dedup(corpus, "vec_id", "embedding", "label", threshold=0.99, dim=3)
+    assert {r["vec_id"]: r["assigned_label"] for r in out.collect()} == survivors
+
+
 def test_ivf_persisted_index_search_matches_inline(emb, tmp_path):
     # ivf_build + parquet round-trip + ivf_search == the inline ivf_topk:
     # the persisted-index path (the production shape measured in

@@ -8,7 +8,13 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
+from lfb_data_warehouse_spark.operators.checks import (
+    CheckResult,
+    assert_unique,
+    referential_orphans,
+)
 from lfb_data_warehouse_spark.plans.lfb_pipeline import (
+    FK_PAIRS,
     derive_incident_type,
     run_pipeline,
     warehouse_checks,
@@ -31,7 +37,8 @@ def d(s):
 
 
 @pytest.fixture(scope="module")
-def warehouse(spark):
+def raw(spark):
+    """The raw inputs: calls, weather, air quality, well-being."""
     lfb = spark.createDataFrame(
         [
             # clean row
@@ -74,7 +81,12 @@ def warehouse(spark):
         "Year int, Life_Expectancy double, Unemployment double, Crime double, "
         "Deliberate_Fires double",
     )
-    tables = run_pipeline(spark, lfb, weather, aq, wb)
+    return lfb, weather, aq, wb
+
+
+@pytest.fixture(scope="module")
+def warehouse(spark, raw):
+    tables = run_pipeline(spark, *raw)
     return {k: v.cache() for k, v in tables.items()}
 
 
@@ -197,3 +209,207 @@ def test_marts_shapes(warehouse):
     plt = warehouse["per_location_type"].collect()
     # I2 has NULL attendance → filtered; 2 location-type rows remain
     assert sum(r["IncidentCount"] for r in plt) == 2
+
+
+MARTS = ("per_month", "per_ward", "types_per_ward", "per_location_type")
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _refresh(spark, raw, calls_path):
+    """run_pipeline over the calls stored at ``calls_path``, as a
+    scheduled refresh reads them."""
+    _lfb, weather, aq, wb = raw
+    return run_pipeline(spark, spark.read.parquet(calls_path), weather, aq, wb)
+
+
+def _disk_blocks(spark):
+    """Ids of the RDDs holding disk-only blocks (the refresh's frames;
+    the module fixture caches in memory)."""
+    return {
+        i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        if not i.storageLevel().useMemory()
+    }
+
+
+def test_refreshes_in_one_session_each_read_their_own_input(spark, raw, tmp_path):
+    """A daily refresh in a long-lived session: the same input path is
+    rewritten between two run_pipeline calls. Each call's fact and marts
+    reflect its own input, and the second call releases the blocks the
+    first call materialized, so refreshes do not pile up."""
+    lfb = raw[0]
+    path = str(tmp_path / "calls")
+    lfb.write.parquet(path)
+    before = _disk_blocks(spark)
+    first = _refresh(spark, raw, path)
+    fact1, marts1 = _rows(first["lfb_call"]), {m: _rows(first[m]) for m in MARTS}
+    held = _disk_blocks(spark) - before
+
+    cost = F.when(F.col("IncidentNumber") == "I1", 1000).otherwise(F.col("`Notional Cost (£)`"))
+    lfb.withColumn("Notional Cost (£)", cost).write.mode("overwrite").parquet(path)
+    second = _refresh(spark, raw, path)
+    fact2, marts2 = _rows(second["lfb_call"]), {m: _rows(second[m]) for m in MARTS}
+    now = _disk_blocks(spark)
+    assert not held & now
+    assert len(now - before) == len(held)
+
+    cost1 = {r[1]: r[11] for r in fact1}  # IncidentNumber → NotionalCost
+    cost2 = {r[1]: r[11] for r in fact2}
+    assert cost1 == {"I1": 400, "I2": 0, "I3": 200}
+    assert cost2 == {"I1": 1000, "I2": 0, "I3": 200}
+    assert [r[4] for r in marts1["per_month"]] == [600]  # TotalCost
+    assert [r[4] for r in marts2["per_month"]] == [1200]
+    assert marts1["per_ward"] != marts2["per_ward"]
+
+
+def test_marts_equal_group_by_over_the_collected_fact(spark, warehouse):
+    """The four marts equal an independent SQL GROUP BY over the
+    collected fact rows."""
+    fact = warehouse["lfb_call"]
+    spark.createDataFrame(fact.collect(), fact.schema).createOrReplaceTempView("fact_rows")
+    sql = {
+        "per_month": """
+            SELECT year(DateOfCall), month(DateOfCall), date_format(DateOfCall, 'yyyy-MM'),
+                   count(IncidentNumber), sum(NotionalCost), round(avg(NotionalCost), 2),
+                   sum(NumCalls)
+            FROM fact_rows GROUP BY 1, 2, 3""",
+        "per_ward": """
+            SELECT WardID, count(IncidentNumber), sum(NotionalCost), avg(NotionalCost),
+                   sum(NumCalls), round(avg(FirstPumpAttendanceTime), 2)
+            FROM fact_rows GROUP BY WardID""",
+        "types_per_ward": """
+            SELECT WardID, IncidentTypeKey, count(IncidentNumber), sum(NotionalCost),
+                   round(avg(NotionalCost), 2)
+            FROM fact_rows GROUP BY WardID, IncidentTypeKey""",
+        "per_location_type": """
+            SELECT LocationTypeKey, count(IncidentNumber),
+                   round(avg(FirstPumpAttendanceTime), 2), sum(NotionalCost),
+                   round(avg(NotionalCost), 2), sum(PumpsAttending),
+                   round(avg(PumpsAttending), 2)
+            FROM fact_rows
+            WHERE FirstPumpAttendanceTime IS NOT NULL AND FirstPumpAttendanceTime > 0
+            GROUP BY LocationTypeKey""",
+    }
+    for mart, query in sql.items():
+        assert _rows(warehouse[mart]) == _rows(spark.sql(query)), mart
+
+
+def _node_names(plan):
+    names = [plan.nodeName()]
+    kids = plan.children()
+    for i in range(kids.size()):
+        names += _node_names(kids.apply(i))
+    return names
+
+
+def test_marts_read_the_materialized_fact(spark, raw, tmp_path):
+    """No mart's physical plan scans a raw input or re-runs the as-of
+    join window: each mart's only leaves are scans of the materialized
+    fact."""
+    path = str(tmp_path / "calls")
+    raw[0].write.parquet(path)
+    tables = _refresh(spark, raw, path)
+    for mart in MARTS:
+        names = _node_names(tables[mart]._jdf.queryExecution().sparkPlan())
+        leaves = [n for n in names if "Scan" in n]
+        assert leaves and set(leaves) == {"InMemoryTableScan"}, (mart, names)
+        assert "Window" not in names, (mart, names)
+
+
+def test_release_refresh_drops_the_blocks(spark, raw, tmp_path):
+    """A refresh holds the disk blocks of its two shared frames until
+    release_refresh drops them; the released frames still answer."""
+    from lfb_data_warehouse_spark.plans.lfb_pipeline import release_refresh
+
+    path = str(tmp_path / "calls")
+    raw[0].write.parquet(path)
+    release_refresh()
+    before = _disk_blocks(spark)
+    tables = _refresh(spark, raw, path)
+    per_month = _rows(tables["per_month"])
+    assert len(_disk_blocks(spark) - before) == 2  # the cleansed calls and the fact
+    release_refresh()
+    assert _disk_blocks(spark) <= before
+    assert _rows(tables["per_month"]) == per_month
+
+
+def test_date_dim_builds_without_a_job(spark):
+    """date_dim's range is a lazy aggregate: building the spine starts
+    no Spark job, and an empty input yields no rows."""
+    from lfb_data_warehouse_spark.plans.lfb_pipeline import date_dim
+
+    calls = spark.createDataFrame([(d("2021-06-01"),), (d("2021-06-03"),)], "DateOfCall date")
+    sc = spark.sparkContext
+    sc.setJobGroup("date_dim_build", "building date_dim")
+    try:
+        dim = date_dim(spark, calls)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("date_dim_build")) == []
+    assert [r["Date"] for r in dim.orderBy("Date").collect()] == [
+        d("2021-06-01"), d("2021-06-02"), d("2021-06-03")
+    ]
+    assert date_dim(spark, calls.limit(0)).count() == 0
+
+
+def test_folded_checks_equal_per_check_formulation(spark):
+    """warehouse_checks returns exactly the CheckResult list of one
+    action per check, on a warehouse with an empty table, a duplicate
+    dimension key, a NULL dimension key group, and orphan (and NULL)
+    foreign keys."""
+
+    def keys(col, *vals, kind="string"):
+        return spark.createDataFrame([(v,) for v in vals], f"{col} {kind}")
+
+    fk_cols = [fk for fk, _, _ in FK_PAIRS]
+    tables = {
+        "incident_types": keys("IncidentTypeKey", "a", "a", "b"),  # duplicate key
+        "location_type": keys("LocationTypeKey"),  # empty
+        "ward": keys("WardID", None, None, "w"),  # NULL key group of two
+        "date": keys("Date", d("2021-06-01"), d("2021-06-02"), kind="date"),
+        "weather": keys("WeatherKey", "x", None),  # one NULL key: unique
+        "air_quality": keys("AirQualityKey", "q"),
+        "well_being": keys("WellBeingID", "h"),
+        "lfb_call": spark.createDataFrame(
+            [("a", "l", "w", "q", "x", "h"),
+             ("b", "l", "zz", "q", None, "h"),  # orphan ward, NULL weather FK
+             ("c", "l", "zz", "q", "x", "h")],  # orphan type, same orphan ward
+            ", ".join(f"{c} string" for c in fk_cols),
+        ),
+        "per_month": keys("Year", 2021, kind="int"),
+        "per_ward": keys("WardID"),  # empty
+        "types_per_ward": keys("WardID", "w"),
+        "per_location_type": keys("LocationTypeKey", "l"),
+    }
+    # reference: one Spark action per check
+    expected = []
+    for name, df in tables.items():
+        n = df.count()
+        expected.append(CheckResult(f"non_empty_{name}", n > 0, f"rows={n}"))
+    for dim, key in [
+        ("incident_types", "IncidentTypeKey"), ("location_type", "LocationTypeKey"),
+        ("ward", "WardID"), ("weather", "WeatherKey"),
+        ("air_quality", "AirQualityKey"), ("well_being", "WellBeingID"),
+        ("date", "Date"),
+    ]:
+        dups = assert_unique(tables[dim], [key]).count()
+        expected.append(CheckResult(f"unique_{dim}.{key}", dups == 0, f"dup_keys={dups}"))
+    for fk, dim, key in FK_PAIRS:
+        orphans = referential_orphans(tables["lfb_call"], fk, tables[dim], key).count()
+        expected.append(CheckResult(f"ref_int_{fk}", orphans == 0, f"orphans={orphans}"))
+
+    got = warehouse_checks(tables)
+    assert got == expected
+    failed = {r.name: r.detail for r in got if not r.passed}
+    assert failed == {
+        "non_empty_location_type": "rows=0",
+        "non_empty_per_ward": "rows=0",
+        "unique_incident_types.IncidentTypeKey": "dup_keys=1",
+        "unique_ward.WardID": "dup_keys=1",
+        "ref_int_IncidentTypeKey": "orphans=1",
+        "ref_int_LocationTypeKey": "orphans=1",
+        "ref_int_WardID": "orphans=1",
+        "ref_int_WeatherKey": "orphans=1",
+    }
