@@ -11,7 +11,7 @@ Layout
 ------
 - ``sources``    readers/writers, schema registry (SURVEY §2.1 S1-S10)
 - ``functions``  column-expression builders: hash keys, bucketing
-                 when-chains, cleansing scrubs, text/vector expressions
+                 CASEs, cleansing scrubs, text/vector expressions
                  (SURVEY §2.8)
 - ``operators``  DataFrame→DataFrame relational operators: incremental
                  anti-join upsert, nearest-within as-of join, date spine,

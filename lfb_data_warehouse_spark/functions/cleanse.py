@@ -28,9 +28,7 @@ def null_sentinels(df: DataFrame, sentinel: str = "NULL", subset: Sequence[str] 
 
 def zero_to_null(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """0 used as fake-NULL → NULL (reference lfb-cleanse.py:44, USRN)."""
-    for c in cols:
-        df = df.withColumn(c, F.when(F.col(c) == 0, None).otherwise(F.col(c)))
-    return df
+    return df.withColumns({c: F.when(F.col(c) == 0, None).otherwise(F.col(c)) for c in cols})
 
 
 def linked_scrub(df: DataFrame, guard: Column, cols: Sequence[str]) -> DataFrame:
@@ -109,7 +107,7 @@ def zscore_scrub(df: DataFrame, cols: Sequence[str], threshold: float = 3.0) -> 
             F.count(F.col(c)).alias(f"__n_{c}"),
         ]
     stats = df.agg(*aggs).collect()[0]
-    out = df
+    scrubs = {}
     for c in cols:
         n = stats[f"__n_{c}"]
         if not n or n < 2:
@@ -122,5 +120,5 @@ def zscore_scrub(df: DataFrame, cols: Sequence[str], threshold: float = 3.0) -> 
         if std == 0.0:
             continue
         z = (F.col(c) - F.lit(mean)) / F.lit(std)
-        out = out.withColumn(c, F.when(F.abs(z) > threshold, None).otherwise(F.col(c)))
-    return out
+        scrubs[c] = F.when(F.abs(z) > threshold, None).otherwise(F.col(c))
+    return df.withColumns(scrubs)

@@ -21,14 +21,18 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
+from .bucketing import sql_string
+
 UNKNOWN = "Unknown"
 SEP = "|"
 
 
-def hash_key(*cols: Column | str, sep: str = SEP) -> Column:
-    """sha256 over pipe-joined columns; NULLs are skipped (concat_ws)."""
-    cs = [F.col(c).cast("string") if isinstance(c, str) else c.cast("string") for c in cols]
-    return F.sha2(F.concat_ws(sep, *cs), 256)
+def hash_key(*cols: str, sep: str = SEP) -> Column:
+    """sha256 over pipe-joined columns; NULLs are skipped (concat_ws).
+    One parsed SQL expression: built through the Column API, each column
+    would cost Py4J round trips for its reference and its cast."""
+    parts = ", ".join(f"CAST(`{c}` AS STRING)" for c in cols)
+    return F.expr(f"sha2(concat_ws({sql_string(sep)}, {parts}), 256)")
 
 
 def hash_key_nullable(*cols: Column | str, sep: str = SEP, patch: str | None = UNKNOWN) -> Column:

@@ -422,7 +422,9 @@ def label_centroids(
     ONE hash aggregate with ``dim`` element_at sums — no posexplode (a
     dim× row blow-up), no second shuffle, no collect_list/array_sort.
     Map-side partial aggregation means each executor contributes one
-    partial row per label regardless of corpus size."""
+    partial row per label regardless of corpus size. The mean divides by
+    the label's non-NULL vectors; a label whose vectors are all NULL
+    gets NULL components (and ``cnorm``), not a division by zero."""
     if dim is None:
         # NB: inferring dim runs a small eager job at plan-build time —
         # pass dim explicitly in lazy/library contexts
@@ -444,7 +446,8 @@ def label_centroids(
     # executor work on any corpus); a single parsed expr is one call.
     cq_sql = "array({}) AS cq".format(
         ",".join(
-            f"CAST(round(CAST(SUM(element_at(q, {i + 1})) AS DOUBLE) / COUNT(1)) AS BIGINT)"
+            f"CAST(round(CAST(SUM(element_at(q, {i + 1})) AS DOUBLE)"
+            f" / NULLIF(COUNT(q), 0)) AS BIGINT)"
             for i in range(dim)
         )
     )

@@ -26,8 +26,12 @@ Semantics parity notes (SURVEY §7.4):
   first(ignorenulls) — nondeterministic under parallelism; we collapse
   with an explicit order (documented divergence);
 - bucketing strategy tables are domain data reproduced from the
-  reference (cited per table); the fold mechanism is
-  functions.bucketing.bucketize.
+  reference (cited per table); each folds into one SQL CASE
+  (functions.bucketing.bucketize), the text the oracles use too.
+
+Each dimension and the fact derive their columns in one projection per
+dependency step (``select``/``withColumns``), not a ``withColumn`` per
+column: every ``withColumn`` re-analyzes the growing plan.
 """
 
 from __future__ import annotations
@@ -115,10 +119,8 @@ def derive_incident_type(df: DataFrame) -> DataFrame:
     key = F.when(
         (itype == UNKNOWN) & (idesc == "Unknown incident type"), F.lit(UNKNOWN)
     ).otherwise(F.sha2(F.concat(itype, F.lit("|"), idesc), 256))
-    return (
-        df.withColumn("IncidentType", itype)
-        .withColumn("IncidentDescription", idesc)
-        .withColumn("IncidentTypeKey", key)
+    return df.withColumns(
+        {"IncidentType": itype, "IncidentDescription": idesc, "IncidentTypeKey": key}
     )
 
 
@@ -145,12 +147,12 @@ def incident_type_dim(clean: DataFrame) -> DataFrame:
 def location_type_dim(clean: DataFrame) -> DataFrame:
     """derive-location-types.py:17-33: distinct (category, type) with
     Unknown defaults, concat_ws hash key, sentinel member."""
+    cols = ["PropertyCategory", "PropertyType"]
     dim = (
-        clean.select("PropertyCategory", "PropertyType")
+        clean.select(*cols)
         .distinct()
-        .withColumn("PropertyCategory", F.coalesce("PropertyCategory", F.lit(UNKNOWN)))
-        .withColumn("PropertyType", F.coalesce("PropertyType", F.lit(UNKNOWN)))
-        .withColumn("LocationTypeKey", hash_key("PropertyCategory", "PropertyType"))
+        .select(*[F.coalesce(c, F.lit(UNKNOWN)).alias(c) for c in cols])
+        .withColumn("LocationTypeKey", hash_key(*cols))
     )
     sentinel = dim.sparkSession.createDataFrame([(UNKNOWN, UNKNOWN, UNKNOWN)], dim.schema)
     return dim.unionByName(sentinel)
@@ -229,22 +231,22 @@ def weather_dim(raw: DataFrame) -> DataFrame:
     """weather-cleanse.py: derived columns (amplitude, gustiness %), wind
     direction normalized to [0,360), all numeric columns bucketed to
     ordinal labels (NULL→Unknown), content-hash WeatherKey, sentinel."""
-    df = raw.withColumn(
-        "TemperatureAmplitude",
-        F.when(F.col("tmin").isNull() | F.col("tmax").isNull(), None).otherwise(
-            F.col("tmax") - F.col("tmin")
-        ),
-    ).withColumn(
-        "WindGustinessPct",
-        F.when(F.col("wspd").isNull() | F.col("wpgt").isNull(), None)
+    df = raw.withColumns({
+        "TemperatureAmplitude": F.when(F.col("tmin").isNull() | F.col("tmax").isNull(), None)
+        .otherwise(F.col("tmax") - F.col("tmin")),
+        "WindGustinessPct": F.when(F.col("wspd").isNull() | F.col("wpgt").isNull(), None)
         .when(F.col("wspd") == 0, 0.0)
         .otherwise((F.col("wpgt") - F.col("wspd")) / F.col("wspd") * 100),
-    ).withColumn("wdir", F.col("wdir") % 360)
-    for src, (dst, strategy) in WEATHER_STRATEGIES.items():
-        df = df.withColumn(dst, bucketize(src, strategy, NullPolicy.UNKNOWN, default=UNKNOWN))
-    df = df.select("date", *[dst for dst, _ in WEATHER_STRATEGIES.values()])
-    df = df.withColumn("WeatherKey", hash_key(*WEATHER_KEY_COLS))
-    df = df.withColumn("date", F.col("date").cast("date"))
+        "wdir": F.col("wdir") % 360,
+    })
+    df = df.select("date", *[
+        bucketize(src, strategy, NullPolicy.UNKNOWN, default=UNKNOWN).alias(dst)
+        for src, (dst, strategy) in WEATHER_STRATEGIES.items()
+    ])
+    # the key hashes the date as it arrives, before the cast
+    df = df.withColumns(
+        {"WeatherKey": hash_key(*WEATHER_KEY_COLS), "date": F.col("date").cast("date")}
+    )
     return sentinel_row(df, "WeatherKey")
 
 
@@ -282,13 +284,14 @@ def air_quality_dim(raw: DataFrame) -> DataFrame:
     long→wide (FIXED value list for schema stability) → z-score outlier
     scrub (one stats pass, exact decimal statistics) → bucketing →
     content-hash key → sentinel."""
-    df = raw.select("Species", "ReadingDateTime", "Value").withColumn(
-        "Value", F.when(F.col("Value") < 0, None).otherwise(F.col("Value"))
-    )
+    ts = F.col("ReadingDateTime")
     if dict(raw.dtypes).get("ReadingDateTime") == "string":
-        df = df.withColumn(
-            "ReadingDateTime", F.to_timestamp("ReadingDateTime", "dd/MM/yyyy HH:mm")
-        )
+        ts = F.to_timestamp(ts, "dd/MM/yyyy HH:mm")
+    df = raw.select(
+        "Species",
+        ts.alias("ReadingDateTime"),
+        F.when(F.col("Value") < 0, None).otherwise(F.col("Value")).alias("Value"),
+    )
     species = list(AQ_STRATEGIES)
     wide = pivot_agg(
         df,
@@ -297,16 +300,12 @@ def air_quality_dim(raw: DataFrame) -> DataFrame:
         values=[s.replace("_", ".") for s in species],
         agg=F.round(F.avg("Value"), 1),
     )
-    for s in species:
-        dotted = s.replace("_", ".")
-        if dotted != s:
-            wide = wide.withColumnRenamed(dotted, s)
+    wide = wide.withColumnsRenamed({s.replace("_", "."): s for s in species if "_" in s})
     wide = zscore_scrub(wide, species, threshold=3.0)
-    for s in species:
-        wide = wide.withColumn(
-            f"{s}Level", bucketize(s, AQ_STRATEGIES[s], NullPolicy.UNKNOWN, default=UNKNOWN)
-        )
-    wide = wide.select("ReadingDateTime", *[f"{s}Level" for s in species])
+    wide = wide.select("ReadingDateTime", *[
+        bucketize(s, AQ_STRATEGIES[s], NullPolicy.UNKNOWN, default=UNKNOWN).alias(f"{s}Level")
+        for s in species
+    ])
     wide = wide.withColumn("AirQualityKey", hash_key(*[f"{s}Level" for s in species]))
     return sentinel_row(wide, "AirQualityKey")
 
@@ -341,16 +340,16 @@ def well_being_dim(raw: DataFrame, dimension_format: str = "preserve-all") -> Da
         raise ValueError(
             f"dimension_format must be one of {WB_DIM_FORMATS}, got {dimension_format!r}"
         )
-    df = raw.withColumnRenamed("New ward code", "WardCode").withColumnRenamed("Ward", "WardName")
-    for metric, strategy in WB_STRATEGIES.items():
-        df = df.withColumn(
-            f"{metric}Label", bucketize(metric, strategy, NullPolicy.NULL)
-        )
-    df = df.withColumn("WellBeingID", hash_key("WardCode", "Year"))
-    keep = ["WellBeingID", "WardCode", "WardName", "Year"] + list(WB_STRATEGIES) + [
-        f"{m}Label" for m in WB_STRATEGIES
-    ]
-    full = sentinel_row(df.select(*keep), "WellBeingID")
+    df = raw.withColumnsRenamed({"New ward code": "WardCode", "Ward": "WardName"}).select(
+        hash_key("WardCode", "Year").alias("WellBeingID"),
+        "WardCode",
+        "WardName",
+        "Year",
+        *WB_STRATEGIES,
+        *[bucketize(m, strategy, NullPolicy.NULL).alias(f"{m}Label")
+          for m, strategy in WB_STRATEGIES.items()],
+    )
+    full = sentinel_row(df, "WellBeingID")
     if dimension_format == "only-labels":
         return full.select(*[c for c in full.columns if c.endswith("Label")])
     if dimension_format == "only-numeric":
@@ -385,23 +384,18 @@ def assemble_fact(
     nearest-reading air-quality as-of join, measure coalesces, and
     CostPerCall.
 
-    Every FK is coalesced to "Unknown" post-join so the fact never
-    carries NULL keys (reference pattern, load_fact.py:186-336)."""
-    fact = derive_incident_type(clean)
-
-    fact = (
-        fact.join(
-            F.broadcast(location_types.select("PropertyType", "LocationTypeKey")),
-            "PropertyType",
-            "left",
-        )
-        .withColumn("LocationTypeKey", F.coalesce("LocationTypeKey", F.lit(UNKNOWN)))
+    Every FK is coalesced to "Unknown" after the joins so the fact never
+    carries NULL keys (reference pattern, load_fact.py:186-336); the FK
+    and measure coalesces, the renames and CostPerCall are one final
+    projection."""
+    fact = derive_incident_type(clean).join(
+        F.broadcast(location_types.select("PropertyType", "LocationTypeKey")),
+        "PropertyType",
+        "left",
     )
 
-    fact = (
-        fact.withColumnRenamed("IncGeo_WardCode", "WardCode")
-        .join(F.broadcast(wards.select("WardCode", "WardID")), "WardCode", "left")
-        .withColumn("WardID", F.coalesce("WardID", F.lit(UNKNOWN)))
+    fact = fact.withColumnRenamed("IncGeo_WardCode", "WardCode").join(
+        F.broadcast(wards.select("WardCode", "WardID")), "WardCode", "left"
     )
 
     # as-of join: nearest air-quality reading within ±12 h of the call
@@ -409,11 +403,7 @@ def assemble_fact(
         F.concat(F.col("DateOfCall").cast("string"), F.lit(" "), F.col("TimeOfCall")),
         "yyyy-MM-dd HH:mm:ss",
     )
-    probes = (
-        fact.select("IncidentNumber", "DateOfCall", "TimeOfCall")
-        .withColumn("CallTs", call_ts)
-        .select("IncidentNumber", "CallTs")
-    )
+    probes = fact.select("IncidentNumber", call_ts.alias("CallTs"))
     readings = air_quality.select("ReadingDateTime", "AirQualityKey").filter(
         F.col("ReadingDateTime").isNotNull()
     )
@@ -426,56 +416,38 @@ def assemble_fact(
         left_key="IncidentNumber",
         right_tiebreak="ReadingDateTime",
     ).select("IncidentNumber", "AirQualityKey")
-    fact = fact.join(nearest, "IncidentNumber", "left").withColumn(
-        "AirQualityKey", F.coalesce("AirQualityKey", F.lit(UNKNOWN))
-    )
+    fact = fact.join(nearest, "IncidentNumber", "left")
 
     fact = fact.join(
         F.broadcast(weather.select(F.col("date").alias("DateOfCall"), "WeatherKey")),
         "DateOfCall",
         "left",
-    ).withColumn("WeatherKey", F.coalesce("WeatherKey", F.lit(UNKNOWN)))
-
-    fact = (
-        fact.withColumn("YearOfCall", F.year("DateOfCall"))
-        .join(
-            F.broadcast(
-                well_being.select(
-                    "WardCode", F.col("Year").alias("YearOfCall"), "WellBeingID"
-                )
-            ),
-            ["WardCode", "YearOfCall"],
-            "left",
-        )
-        .withColumn("WellBeingID", F.coalesce("WellBeingID", F.lit(UNKNOWN)))
     )
 
-    fact = (
-        fact.withColumnsRenamed(
-            {
-                "FirstPumpArriving_AttendanceTime": "FirstPumpAttendanceTime",
-                "FirstPumpArriving_DeployedFromStation": "FirstPumpStation",
-                "Notional Cost (£)": "NotionalCost",
-                "NumStationsWithPumpsAttending": "StationsWithPumpsAttending",
-                "NumPumpsAttending": "PumpsAttending",
-                "PumpMinutesRounded": "PumpMinutes",
-            }
-        )
-        .withColumn("IncidentStationGround", F.coalesce("IncidentStationGround", F.lit(UNKNOWN)))
-        .withColumn("StationsWithPumpsAttending", F.coalesce("StationsWithPumpsAttending", F.lit(0)))
-        .withColumn("PumpsAttending", F.coalesce("PumpsAttending", F.lit(0)))
-        .withColumn("PumpMinutes", F.coalesce("PumpMinutes", F.lit(0)))
-        .withColumn("NotionalCost", F.coalesce("NotionalCost", F.lit(0)))
-        .withColumn("NumCalls", F.coalesce("NumCalls", F.lit(1)))
-        .withColumn(
-            "CostPerCall",
-            F.when(
-                F.col("NumCalls") > 0,
-                (F.col("NotionalCost") / F.col("NumCalls")).cast("int"),
-            ).otherwise(F.lit(0)),
-        )
+    fact = fact.withColumn("YearOfCall", F.year("DateOfCall")).join(
+        F.broadcast(
+            well_being.select("WardCode", F.col("Year").alias("YearOfCall"), "WellBeingID")
+        ),
+        ["WardCode", "YearOfCall"],
+        "left",
     )
-    return fact.select(*FACT_COLUMNS)
+
+    cost = F.coalesce("Notional Cost (£)", F.lit(0))
+    calls = F.coalesce("NumCalls", F.lit(1))
+    derived = {
+        "IncidentStationGround": F.coalesce("IncidentStationGround", F.lit(UNKNOWN)),
+        "FirstPumpAttendanceTime": F.col("FirstPumpArriving_AttendanceTime"),
+        "FirstPumpStation": F.col("FirstPumpArriving_DeployedFromStation"),
+        "StationsWithPumpsAttending": F.coalesce("NumStationsWithPumpsAttending", F.lit(0)),
+        "PumpsAttending": F.coalesce("NumPumpsAttending", F.lit(0)),
+        "PumpMinutes": F.coalesce("PumpMinutesRounded", F.lit(0)),
+        "NotionalCost": cost,
+        "NumCalls": calls,
+        **{fk: F.coalesce(fk, F.lit(UNKNOWN))
+           for fk in ("LocationTypeKey", "WardID", "AirQualityKey", "WeatherKey", "WellBeingID")},
+        "CostPerCall": F.when(calls > 0, (cost / calls).cast("int")).otherwise(F.lit(0)),
+    }
+    return fact.select(*[derived[c].alias(c) if c in derived else c for c in FACT_COLUMNS])
 
 
 # ---------------------------------------------------------------------------
@@ -484,9 +456,11 @@ def assemble_fact(
 
 def build_marts(fact: DataFrame) -> dict[str, DataFrame]:
     per_month = rollup_mart(
-        fact.withColumn("Year", F.year("DateOfCall"))
-        .withColumn("Month", F.month("DateOfCall"))
-        .withColumn("YearMonth", F.date_format("DateOfCall", "yyyy-MM")),
+        fact.withColumns({
+            "Year": F.year("DateOfCall"),
+            "Month": F.month("DateOfCall"),
+            "YearMonth": F.date_format("DateOfCall", "yyyy-MM"),
+        }),
         keys=["Year", "Month", "YearMonth"],
         measures=[
             F.count("IncidentNumber").alias("IncidentCount"),

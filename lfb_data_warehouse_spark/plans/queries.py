@@ -865,7 +865,7 @@ def date_spine_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Bucketing when-chain (reference weather-cleanse.py:117-137)
+# Strategy-table bucketing (reference weather-cleanse.py:117-137)
 # ---------------------------------------------------------------------------
 
 ACCTBAL_BUCKETS = [
@@ -887,8 +887,8 @@ ACCTBAL_BUCKETS = [
     """,
 )
 def bucketize_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Strategy-table bucketing: the Spark when-chain and the oracle CASE
-    are generated from the SAME table (no drift possible)."""
+    """Strategy-table bucketing: the engine parses the same generated
+    CASE text the oracle embeds (no drift possible)."""
     customer = load_table(spark, sf_dir, "customer")
     banded = customer.withColumn("balance_band", bucketize("c_acctbal", ACCTBAL_BUCKETS))
     return banded.groupBy("balance_band").agg(

@@ -266,6 +266,23 @@ def test_semantic_dedup_null_inputs(emb, extra, survivors):
     assert {r["vec_id"]: r["assigned_label"] for r in out.collect()} == survivors
 
 
+def test_label_centroids_mean_over_non_null_vectors(spark):
+    """A NULL vector counts toward no centroid: label 0's mean is its one
+    vector, not half of it. Label 1 has only a NULL vector; under ANSI
+    mode it yields NULL components, not a division by zero."""
+    from lfb_data_warehouse_spark.operators.similarity import label_centroids
+
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0], 0), (1, None, 0), (2, None, 1)],
+        "vec_id long, embedding array<float>, label int",
+    )
+    got = {
+        r["centroid_label"]: (r["cq"], r["cnorm"])
+        for r in label_centroids(emb, "vec_id", "embedding", "label", dim=3).collect()
+    }
+    assert got == {0: ([10000, 0, 0], 10000**2), 1: ([None, None, None], None)}
+
+
 def test_ivf_persisted_index_search_matches_inline(emb, tmp_path):
     # ivf_build + parquet round-trip + ivf_search == the inline ivf_topk:
     # the persisted-index path (the production shape measured in

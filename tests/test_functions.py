@@ -2,6 +2,7 @@
 
 import hashlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from lfb_data_warehouse_spark.functions.bucketing import NullPolicy, bucketize, bucketize_sql
@@ -18,6 +19,7 @@ from lfb_data_warehouse_spark.functions.keys import (
     hash_key_nullable,
     sentinel_row,
 )
+from tests.test_properties import model_bucketize
 
 
 def test_hash_key_matches_sha256(spark):
@@ -65,11 +67,32 @@ def test_bucketize_edges_and_null_policies(spark):
 
 
 def test_bucketize_sql_twin(spark):
+    """The one generated CASE, parsed by Spark (bucketize) and run by
+    DuckDB (bucketize_sql), labels every edge ±1e-9 and NULL as the
+    Python model does, under both NULL policies. The edges parse as
+    DECIMAL literals on both sides (0.1 is not a binary fraction, 75.0
+    is the widening case); a quote in a label or the default survives
+    the SQL text."""
     import duckdb
 
-    sql = f"SELECT {bucketize_sql('v', BUCKETS)} FROM (VALUES (-1.0),(0.0),(9.999),(10.0),(NULL)) t(v)"
-    got = [r[0] for r in duckdb.connect().execute(sql).fetchall()]
-    assert got == ["neg", "low", "low", "high", "Unknown"]
+    buckets = [(None, -10.0, "low"), (-10.0, 0.1, "it's"), (0.1, 75.0, "mid"),
+               (100.0, None, "high")]  # [75, 100) falls to the default
+    edges = [-10.0, 0.1, 75.0, 100.0]
+    vals = [None] + [e + d for e in edges for d in (-1e-9, 0.0, 1e-9)]
+    rows = list(enumerate(vals))
+    df = spark.createDataFrame(rows, "i long, v double")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (i BIGINT, v DOUBLE)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    for policy, default in [(NullPolicy.UNKNOWN, "o'flow"), (NullPolicy.NULL, None)]:
+        want = [model_bucketize(v, policy, buckets, default) for v in vals]
+        on_spark = df.select("i", bucketize("v", buckets, policy, default).alias("b"))
+        assert [r["b"] for r in on_spark.orderBy("i").collect()] == want
+        sql = f"SELECT {bucketize_sql('v', buckets, policy, default)} FROM t ORDER BY i"
+        assert [r[0] for r in con.execute(sql).fetchall()] == want
+    assert want[1:4] == ["low", "it's", "it's"] and want[10:13] == [None, "high", "high"]
+    with pytest.raises(ValueError, match="backslash"):
+        bucketize_sql("v", [(None, None, "a\\b")])
 
 
 def test_cleansing_scrubs(spark):

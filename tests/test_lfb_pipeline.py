@@ -354,6 +354,42 @@ def test_date_dim_builds_without_a_job(spark):
     assert date_dim(spark, calls.limit(0)).count() == 0
 
 
+def test_dimensions_build_in_few_py4j_calls(raw, monkeypatch):
+    """Building the weather, air-quality and well-being dimensions stays
+    within a budget of Py4J round trips: each strategy table is one
+    parsed CASE and each dependency step one projection. A Column-builder
+    CASE (a call per literal, comparison and branch) or a withColumn loop
+    over the labels exceeds it."""
+    import threading
+
+    from py4j.java_gateway import GatewayClient
+
+    from lfb_data_warehouse_spark.plans.lfb_pipeline import (
+        air_quality_dim,
+        weather_dim,
+        well_being_dim,
+    )
+
+    _, weather, aq, wb = raw
+    # count this thread's calls only: py4j's finalizer thread sends its
+    # object releases through the same client
+    me = threading.get_ident()
+    calls = 0
+    send = GatewayClient.send_command
+
+    def counted(self, *args, **kwargs):
+        nonlocal calls
+        calls += threading.get_ident() == me
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counted)
+    weather_dim(weather)
+    air_quality_dim(aq)
+    well_being_dim(wb)
+    monkeypatch.undo()
+    assert calls <= 2000, calls
+
+
 def test_folded_checks_equal_per_check_formulation(spark):
     """warehouse_checks returns exactly the CheckResult list of one
     action per check, on a warehouse with an empty table, a duplicate

@@ -55,13 +55,13 @@ def test_nearest_within_matches_bruteforce(spark, left, right, tol):
 BUCKETS = [(None, -10.0, "low"), (-10.0, 0.0, "neg"), (0.0, 10.0, "pos"), (10.0, None, "high")]
 
 
-def model_bucketize(v, policy):
+def model_bucketize(v, policy, buckets=BUCKETS, default=None):
     if v is None:
         return "Unknown" if policy is NullPolicy.UNKNOWN else None
-    for lo, hi, label in BUCKETS:
+    for lo, hi, label in buckets:
         if (lo is None or v >= lo) and (hi is None or v < hi):
             return label
-    return None
+    return default
 
 
 @SETTINGS
