@@ -120,7 +120,7 @@ def incremental_dedup_daily(spark, sf_dir):
         incremental_jaccard_pairs,
     )
     from lfb_data_warehouse_spark.operators.graph import (
-        connected_components_star,
+        connected_components,
         incremental_components,
     )
     from lfb_data_warehouse_spark.plans.datapipe_queries import (
@@ -140,7 +140,7 @@ def incremental_dedup_daily(spark, sf_dir):
             old, "doc_id", "text",
             shingle_n=JACCARD_N, threshold=JACCARD_THRESHOLD, group_col="source",
         )
-        connected_components_star(pairs, src="id_a", dst="id_b").write.mode(
+        connected_components(pairs, src="id_a", dst="id_b").write.mode(
             "overwrite"
         ).parquet(d)
         _INC_BENCH_DIRS[sf_dir] = d
@@ -288,7 +288,8 @@ def ivf_search_persisted(spark, sf_dir):
     (ann_ivf_topk) stays as the correctness gate but is the wrong thing
     to time, since rebuilding an index per query does more arithmetic
     than one brute scan by construction (VERDICT r2 item 4; crossover
-    measured in tools/ivf_crossover.py)."""
+    table in BASELINE.md round 2, measured by tools/ivf_crossover.py,
+    last held at commit 1e57315)."""
     import tempfile
 
     from pyspark.sql import functions as F
@@ -341,8 +342,9 @@ def prepare_training_corpus(spark, sf_dir):
     expressions — so the race isolates the composition's 12× shuffle
     cut and zero disk round-trips, not stage formulations). The
     demoted heavy_hitters_sketch_bench row's slot: that sketch's
-    regime is provably unreachable single-node (tools/mg_crossover.py;
-    decision in BASELINE.md), while this composition's win is the
+    regime is provably unreachable single-node (BASELINE.md "MG-sketch
+    vocabulary probe", measured by tools/mg_crossover.py, last held at
+    commit 1e57315), while this composition's win is the
     deployment default at any scale."""
     return REGISTRY["prepare_training_corpus"].fn(spark, sf_dir)
 

@@ -513,7 +513,7 @@ def ivf_build(
     amortized over every search batch — the build scans the corpus
     ``nlist`` times in dot products, so single-shot build+search can
     never beat brute force; persistent index + ``ivf_search`` is the
-    scale path (measured in tools/ivf_crossover.py)."""
+    scale path (crossover table in BASELINE.md round 2)."""
     q = quantize(emb, id_col, vec_col, keep=(label_col,))
     cents = label_centroids(emb, id_col, vec_col, label_col, dim=dim, quantized=q)
     return ivf_index_from_cents(q, cents, id_col), cents

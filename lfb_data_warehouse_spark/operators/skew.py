@@ -20,7 +20,8 @@ Salting is algebra-aware: COUNT recombines by SUM, SUM by SUM, MIN by
 MIN, MAX by MAX (AVG must be decomposed to SUM+COUNT by the caller —
 an average of partial averages is wrong under skew by construction).
 
-Honest scope note (round 12, measured by tools/skew_crossover.py): for
+Honest scope note (round 12; BASELINE.md "Hot-key salting crossover",
+measured by tools/skew_crossover.py, last held at commit 1e57315): for
 exactly the algebraic measures :func:`salted_agg` supports, Spark's
 map-side partial aggregation is ALREADY the skew insurance — each map
 task pre-combines the hot key to one partial row, so the unsalted
@@ -112,8 +113,8 @@ def salted_collect_set(
     needs no re-dedup). Output equals the unsalted
     ``collect_set(value)`` up to array order; sort before comparing.
 
-    Measured crossover (tools/skew_crossover.py, sf0.1 events, hot key
-    amplified with distinct values scaling): naive wins below ~2.5M
+    Measured crossover (BASELINE.md "Hot-key salting crossover", sf0.1
+    events, hot key amplified with distinct values scaling): naive wins below ~2.5M
     hot rows, salted wins from ~4-5M (0.62x at 10.2M rows / 780k
     distinct values) — at 100 TB every skewed key is deep inside the
     salted win regime."""

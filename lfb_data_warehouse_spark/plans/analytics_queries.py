@@ -21,7 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.exact import avg_exact, sum_exact
+from ..functions.exact import sum_exact
 from ..sources.testdata import load_table
 from .queries import register
 

@@ -50,11 +50,10 @@ from ..functions.cleanse import (
     zero_to_null,
     zscore_scrub,
 )
-from ..functions.exact import avg_exact, sum_exact
-from ..functions.keys import UNKNOWN, hash_key, hash_key_nullable, sentinel_row
+from ..functions.keys import UNKNOWN, hash_key, sentinel_row
 from ..operators.agg import pivot_agg, rollup_mart
-from ..operators.checks import CheckResult, run_contract
-from ..operators.dims import collapse_per_key, date_spine, latest_per_group
+from ..operators.checks import CheckResult
+from ..operators.dims import collapse_per_key, date_spine
 from ..operators.temporal import nearest_within
 
 # ---------------------------------------------------------------------------

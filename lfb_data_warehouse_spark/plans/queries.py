@@ -24,7 +24,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.bucketing import NullPolicy, bucketize, bucketize_sql
+from ..functions.bucketing import bucketize, bucketize_sql
 from ..functions.exact import avg_exact, scale_to_long, sum_exact, sum_scaled, unscale
 from ..functions.keys import hash_key, hash_key_nullable, sentinel_row, with_hash_id
 from ..operators.agg import pivot_agg, rollup_mart
@@ -1507,7 +1507,7 @@ def salted_collect_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-resistant HOLISTIC collect (round 12 — the shape where the
     salted second exchange measurably earns its keep, unlike the
     algebraic salted_agg_events; see operators/skew.py's scope note
-    and the tools/skew_crossover.py table in BASELINE.md): distinct
+    and the "Hot-key salting crossover" table in BASELINE.md): distinct
     users are collected per (event_type, hash-of-user salt) so the hot
     key's set merge spreads over 16 reducers, then the disjoint shards
     flatten without re-dedup. The gate reduces the array to scalars

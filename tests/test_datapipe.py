@@ -285,8 +285,8 @@ def test_label_centroids_mean_over_non_null_vectors(spark):
 
 def test_ivf_persisted_index_search_matches_inline(emb, tmp_path):
     # ivf_build + parquet round-trip + ivf_search == the inline ivf_topk:
-    # the persisted-index path (the production shape measured in
-    # tools/ivf_crossover.py) must return identical results
+    # the persisted-index path (the production shape whose crossover
+    # table is in BASELINE.md round 2) must return identical results
     from pyspark.sql import functions as F
 
     from lfb_data_warehouse_spark.operators.similarity import (

@@ -24,6 +24,8 @@ from lfb_data_warehouse_spark.operators.incremental import (
 from lfb_data_warehouse_spark.operators.temporal import interval_join, nearest_within
 from lfb_data_warehouse_spark.operators.topk import max_by_per_group, top_k_per_group
 
+from cc_model import union_find_components
+
 
 def ts(s):
     return dt.datetime.fromisoformat(s)
@@ -360,22 +362,40 @@ def test_merge_mart_equals_full_recompute(spark):
 
 
 def test_connected_components_chain_and_islands(spark):
+    """A 12-node chain, a triangle and a pair, plus a self-loop and NULL
+    endpoints, which are dropped. One driver action per round keeps the
+    whole call within a job budget; a fixpoint test that also counts
+    the edge set and diffs it against the previous round does not. An
+    empty edge frame gives no rows with the (node, component) schema."""
     from lfb_data_warehouse_spark.operators.graph import connected_components
 
-    # a 12-node chain (diameter 11 → forces many propagation rounds and
-    # the lineage checkpoint path) + a separate triangle + an edge pair
     chain = [(i, i + 1) for i in range(1, 12)]
     edges = spark.createDataFrame(
-        chain + [(20, 21), (21, 22), (22, 20), (30, 31)], "src int, dst int"
+        chain + [(20, 21), (21, 22), (22, 20), (30, 31)]
+        + [(40, 40), (None, 50), (51, None), (None, None)],
+        "src int, dst int",
     )
-    out = {r["node"]: r["component"] for r in connected_components(edges).collect()}
-    assert all(out[n] == 1 for n in range(1, 13))
-    assert all(out[n] == 20 for n in (20, 21, 22))
-    assert out[30] == 30 and out[31] == 30
+    sc = spark.sparkContext
+    sc.setJobGroup("cc_chain_and_islands", "connected components fixture")
+    try:
+        out = {r["node"]: r["component"] for r in connected_components(edges).collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup("cc_chain_and_islands"))
+    assert out == {
+        **{n: 1 for n in range(1, 13)}, 20: 20, 21: 20, 22: 20, 30: 30, 31: 30
+    }
+    # 51 jobs with the one-row star-forest check; the bound rejects a
+    # count + subtract fixpoint test (65) and min-label propagation (77)
+    assert jobs <= 58, jobs
+
+    empty = connected_components(spark.createDataFrame([], "src int, dst int"))
+    assert empty.schema.simpleString() == "struct<node:int,component:int>"
+    assert empty.count() == 0
 
 
 def test_connected_components_star_logarithmic_on_chain(spark):
-    from lfb_data_warehouse_spark.operators.graph import connected_components_star
+    from lfb_data_warehouse_spark.operators.graph import connected_components
 
     # a 10k-node CHAIN is the adversarial case for min-label propagation
     # (diameter 9 999 → ~10k shuffle rounds); large-star/small-star must
@@ -387,37 +407,29 @@ def test_connected_components_star_logarithmic_on_chain(spark):
     )
     out = {
         r["node"]: r["component"]
-        for r in connected_components_star(edges, max_iter=20).collect()
+        for r in connected_components(edges, max_iter=20).collect()
     }
     assert len(out) == n
     assert set(out.values()) == {0}
 
 
 def test_connected_components_star_matches_label_propagation(spark):
-    from lfb_data_warehouse_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
+    from lfb_data_warehouse_spark.operators.graph import connected_components
 
-    # chain + triangle + pair + a star fixture (hub with offset leaves)
+    # chain + triangle + pair + a star fixture (hub with offset leaves),
+    # against the union-find model
     chain = [(i, i + 1) for i in range(1, 12)]
     star = [(100, 100 + i) for i in range(1, 8)]
-    edges = spark.createDataFrame(
-        chain + [(20, 21), (21, 22), (22, 20), (30, 31)] + star,
-        "src int, dst int",
-    )
-    want = {r["node"]: r["component"] for r in connected_components(edges).collect()}
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components_star(edges).collect()
-    }
-    assert got == want
+    pairs = chain + [(20, 21), (21, 22), (22, 20), (30, 31)] + star
+    edges = spark.createDataFrame(pairs, "src int, dst int")
+    got = {r["node"]: r["component"] for r in connected_components(edges).collect()}
+    assert got == union_find_components(pairs)
     assert all(got[100 + i] == 100 for i in range(8))
 
 
 def test_incremental_components_equals_full_recompute(spark):
     from lfb_data_warehouse_spark.operators.graph import (
-        connected_components_star,
+        connected_components,
         incremental_components,
     )
 
@@ -427,14 +439,14 @@ def test_incremental_components_equals_full_recompute(spark):
     day2 = [(3, 10), (30, 31), (31, 32)]
     e1 = spark.createDataFrame(day1, "src int, dst int")
     e2 = spark.createDataFrame(day2, "src int, dst int")
-    labels1 = connected_components_star(e1)
+    labels1 = connected_components(e1)
     inc = {
         r["node"]: r["component"]
         for r in incremental_components(labels1, e2).collect()
     }
     full = {
         r["node"]: r["component"]
-        for r in connected_components_star(e1.union(e2)).collect()
+        for r in connected_components(e1.union(e2)).collect()
     }
     assert inc == full
     assert all(inc[n] == 1 for n in (1, 2, 3, 10, 11, 12))  # bridged → min id 1

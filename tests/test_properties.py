@@ -14,6 +14,8 @@ from lfb_data_warehouse_spark.functions.bucketing import NullPolicy, bucketize
 from lfb_data_warehouse_spark.functions.text import shingles
 from lfb_data_warehouse_spark.operators.temporal import nearest_within
 
+from cc_model import union_find_components
+
 EPOCH = dt.datetime(2024, 1, 1)
 
 
@@ -134,61 +136,9 @@ def test_interval_join_matches_bruteforce(spark, points, ivls, gran):
 def test_connected_components_matches_union_find(spark, edges):
     from lfb_data_warehouse_spark.operators.graph import connected_components
 
-    edges = [(a, b) for a, b in edges if a != b]
-    if not edges:
-        return
     edf = spark.createDataFrame(edges, "src int, dst int")
     got = {r["node"]: r["component"] for r in connected_components(edf).collect()}
-
-    parent: dict[int, int] = {}
-
-    def find(x):
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    want = {n: find(n) for n in parent}
-    assert got == want
-
-
-@settings(max_examples=4, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(
-    edges=st.lists(
-        st.tuples(st.integers(0, 25), st.integers(0, 25)), min_size=1, max_size=20
-    )
-)
-def test_connected_components_star_matches_union_find(spark, edges):
-    # each example runs several star rounds (multiple Spark jobs), so
-    # examples are fewer than the label-propagation property's
-    from lfb_data_warehouse_spark.operators.graph import connected_components_star
-
-    edges = [(a, b) for a, b in edges if a != b]
-    if not edges:
-        return
-    edf = spark.createDataFrame(edges, "src int, dst int")
-    got = {
-        r["node"]: r["component"] for r in connected_components_star(edf).collect()
-    }
-
-    parent: dict[int, int] = {}
-
-    def find(x):
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    want = {n: find(n) for n in parent}
-    assert got == want
+    assert got == union_find_components(edges)
 
 
 @settings(max_examples=4, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
@@ -320,18 +270,13 @@ def test_threshold_hex_monotone(f1, f2):
 
 
 def test_components_star_equals_propagation_1k_nodes(spark):
-    """Lock the two PRODUCTION component implementations together on a
-    single adversarial 1k-node fixture (VERDICT r4 item 8): a seeded
-    random graph (sparse — many non-trivial clusters) plus a planted
-    80-node chain, the diameter shape star rounds exist for. Both
-    variants must emit identical labelings; the chain alone is also
-    checked against a union-find model so the fixture can't rot."""
+    """The production components kernel against the union-find model
+    on one adversarial 1k-node fixture: a seeded random graph (sparse —
+    many non-trivial clusters) plus a planted 80-node chain, the
+    diameter shape star rounds exist for."""
     import random
 
-    from lfb_data_warehouse_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
+    from lfb_data_warehouse_spark.operators.graph import connected_components
 
     rng = random.Random(0xC0FFEE)
     n = 1000
@@ -339,15 +284,9 @@ def test_components_star_equals_propagation_1k_nodes(spark):
     chain = [(2000 + i, 2000 + i + 1) for i in range(80)]  # disjoint id space
     edges = [(a, b) for a, b in edges if a != b] + chain
     edf = spark.createDataFrame(edges, "src long, dst long")
-    prop = {
-        r["node"]: r["component"] for r in connected_components(edf, max_iter=200).collect()
-    }
-    star = {
-        r["node"]: r["component"] for r in connected_components_star(edf).collect()
-    }
-    assert star == prop
-    # chain sanity vs a direct model: every chain node labels to 2000
-    assert all(star[2000 + i] == 2000 for i in range(81))
+    got = {r["node"]: r["component"] for r in connected_components(edf).collect()}
+    assert got == union_find_components(edges)
+    assert all(got[2000 + i] == 2000 for i in range(81))
 
 
 @SETTINGS

@@ -470,7 +470,7 @@ def c4_clean_documents(spark, sf_dir):
 def dedup_keep_canonical(spark, sf_dir):
     # naive end-to-end dedup: exploded-shingle pair generation (a
     # shuffle of every shingle OCCURRENCE, vs the engine's map-side
-    # arrays) + the same min-label closure + join-back keep/drop
+    # arrays) + the same components kernel + join-back keep/drop
     from lfb_data_warehouse_spark.operators.graph import connected_components
 
     docs = load_table(spark, sf_dir, "documents")
@@ -547,10 +547,9 @@ def semantic_dedup_keep(spark, sf_dir):
 
 def dedup_components_star(spark, sf_dir):
     # naive cluster assignment: same exploded-shingle pair generation
-    # as naive dedup_keep_canonical, then min-label PROPAGATION
-    # components (the O(diameter) first-pass loop) — the engine's
-    # large/small-star rounds pay ~1.5× the shuffle traffic to bound
-    # rounds at O(log n); this twin prices that premium
+    # as naive dedup_keep_canonical, then the engine's one components
+    # kernel — so the bench ratio prices only the pair generation, not
+    # one components algorithm against another
     from lfb_data_warehouse_spark.operators.graph import connected_components
 
     docs = load_table(spark, sf_dir, "documents")

@@ -119,7 +119,7 @@ def _inc_labels_path(spark, sf_dir: str) -> str:
     from pyspark.sql import functions as F
 
     from lfb_data_warehouse_spark.operators.dedup import all_pairs_jaccard
-    from lfb_data_warehouse_spark.operators.graph import connected_components_star
+    from lfb_data_warehouse_spark.operators.graph import connected_components
     from lfb_data_warehouse_spark.plans.datapipe_queries import (
         JACCARD_N,
         JACCARD_THRESHOLD,
@@ -136,7 +136,7 @@ def _inc_labels_path(spark, sf_dir: str) -> str:
             shingle_n=JACCARD_N, threshold=JACCARD_THRESHOLD, group_col="source",
         )
         d = tempfile.mkdtemp(prefix="lfb_inc_labels_")
-        connected_components_star(pairs, src="id_a", dst="id_b").write.mode(
+        connected_components(pairs, src="id_a", dst="id_b").write.mode(
             "overwrite"
         ).parquet(d)
         _INC_LABEL_DIRS[sf_dir] = d
@@ -547,7 +547,7 @@ now measured):
     key, 40-char ASCII-folded prefix), never full text; the
     within-block self-join reads the same exchange twice (w 0.9 /
     r 1.8 MB). The quadratic lives inside blocks after the exchange
-    and is bounded by block size (tools/edit_blocking_probe.py's
+    and is bounded by block size (SCALE.md's "Edit-distance blocking"
     linear-vs-quadratic table).
   - `avi_mjpeg_decode_stats` (sh/in 0.059, 0.0 MB): video joins the
     media tier's zero-exchange shape — the AVI tree walk and the
