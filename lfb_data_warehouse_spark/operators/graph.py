@@ -2,23 +2,42 @@
 
 A dedup pipeline's pair finders (MinHash/SimHash/embedding LSH) emit
 EDGES (doc_a, doc_b); keeping one survivor per *cluster* needs the
-transitive closure — the classic union-find step, here as alternating
-large-star/small-star rounds (Kiveris et al., "Connected Components in
-MapReduce and Beyond", SoCC 2014) expressed in DataFrame joins. The
-rounds converge in O(log n) regardless of component DIAMETER, so a
-chain-shaped dup cluster at 100 TB costs a few dozen rounds, not one
-round per link as min-label propagation would.
+transitive closure. :func:`connected_components` takes one of two paths,
+chosen by one bounded fetch of at most ``LOCAL_EDGE_CAP + 1`` distinct
+edges:
 
-Each round is a handful of shuffles on the node key. The driver takes
-one action per round: a one-row aggregate asking whether the edge set
-has become a star forest. Lineage is truncated by a local checkpoint
-every second round (executor-side, no driver collect).
+* At or below the cap, the driver labels the fetched edges with
+  union-find and sends the labels back as an Arrow-built frame: no
+  round, no fixpoint check.
+* Above it, alternating large-star/small-star rounds (Kiveris et al.,
+  "Connected Components in MapReduce and Beyond", SoCC 2014) run in
+  DataFrame joins. They converge in O(log n) regardless of component
+  DIAMETER, so a chain-shaped dup cluster at 100 TB costs a few dozen
+  rounds, not one round per link as min-label propagation would. Each
+  round is a handful of shuffles on the node key. The driver takes one
+  action per round: a one-row aggregate asking whether the edge set has
+  become a star forest. Lineage is truncated by a local checkpoint every
+  second round (executor-side, no driver collect).
+
+The cap was measured on a 4-core box in one ``local[4]`` session with
+a 2 GB driver heap, timing both paths (input plan, kernel and a noop
+write) on random and chain-shaped graphs. At 10k, 100k and 1M edges the
+union-find path took 0.19/0.55/4.5 s on random graphs against
+2.5/4.3/20.7 s for the star rounds, and 0.17/0.50/3.9 s on chains
+against 7.6/17.3/91.8 s. The driver's Python process peaked 2, 13 and
+146 MB higher. 100k is the largest of these sizes at which that growth
+stays small; at 1M it does not.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+# Largest distinct-edge count labelled on the driver (measured above).
+LOCAL_EDGE_CAP = 100_000
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -74,6 +93,33 @@ def _is_star_forest(e: DataFrame) -> bool:
     return worst is None or worst <= 1
 
 
+def _label_on_driver(e: DataFrame, head: pa.Table) -> DataFrame:
+    """Union-find over the fetched ``(u, v)`` edges, each root the
+    minimum id of its set, returned as ``(node, component)`` in ``u``'s
+    type.
+
+    The labels go back as an Arrow table, which ``createDataFrame``
+    reads in the JVM whether or not the session enables Arrow
+    conversion. A frame built from tuples would run a Python task on
+    every later scan, as the pickled rows are re-serialized each time."""
+    parent: dict = {}
+
+    def find(x):
+        while (p := parent.setdefault(x, x)) != x:
+            parent[x] = x = parent[p]
+        return x
+
+    for a, b in zip(head.column("u").to_pylist(), head.column("v").to_pylist()):
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    t = e.schema["u"].dataType
+    schema = StructType([StructField("node", t), StructField("component", t)])
+    nodes = list(parent)
+    labels = pa.table({"node": nodes, "component": [find(n) for n in nodes]})
+    return e.sparkSession.createDataFrame(labels, schema)
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -86,19 +132,26 @@ def connected_components(
     self-loops and edges with a NULL endpoint are dropped. Returns
     ``(node, component)`` — component = min id in the cluster; singleton
     nodes that never appear in an edge are absent (callers left-join and
-    coalesce to the node's own id).
+    coalesce to the node's own id). Both columns keep the node type
+    (``src`` and ``dst`` share one).
 
-    The loop stops at the first round whose output is a star forest.
-    That test is exact: every small-star edge points to a strictly
-    smaller id and the rounds preserve connectivity, so each star's
-    centre is its component's minimum."""
+    Up to ``LOCAL_EDGE_CAP`` distinct edges are labelled on the driver.
+    Above it the star rounds run, and the loop stops at the first round
+    whose output is a star forest. That test is exact: every small-star
+    edge points to a strictly smaller id and the rounds preserve
+    connectivity, so each star's centre is its component's minimum."""
     e = (
         edges.selectExpr(f"{src} AS u", f"{dst} AS v")
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        # lazy: the first round's check materializes the blocks
+        # lazy: the fetch below materializes the blocks, so the star
+        # rounds read them and the upstream pair finders run once
         .localCheckpoint(eager=False)
     )
+    # bounded: at most LOCAL_EDGE_CAP + 1 rows
+    head = e.limit(LOCAL_EDGE_CAP + 1).toArrow()
+    if head.num_rows <= LOCAL_EDGE_CAP:
+        return _label_on_driver(e, head)
     for i in range(max_iter):
         e2 = _small_star(_large_star(e))
         # lazy for the same reason: the check is the materializing action

@@ -361,12 +361,14 @@ def test_merge_mart_equals_full_recompute(spark):
     assert "z" in merged
 
 
-def test_connected_components_chain_and_islands(spark):
+def test_connected_components_chain_and_islands(spark, cc_paths):
     """A 12-node chain, a triangle and a pair, plus a self-loop and NULL
-    endpoints, which are dropped. One driver action per round keeps the
-    whole call within a job budget; a fixpoint test that also counts
-    the edge set and diffs it against the previous round does not. An
-    empty edge frame gives no rows with the (node, component) schema."""
+    endpoints, which are dropped. Each path has its own job budget: the
+    driver union-find takes one bounded fetch and no round, and the star
+    rounds take one driver action per round; a fixpoint test that also
+    counts the edge set and diffs it against the previous round does
+    not fit. An empty edge frame gives no rows with the (node,
+    component) schema."""
     from lfb_data_warehouse_spark.operators.graph import connected_components
 
     chain = [(i, i + 1) for i in range(1, 12)]
@@ -376,44 +378,134 @@ def test_connected_components_chain_and_islands(spark):
         "src int, dst int",
     )
     sc = spark.sparkContext
-    sc.setJobGroup("cc_chain_and_islands", "connected components fixture")
-    try:
-        out = {r["node"]: r["component"] for r in connected_components(edges).collect()}
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup("cc_chain_and_islands"))
-    assert out == {
-        **{n: 1 for n in range(1, 13)}, 20: 20, 21: 20, 22: 20, 30: 30, 31: 30
-    }
-    # 51 jobs with the one-row star-forest check; the bound rejects a
-    # count + subtract fixpoint test (65) and min-label propagation (77)
-    assert jobs <= 58, jobs
+    # local: 2 jobs, where the star-only kernel took 51. star: 51 jobs;
+    # the bound rejects a count + subtract fixpoint test (65) and
+    # min-label propagation (77)
+    budget = {"local": 3, "star": 58}
+    for path in cc_paths():
+        group = f"cc_chain_and_islands_{path}"
+        sc.setJobGroup(group, "connected components fixture")
+        try:
+            out = {r["node"]: r["component"] for r in connected_components(edges).collect()}
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert out == {
+            **{n: 1 for n in range(1, 13)}, 20: 20, 21: 20, 22: 20, 30: 30, 31: 30
+        }, path
+        assert jobs <= budget[path], (path, jobs)
 
-    empty = connected_components(spark.createDataFrame([], "src int, dst int"))
-    assert empty.schema.simpleString() == "struct<node:int,component:int>"
-    assert empty.count() == 0
+        empty = connected_components(spark.createDataFrame([], "src int, dst int"))
+        assert empty.schema.simpleString() == "struct<node:int,component:int>", path
+        assert empty.count() == 0, path
 
 
-def test_connected_components_star_logarithmic_on_chain(spark):
+def test_connected_components_paths_meet_at_the_cap(spark, monkeypatch):
+    """With the cap patched to n, exactly n distinct edges (each given
+    twice) take the driver union-find and n + 1 take the star rounds;
+    both give the union-find model's labels."""
+    from lfb_data_warehouse_spark.operators import graph
+
+    n = 12
+    monkeypatch.setattr(graph, "LOCAL_EDGE_CAP", n)
+    local_calls = []
+    label_on_driver = graph._label_on_driver
+
+    def spy(e, head):
+        local_calls.append(head.num_rows)
+        return label_on_driver(e, head)
+
+    monkeypatch.setattr(graph, "_label_on_driver", spy)
+    for k, took_local in ((n, [n]), (n + 1, [])):
+        pairs = [(i, 2 * i + 1) for i in range(k)]
+        local_calls.clear()
+        edf = spark.createDataFrame(pairs + pairs, "src int, dst int")
+        got = {r["node"]: r["component"] for r in graph.connected_components(edf).collect()}
+        assert local_calls == took_local, k
+        assert got == union_find_components(pairs), k
+
+
+def test_connected_components_keep_the_node_type(spark, cc_paths):
+    """int, bigint and string node columns keep their type on both
+    paths, and an input of only self-loops and NULL endpoints gives no
+    rows with the (node, component) schema. Arrow conversion is off, as
+    in a plain session: the driver path's labels frame must not need it."""
     from lfb_data_warehouse_spark.operators.graph import connected_components
+
+    cases = {
+        "int": [(3, 1), (1, 2), (7, 8)],
+        "bigint": [(2**40 + 1, 2**40), (5, 2**40)],
+        "string": [("b", "a"), ("é", "b"), ("z", "y")],
+    }
+    junk = spark.createDataFrame(
+        [(4, 4), (None, 5), (6, None), (None, None)], "src int, dst int"
+    )
+    arrow_conf = "spark.sql.execution.arrow.pyspark.enabled"
+    arrow_was = spark.conf.get(arrow_conf)
+    spark.conf.set(arrow_conf, "false")
+    try:
+        for path in cc_paths():
+            for t, pairs in cases.items():
+                edf = spark.createDataFrame(pairs, f"src {t}, dst {t}")
+                out = connected_components(edf)
+                assert out.schema.simpleString() == f"struct<node:{t},component:{t}>", (path, t)
+                got = {r["node"]: r["component"] for r in out.collect()}
+                assert got == union_find_components(pairs), (path, t)
+            none = connected_components(junk)
+            assert none.schema.simpleString() == "struct<node:int,component:int>", path
+            assert none.count() == 0, path
+    finally:
+        spark.conf.set(arrow_conf, arrow_was)
+
+
+def test_connected_components_fetch_runs_upstream_once(spark, cc_paths):
+    """The bounded fetch fills the edge set's checkpoint, so the plan
+    feeding the kernel (here a Python UDF counting the rows it sees, in
+    place of a pair finder) runs once on either path: the star rounds
+    read the checkpoint, not the input plan."""
+    from lfb_data_warehouse_spark.operators.graph import connected_components
+
+    pairs = [(i, i + 1) for i in range(40)] + [(100, 101)]
+    base = spark.createDataFrame(pairs, "src int, dst int")
+    for path in cc_paths():
+        seen = spark.sparkContext.accumulator(0)
+
+        def tally(x):
+            seen.add(1)
+            return x
+
+        # nondeterministic, so the optimizer neither copies it into the
+        # pushed-down self-loop filter nor evaluates it twice per row
+        counted = F.udf(tally, "int").asNondeterministic()
+        edf = base.select(counted("src").alias("src"), "dst")
+        got = {r["node"]: r["component"] for r in connected_components(edf).collect()}
+        assert got == union_find_components(pairs), path
+        assert seen.value == len(pairs), (path, seen.value)
+
+
+def test_connected_components_star_logarithmic_on_chain(spark, monkeypatch):
+    from lfb_data_warehouse_spark.operators import graph
 
     # a 10k-node CHAIN is the adversarial case for min-label propagation
     # (diameter 9 999 → ~10k shuffle rounds); large-star/small-star must
     # converge in O(log n) rounds — max_iter=20 > 2*log2(10 000) + slack,
-    # so mere termination without RuntimeError IS the bound assertion
+    # so mere termination without RuntimeError IS the bound assertion.
+    # The cap is patched below the chain's 9 999 edges, so the fetch sees
+    # more than the cap and the star rounds run.
     n = 10_000
+    monkeypatch.setattr(graph, "LOCAL_EDGE_CAP", n // 2)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "src long, dst long"
     )
     out = {
         r["node"]: r["component"]
-        for r in connected_components(edges, max_iter=20).collect()
+        for r in graph.connected_components(edges, max_iter=20).collect()
     }
     assert len(out) == n
     assert set(out.values()) == {0}
 
 
-def test_connected_components_star_matches_label_propagation(spark):
+def test_connected_components_star_matches_label_propagation(spark, cc_paths):
     from lfb_data_warehouse_spark.operators.graph import connected_components
 
     # chain + triangle + pair + a star fixture (hub with offset leaves),
@@ -422,12 +514,13 @@ def test_connected_components_star_matches_label_propagation(spark):
     star = [(100, 100 + i) for i in range(1, 8)]
     pairs = chain + [(20, 21), (21, 22), (22, 20), (30, 31)] + star
     edges = spark.createDataFrame(pairs, "src int, dst int")
-    got = {r["node"]: r["component"] for r in connected_components(edges).collect()}
-    assert got == union_find_components(pairs)
-    assert all(got[100 + i] == 100 for i in range(8))
+    for path in cc_paths():
+        got = {r["node"]: r["component"] for r in connected_components(edges).collect()}
+        assert got == union_find_components(pairs), path
+        assert all(got[100 + i] == 100 for i in range(8)), path
 
 
-def test_incremental_components_equals_full_recompute(spark):
+def test_incremental_components_equals_full_recompute(spark, cc_paths):
     from lfb_data_warehouse_spark.operators.graph import (
         connected_components,
         incremental_components,
@@ -439,18 +532,19 @@ def test_incremental_components_equals_full_recompute(spark):
     day2 = [(3, 10), (30, 31), (31, 32)]
     e1 = spark.createDataFrame(day1, "src int, dst int")
     e2 = spark.createDataFrame(day2, "src int, dst int")
-    labels1 = connected_components(e1)
-    inc = {
-        r["node"]: r["component"]
-        for r in incremental_components(labels1, e2).collect()
-    }
-    full = {
-        r["node"]: r["component"]
-        for r in connected_components(e1.union(e2)).collect()
-    }
-    assert inc == full
-    assert all(inc[n] == 1 for n in (1, 2, 3, 10, 11, 12))  # bridged → min id 1
-    assert inc[20] == 20 and inc[30] == 30  # untouched / new clusters
+    for path in cc_paths():
+        labels1 = connected_components(e1)
+        inc = {
+            r["node"]: r["component"]
+            for r in incremental_components(labels1, e2).collect()
+        }
+        full = {
+            r["node"]: r["component"]
+            for r in connected_components(e1.union(e2)).collect()
+        }
+        assert inc == full, path
+        assert all(inc[n] == 1 for n in (1, 2, 3, 10, 11, 12)), path  # bridged → min id 1
+        assert inc[20] == 20 and inc[30] == 30, path  # untouched / new clusters
 
 
 def test_approx_ntile_matches_exact_window(spark):

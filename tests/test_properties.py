@@ -133,12 +133,13 @@ def test_interval_join_matches_bruteforce(spark, points, ivls, gran):
         st.tuples(st.integers(0, 25), st.integers(0, 25)), min_size=1, max_size=30
     )
 )
-def test_connected_components_matches_union_find(spark, edges):
+def test_connected_components_matches_union_find(spark, cc_paths, edges):
     from lfb_data_warehouse_spark.operators.graph import connected_components
 
     edf = spark.createDataFrame(edges, "src int, dst int")
-    got = {r["node"]: r["component"] for r in connected_components(edf).collect()}
-    assert got == union_find_components(edges)
+    for path in cc_paths():
+        got = {r["node"]: r["component"] for r in connected_components(edf).collect()}
+        assert got == union_find_components(edges), path
 
 
 @settings(max_examples=4, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
@@ -269,7 +270,7 @@ def test_threshold_hex_monotone(f1, f2):
     assert _threshold_hex(lo) <= _threshold_hex(hi)
 
 
-def test_components_star_equals_propagation_1k_nodes(spark):
+def test_components_star_equals_propagation_1k_nodes(spark, cc_paths):
     """The production components kernel against the union-find model
     on one adversarial 1k-node fixture: a seeded random graph (sparse —
     many non-trivial clusters) plus a planted 80-node chain, the
@@ -284,9 +285,10 @@ def test_components_star_equals_propagation_1k_nodes(spark):
     chain = [(2000 + i, 2000 + i + 1) for i in range(80)]  # disjoint id space
     edges = [(a, b) for a, b in edges if a != b] + chain
     edf = spark.createDataFrame(edges, "src long, dst long")
-    got = {r["node"]: r["component"] for r in connected_components(edf).collect()}
-    assert got == union_find_components(edges)
-    assert all(got[2000 + i] == 2000 for i in range(81))
+    for path in cc_paths():
+        got = {r["node"]: r["component"] for r in connected_components(edf).collect()}
+        assert got == union_find_components(edges), path
+        assert all(got[2000 + i] == 2000 for i in range(81)), path
 
 
 @SETTINGS
