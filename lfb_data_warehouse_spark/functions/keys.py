@@ -18,9 +18,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Row
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.io import local_frame
 from .bucketing import sql_string
 
 UNKNOWN = "Unknown"
@@ -59,19 +60,12 @@ def sentinel_row(df: DataFrame, key_col: str, defaults: dict[str, object] | None
     wb-dimension.py:53-66): key column ← "Unknown", string columns ←
     "Unknown", everything else ← NULL unless overridden in ``defaults``.
     """
-    defaults = defaults or {}
-    values = {}
-    for field in df.schema.fields:
-        if field.name == key_col:
-            values[field.name] = UNKNOWN
-        elif field.name in defaults:
-            values[field.name] = defaults[field.name]
-        elif field.dataType.typeName() == "string":
-            values[field.name] = UNKNOWN
-        else:
-            values[field.name] = None
-    sentinel = df.sparkSession.createDataFrame([Row(**values)], schema=df.schema)
-    return df.unionByName(sentinel)
+    fill = {**(defaults or {}), key_col: UNKNOWN}
+    row = [
+        fill.get(f.name, UNKNOWN if f.dataType.typeName() == "string" else None)
+        for f in df.schema.fields
+    ]
+    return df.unionByName(local_frame(df.sparkSession, [row], df.schema))
 
 
 def with_hash_id(df: DataFrame, id_col: str, cols: Sequence[str], sep: str = SEP) -> DataFrame:

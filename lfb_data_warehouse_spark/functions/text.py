@@ -119,14 +119,9 @@ def salted_minhash_sql(shingle: str, salt: int, hex_chars: int = 16) -> str:
 HEX_HIGH = list("89abcdef")  # hex digits whose high bit is 1
 
 
-def simhash_bit_weight(word: Column, bit: int) -> Column:
-    """±1 contribution of a token to SimHash bit ``bit`` (0-based):
-    the high bit of hex digit ``bit`` of md5(word) — 32 bits from 32
-    nibbles, no integer conversion needed."""
-    return F.when(F.substring(F.md5(word), bit + 1, 1).isin(HEX_HIGH), 1).otherwise(-1)
-
-
 def simhash_bit_weight_sql(word: str, bit: int) -> str:
+    """±1 contribution of a token to SimHash bit ``bit`` (0-based): the
+    high bit of hex digit ``bit`` of md5(word)."""
     digits = ", ".join(f"'{d}'" for d in HEX_HIGH)
     return f"CASE WHEN substr(md5({word}), {bit + 1}, 1) IN ({digits}) THEN 1 ELSE -1 END"
 

@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.io import local_frame
+
 SEP = "\x1f"
 _MAX_RUN = 16  # replace-chain depth; words capped at 2*_MAX_RUN symbols
 MAX_WORD_LEN = 2 * _MAX_RUN
@@ -178,8 +180,5 @@ def bpe_train(
             seg = nxt
     finally:
         seg.unpersist()
-    return spark.createDataFrame(
-        merges,
-        "merge_rank int, left_sym string, right_sym string, "
-        "merged string, pair_count long",
-    )
+    schema = "merge_rank int, left_sym string, right_sym string, merged string, pair_count long"
+    return local_frame(spark, merges, schema)

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import HEX_HIGH, shingles, tokens
+from ..sources.io import local_frame
 
 # Hot-shingle guard for the exact pair kernels (r15). A shingle shared
 # by d docs generates d^2 join rows IN ONE TASK of the shuffle join —
@@ -83,8 +84,7 @@ def _hot_keys(sets: DataFrame, join_cols: list[str], hot_cap: int):
     hot_rows = freq.filter(F.col("__df") > hot_cap).collect()
     if not hot_rows:
         return None, 0, 0
-    spark = sets.sparkSession
-    hot = spark.createDataFrame(hot_rows, schema=freq.schema).select(
+    hot = local_frame(sets.sparkSession, hot_rows, freq.schema).select(
         *[F.col(c) for c in join_cols]
     )
     n_salt = _salt_count(max(r["__df"] for r in hot_rows))

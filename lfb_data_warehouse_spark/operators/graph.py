@@ -34,7 +34,8 @@ from __future__ import annotations
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+
+from ..sources.io import local_frame
 
 # Largest distinct-edge count labelled on the driver (measured above).
 LOCAL_EDGE_CAP = 100_000
@@ -95,13 +96,8 @@ def _is_star_forest(e: DataFrame) -> bool:
 
 def _label_on_driver(e: DataFrame, head: pa.Table) -> DataFrame:
     """Union-find over the fetched ``(u, v)`` edges, each root the
-    minimum id of its set, returned as ``(node, component)`` in ``u``'s
-    type.
-
-    The labels go back as an Arrow table, which ``createDataFrame``
-    reads in the JVM whether or not the session enables Arrow
-    conversion. A frame built from tuples would run a Python task on
-    every later scan, as the pickled rows are re-serialized each time."""
+    minimum id of its set, returned as a local frame of
+    ``(node, component)`` in ``u``'s type."""
     parent: dict = {}
 
     def find(x):
@@ -113,11 +109,8 @@ def _label_on_driver(e: DataFrame, head: pa.Table) -> DataFrame:
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    t = e.schema["u"].dataType
-    schema = StructType([StructField("node", t), StructField("component", t)])
-    nodes = list(parent)
-    labels = pa.table({"node": nodes, "component": [find(n) for n in nodes]})
-    return e.sparkSession.createDataFrame(labels, schema)
+    t = e.schema["u"].dataType.simpleString()
+    return local_frame(e.sparkSession, [(n, find(n)) for n in parent], f"node {t}, component {t}")
 
 
 def connected_components(

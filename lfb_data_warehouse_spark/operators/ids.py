@@ -26,6 +26,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.io import local_frame
+
 
 def assign_dense_ids(
     df: DataFrame,
@@ -54,7 +56,7 @@ def assign_dense_ids(
     for pid, n in counts:
         offsets.append((pid, acc))
         acc += n
-    off_df = spark.createDataFrame(offsets, "__pid int, __offset long")
+    off_df = local_frame(spark, offsets, "__pid int, __offset long")
     w_local = Window.partitionBy("__pid").orderBy(*[F.col(c).asc() for c in order_cols])
     return (
         with_pid.join(F.broadcast(off_df), "__pid")

@@ -31,6 +31,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.io import local_frame
+
 
 def pack_sequences(
     df: DataFrame,
@@ -64,9 +66,8 @@ def pack_sequences(
         g = row[group_col]
         offsets.append((row["__pid"], g, acc.get(g, 0)))
         acc[g] = acc.get(g, 0) + row["__t"]
-    off_df = spark.createDataFrame(
-        [(p, g, o) for p, g, o in offsets],
-        schema=staged.select("__pid", group_col).schema.add("__offset", "long"),
+    off_df = local_frame(
+        spark, offsets, staged.select("__pid", group_col).schema.add("__offset", "long")
     )
     w_local = Window.partitionBy("__pid", group_col).orderBy(
         *[F.col(c).asc() for c in order_cols]

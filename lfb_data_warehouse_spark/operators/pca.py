@@ -32,6 +32,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.io import local_frame
 from .similarity import quantize
 
 
@@ -174,8 +175,8 @@ def pca_claims(emb: DataFrame, id_col: str, vec_col: str, dim: int, k: int) -> D
         rows.append(
             (j, str(model.trace_num), orthonormal_ok, monotone_ok, bool(ok))
         )
-    spark = emb.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        emb.sparkSession,
         rows,
         "component long, trace_num string, orthonormal_ok boolean, "
         "monotone_ok boolean, var_matches_eigenvalue boolean",

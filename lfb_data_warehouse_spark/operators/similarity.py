@@ -30,6 +30,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.io import local_frame
+
 QUANT_SCALE = 10000
 
 
@@ -847,9 +849,10 @@ def kmeans_centroids_q(
     sparse/offset id spaces)."""
     rows = _kmeans_rows(q, id_col, k, iters, dim)
     label_t = q.schema[id_col].dataType.simpleString()
-    return q.sparkSession.createDataFrame(
+    return local_frame(
+        q.sparkSession,
         [(r["centroid_label"], list(r["cq"]), int(r["cnorm"])) for r in rows],
-        schema=f"centroid_label {label_t}, cq array<bigint>, cnorm bigint",
+        f"centroid_label {label_t}, cq array<bigint>, cnorm bigint",
     )
 
 

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.exact import sum_exact
+from ..sources.io import local_frame
 from ..sources.testdata import load_table
 from .queries import register
 
@@ -388,7 +389,8 @@ def observe_ingest_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     observed.count()  # the consuming action; metrics materialize here
     m = obs.get
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(m["n_rows"], m["total_chars"], m["max_chars"], m["n_empty"])],
         "n_rows long, total_chars long, max_chars long, n_empty long",
     )

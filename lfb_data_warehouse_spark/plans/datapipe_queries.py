@@ -43,6 +43,7 @@ from ..operators.similarity import (
     semantic_dedup,
     semantic_dedup_drops,
 )
+from ..sources.io import local_frame
 from ..sources.testdata import load_table
 from .queries import register
 
@@ -2983,7 +2984,7 @@ def pq_codebook_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
         for m, cb in enumerate(cbs)
         for c, cw in enumerate(cb)
     ]
-    return spark.createDataFrame(rows, "m long, code long, codeword string")
+    return local_frame(spark, rows, "m long, code long, codeword string")
 
 
 def _ivf_pq_oracle() -> str:

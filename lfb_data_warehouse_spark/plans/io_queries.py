@@ -62,7 +62,7 @@ def _stage(spark: SparkSession, sf_dir: str, fmt: str) -> str:
         # would omit the filter entirely (the dictionary already skips
         # exactly); at 100 TB a point-lookup column overflows the
         # dictionary cap and lands PLAIN + bloom — the shape this
-        # stage pins (see io._with_bloom_options).
+        # stage pins (see io._writer).
         write_parquet(
             li,
             path,

@@ -137,10 +137,11 @@ def incident_type_dim(clean: DataFrame) -> DataFrame:
     )
     # the all-unknown member already keys as "Unknown"; ensure exactly one
     # sentinel row exists even on corpora with no unknown incidents
-    sentinel = dim.sparkSession.createDataFrame(
-        [(UNKNOWN, "Unknown incident type", UNKNOWN)], dim.schema
+    return sentinel_row(
+        dim.filter(F.col("IncidentTypeKey") != UNKNOWN),
+        "IncidentTypeKey",
+        {"IncidentDescription": "Unknown incident type"},
     )
-    return dim.filter(F.col("IncidentTypeKey") != UNKNOWN).unionByName(sentinel)
 
 
 def location_type_dim(clean: DataFrame) -> DataFrame:
@@ -153,8 +154,7 @@ def location_type_dim(clean: DataFrame) -> DataFrame:
         .select(*[F.coalesce(c, F.lit(UNKNOWN)).alias(c) for c in cols])
         .withColumn("LocationTypeKey", hash_key(*cols))
     )
-    sentinel = dim.sparkSession.createDataFrame([(UNKNOWN, UNKNOWN, UNKNOWN)], dim.schema)
-    return dim.unionByName(sentinel)
+    return sentinel_row(dim, "LocationTypeKey")
 
 
 def ward_dim(clean: DataFrame) -> DataFrame:

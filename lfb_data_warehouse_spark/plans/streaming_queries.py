@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.exact import sum_exact
+from ..sources.io import local_frame
 from ..sources.testdata import load_table
 from ..streaming.ops import stream_session_agg, stream_windowed_agg
 from .queries import register
@@ -582,10 +583,12 @@ def _stage_late_tranches(spark: SparkSession, sf_dir: str) -> str:
     cutoff = F.lit(_LATE_CUTOFF).cast("timestamp")
     t0 = events.filter(F.col("ts") < cutoff)
     t1 = events.filter(F.col("ts") >= cutoff)
-    max_ts = events.agg(F.max("ts")).collect()[0][0]
+    # collect() gives local time; local_frame reads a naive value as UTC
+    max_ts = events.agg(F.max("ts")).collect()[0][0].astimezone(dt.timezone.utc)
 
     def flush(eid: int, hours: int) -> DataFrame:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(eid, max_ts + dt.timedelta(hours=hours), 0, "__flush__", 0.0, None)],
             events.schema,
         )

@@ -43,6 +43,9 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # AQE coalesces a persisted frame's partitions as it does an
+        # uncached plan's: the warehouse fact is written as 1 file, not 4
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")

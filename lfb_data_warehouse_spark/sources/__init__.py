@@ -4,4 +4,4 @@ from .io import (  # noqa: F401
     write_parquet,
     write_table,
 )
-from .testdata import TESTDATA_TABLES, load_table, load_tables  # noqa: F401
+from .testdata import TESTDATA_TABLES, load_table  # noqa: F401

@@ -16,10 +16,12 @@ parquet row-group min/max statistics enable data skipping.
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Iterable, Mapping, Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 
@@ -45,6 +47,25 @@ def read_csv(
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """Parquet scan (S3) — columnar, predicate pushdown, column pruning."""
     return spark.read.parquet(path)
+
+
+def local_frame(spark: SparkSession, rows: Iterable[Sequence], schema: StructType | str) -> DataFrame:
+    """A frame over rows computed on the driver (a sentinel member, an
+    offset or centroid table, a query's result rows), typed by
+    ``schema``, a ``StructType`` or a DDL string.
+
+    The rows reach the JVM as one Arrow table, which ``createDataFrame``
+    reads itself whether or not the session enables Arrow conversion,
+    and which Spark plans as a ``LocalTableScan``. A frame built from
+    tuples or ``Row``s is a pickled ``parallelize`` RDD instead: every
+    later scan re-serializes its rows in a Python task per slice (a
+    ``PythonRDD`` in its lineage). A naive ``datetime`` is read as UTC,
+    not in the Python process's local time zone."""
+    schema = StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    arrays = [pa.array(c, f.type) for c, f in zip(cols, arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema)
 
 
 def conform(df: DataFrame, schema: StructType, renames: Mapping[str, str] | None = None) -> DataFrame:
@@ -86,20 +107,13 @@ def write_parquet(
     ``bloom_filter_for`` writes NDV-sized parquet bloom filters (see
     :func:`write_table`); ``options`` passes arbitrary writer options
     through (e.g. ``parquet.enable.dictionary#col``)."""
-    if cluster_by:
-        df = _cluster(df, cluster_by)
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer = _with_bloom_options(writer, bloom_filter_for)
-    for k, v in (options or {}).items():
-        writer = writer.option(k, v)
-    writer.parquet(path)
+    _writer(df, mode, partition_by, cluster_by, bloom_filter_for, options).parquet(path)
 
 
-def _with_bloom_options(writer, bloom_filter_for):
-    """Apply parquet bloom-filter write options (round 12): enable per
-    column, plus expected-NDV sizing when a mapping is passed.
+def _writer(df, mode, partition_by, cluster_by, bloom_filter_for, options):
+    """The writer both sinks share: S8 clustering, partition columns,
+    parquet bloom filters (round 12: enabled per column, sized by the
+    expected NDV when a mapping is passed) and any other options.
 
     Dictionary interaction (round 13, measured): parquet-mr OMITS the
     bloom filter for a column chunk whose pages are all
@@ -110,17 +124,18 @@ def _with_bloom_options(writer, bloom_filter_for):
     when the filter is actually written; to reproduce that shape on
     small test data, additionally pass
     ``options={"parquet.enable.dictionary#col": "false"}``."""
+    if cluster_by:
+        df = _cluster(df, cluster_by)
+    writer = df.write.mode(mode)
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
     for col in bloom_filter_for or ():
         writer = writer.option(f"parquet.bloom.filter.enabled#{col}", "true")
-        ndv = (
-            bloom_filter_for[col]
-            if isinstance(bloom_filter_for, Mapping)
-            else None
-        )
+        ndv = bloom_filter_for[col] if isinstance(bloom_filter_for, Mapping) else None
         if ndv:
-            writer = writer.option(
-                f"parquet.bloom.filter.expected.ndv#{col}", str(int(ndv))
-            )
+            writer = writer.option(f"parquet.bloom.filter.expected.ndv#{col}", str(int(ndv)))
+    for k, v in (options or {}).items():
+        writer = writer.option(k, v)
     return writer
 
 
@@ -165,16 +180,8 @@ def write_table(
     every row group of a shard and touching only the groups whose
     filter admits the key.
     """
-    spark = df.sparkSession
-    if cluster_by:
-        df = _cluster(df, cluster_by)
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer = _with_bloom_options(writer, bloom_filter_for)
-    for k, v in (options or {}).items():
-        writer = writer.option(k, v)
-    if _delta_available(spark):
+    writer = _writer(df, mode, partition_by, cluster_by, bloom_filter_for, options)
+    if _delta_available(df.sparkSession):
         writer = writer.format("delta").option("delta.autoOptimize.optimizeWrite", "true")
     else:
         writer = writer.format("parquet")

@@ -57,7 +57,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    return [load_table(spark, sf_dir, n) for n in names]

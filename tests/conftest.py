@@ -15,6 +15,35 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def arrow_off(spark):
+    """The session with Arrow conversion off, as in a vanilla session,
+    for the length of one test."""
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    was = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    yield spark
+    spark.conf.set(key, was)
+
+
+def runs_python_task(df) -> bool:
+    """Whether computing ``df`` runs a Python task over its rows: a
+    ``PythonRDD`` in the lineage of its physical plan, as a frame built
+    from pickled Python rows has. A broadcast side runs in a job of its
+    own, outside that lineage, so the RDD leaves of the analyzed plan
+    are checked as well."""
+    qe = df._jdf.queryExecution()
+    lineages = [qe.toRdd().toDebugString()]
+    nodes = [qe.analyzed()]
+    while nodes:
+        node = nodes.pop()
+        if node.nodeName() in ("LogicalRDD", "ExternalRDD"):
+            lineages.append(node.rdd().toDebugString())
+        kids = node.children()
+        nodes += [kids.apply(i) for i in range(kids.size())]
+    return any("PythonRDD" in s for s in lineages)
+
+
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MID = "/root/testdata/sf0.01"
 

@@ -1,16 +1,23 @@
 """IO layer tests (SURVEY §2.1): CSV scans, schema conformance, parquet
 sinks with partitioning, managed-table sink with clustering fallback."""
 
+import ast
+import datetime as dt
+import pathlib
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
+import lfb_data_warehouse_spark
 from lfb_data_warehouse_spark.sources.io import (
     conform,
+    local_frame,
     read_csv,
     write_parquet,
     write_table,
 )
+from tests.conftest import runs_python_task
 
 SCHEMA = StructType(
     [
@@ -52,6 +59,89 @@ def test_conform_casts_and_renames_by_name(spark):
     assert out.schema == target
     assert out.collect()[0]["Wind"] == "gale"
     assert out.collect()[0]["id"] == 1
+
+
+def test_local_frame_equals_the_tuple_built_frame(arrow_off):
+    """Same values, types and nullability as ``createDataFrame`` over
+    the same tuples, planned as a LocalTableScan with no Python task."""
+    spark = arrow_off
+    schema = StructType.fromDDL(
+        "id long, ts timestamp, n int, s string, x double, v array<bigint>"
+    ).add("k", "string", nullable=False)
+    rows = [
+        (1, dt.datetime(2024, 1, 2, 3, 4, 5, tzinfo=dt.timezone.utc), 0, "a", 0.5, [1, 2], "k1"),
+        (None, None, None, None, None, None, "k2"),
+    ]
+    got = local_frame(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema)
+    assert got.schema == want.schema == schema
+    assert got.collect() == want.collect()
+    assert got.selectExpr("unix_micros(ts)").collect() == (
+        want.selectExpr("unix_micros(ts)").collect()
+    )
+    assert got._jdf.queryExecution().executedPlan().nodeName() == "LocalTableScan"
+    assert runs_python_task(want) and not runs_python_task(got)
+    empty = local_frame(spark, [], "a int, b string")
+    assert empty.count() == 0 and empty.schema == StructType.fromDDL("a int, b string")
+
+
+def _create_data_frame_callers():
+    """(module, enclosing function) of every ``createDataFrame`` call in
+    the engine's source."""
+    root = pathlib.Path(lfb_data_warehouse_spark.__file__).parent
+    found = []
+
+    def visit(node, rel, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "createDataFrame"
+        ):
+            found.append((rel, fn))
+        for child in ast.iter_child_nodes(node):
+            visit(child, rel, fn)
+
+    for path in sorted(root.rglob("*.py")):
+        visit(ast.parse(path.read_text()), path.relative_to(root).as_posix(), None)
+    return found
+
+
+def test_engine_builds_driver_rows_only_through_local_frame():
+    """A frame over driver-side rows comes from ``local_frame`` alone, so
+    no engine frame is a pickled RDD that re-runs a Python task on
+    every scan."""
+    assert _create_data_frame_callers() == [("sources/io.py", "local_frame")]
+
+
+def test_driver_built_operator_frames_run_no_python_task(arrow_off):
+    """The offset tables of the dense ids and the packing, and the
+    k-means centroid set, are local frames: none of the three runs a
+    Python task."""
+    from lfb_data_warehouse_spark.operators.ids import assign_dense_ids
+    from lfb_data_warehouse_spark.operators.packing import pack_sequences
+    from lfb_data_warehouse_spark.operators.similarity import kmeans_centroids
+
+    spark = arrow_off
+    df = spark.range(0, 40).selectExpr(
+        "id AS doc_id",
+        "IF(id % 3 = 0, 'a', 'b') AS source",
+        "id % 7 + 1 AS tok",
+        "array(CAST(id % 5 AS FLOAT), CAST(id % 2 AS FLOAT), 1.0F) AS embedding",
+    )
+    frames = {
+        "dense_ids": assign_dense_ids(df, ["doc_id"], num_partitions=3),
+        "packing": pack_sequences(
+            df, group_col="source", order_cols=["doc_id"], token_col="tok",
+            seq_len=16, num_partitions=3,
+        ),
+        "centroids": kmeans_centroids(df, "doc_id", "embedding", k=3, iters=2),
+    }
+    assert [name for name, frame in frames.items() if runs_python_task(frame)] == []
+    assert frames["dense_ids"].count() == 40
+    assert frames["packing"].count() == 40
+    assert frames["centroids"].count() == 3
 
 
 def test_write_parquet_partitioned_prunes(spark, tmp_path):

@@ -19,6 +19,7 @@ from lfb_data_warehouse_spark.plans.lfb_pipeline import (
     run_pipeline,
     warehouse_checks,
 )
+from tests.conftest import runs_python_task
 
 LFB_COLS = (
     "IncidentNumber string, DateOfCall date, TimeOfCall string, "
@@ -316,6 +317,20 @@ def test_marts_read_the_materialized_fact(spark, raw, tmp_path):
         leaves = [n for n in names if "Scan" in n]
         assert leaves and set(leaves) == {"InMemoryTableScan"}, (mart, names)
         assert "Window" not in names, (mart, names)
+
+
+def test_pipeline_frames_run_no_python_task(arrow_off, raw, tmp_path):
+    """Over stored inputs, no frame of a refresh runs a Python task: the
+    dimensions' "Unknown" sentinel members are local frames, not
+    pickled rows."""
+    spark = arrow_off
+    stored = []
+    for i, df in enumerate(raw):
+        df.write.parquet(str(tmp_path / str(i)))
+        stored.append(spark.read.parquet(str(tmp_path / str(i))))
+    tables = run_pipeline(spark, *stored)
+    assert len(tables) == 12
+    assert [name for name, df in tables.items() if runs_python_task(df)] == []
 
 
 def test_release_refresh_drops_the_blocks(spark, raw, tmp_path):

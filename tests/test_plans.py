@@ -70,6 +70,11 @@ def get_plan(spark, name: str) -> str:
 
 @pytest.mark.parametrize("name", ALL_QUERIES)
 def test_no_row_at_a_time_python(spark, name):
+    """No row-wise Python UDF (``BatchEvalPython``) in the plan. This
+    does not see a frame built from pickled Python rows, whose scan runs
+    a Python task below a ``Scan ExistingRDD``;
+    ``test_engine_builds_driver_rows_only_through_local_frame`` and the
+    ``runs_python_task`` lineage tests cover those."""
     assert "BatchEvalPython" not in get_plan(spark, name), (
         f"{name}: row-wise Python UDF in plan"
     )
