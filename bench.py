@@ -397,11 +397,16 @@ def media_decode_bench(spark, sf_dir):
     the IDENTICAL pure-Python decode as a row-at-a-time pickled UDF
     (``BatchEvalPython``) — same codec, so the ratio isolates the
     execution shape (Arrow batch vs per-row pickling), and near-parity
-    is the honest reading at this payload size: decode compute
-    dominates both sides; the 100-TB differences (no per-row
-    serialization tax, no driver involvement, map-only zero-exchange
-    plan) are the shape this row pins. Output equality with the twin is
-    pytest-pinned (tests/test_bench_twins.py)."""
+    is the honest reading at this payload size: at sf0.1 on a 4-core box
+    (2,000 documents, interleaved best of 3) the engine took 0.93 s and
+    the twin 0.94 s. Per document, synthesizing costs about 0.5 ms of
+    Python and decoding about 0.45 ms (5.7 and 6.7 ms before the 8×8
+    DCT moved to numpy), the stats sums about 5 µs; spread over four
+    cores that compute is about half of either side's wall time. The
+    100-TB differences (no per-row serialization tax, no driver
+    involvement, map-only zero-exchange plan) are the shape this row
+    pins. Output equality with the twin is pytest-pinned
+    (tests/test_bench_twins.py)."""
     from pyspark.sql import functions as F
 
     from lfb_data_warehouse_spark.operators.multimodal import (

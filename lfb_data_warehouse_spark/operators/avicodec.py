@@ -1,5 +1,5 @@
 """AVI (RIFF) container codec carrying MJPEG frames — REAL video
-decode, stdlib only (round 14).
+decode, no media library (round 14).
 
 Video becomes the fourth real-decode modality (after images, audio and
 archives) by COMPOSING two already-verified pieces: the RIFF chunk

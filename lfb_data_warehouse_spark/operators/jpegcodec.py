@@ -1,4 +1,5 @@
-"""Baseline JPEG codec, stdlib only — the repo's last decode hook made real.
+"""JPEG codec with no media library — the repo's last decode hook made real.
+The 8×8 DCT pair runs in numpy (see the DCT section); the rest is stdlib.
 
 Retires ``decode_real``'s ``NotImplementedError`` for ``image/jpeg``
 (VERDICT r7 "What's wrong" item): a complete ISO/IEC 10918-1 baseline
@@ -12,8 +13,8 @@ sequential pipeline for 8-bit single-component (grayscale) images —
 * decoder: marker walk, DQT/DHT/SOF0/SOS parsing, canonical Huffman
   table RECONSTRUCTION FROM THE FILE's DHT (not hardcoded — any
   baseline grayscale JPEG with legal tables decodes), bit reader with
-  0xFF00 un-stuffing, DC prediction, dequantize, un-zigzag, inverse
-  DCT, level un-shift + clamp.
+  0xFF00 un-stuffing, DC prediction, then per block one numpy step:
+  dequantize, un-zigzag, inverse DCT, level un-shift + clamp.
 
 Lossiness note: JPEG quantizes DCT coefficients, so arbitrary rasters
 round-trip only approximately (property-tested ≤ a small tolerance at
@@ -102,6 +103,8 @@ from __future__ import annotations
 import functools
 import math
 import struct
+
+import numpy as np
 
 
 def decode_valueerror_contract(fn):
@@ -205,39 +208,48 @@ def _huff_decode_table(bits: list[int], vals: list[int]) -> dict[tuple[int, int]
 
 
 # --------------------------------------------------------------------------
-# 8x8 DCT-II / DCT-III with JPEG scaling (precomputed cosine table)
+# 8x8 DCT-II / DCT-III with JPEG scaling, in separable form (T.81 A.3.3)
 # --------------------------------------------------------------------------
+# The 2-D transform factors into two 1-D passes over the orthonormal basis
+# M[u][x] = C(u)/2·cos((2x+1)uπ/16), C(0) = 1/√2, else 1: forward
+# F = M·B·Mᵀ, inverse B = Mᵀ·F·M, both over row-major 8×8 float64
+# matrices. T.81 does not require a bit-exact IDCT; this form stays within
+# 1e-9 of the definition's double sum (tests/dct_model.py).
 
-_COS = [[math.cos((2 * x + 1) * u * math.pi / 16) for x in range(8)] for u in range(8)]
-_C = [1 / math.sqrt(2)] + [1.0] * 7
+_M = np.array(
+    [
+        [(math.sqrt(0.5) if u == 0 else 1.0) / 2 * math.cos((2 * x + 1) * u * math.pi / 16)
+         for x in range(8)]
+        for u in range(8)
+    ]
+)
+
+
+def _separable(basis: np.ndarray, block: list) -> np.ndarray:
+    """``basis · block · basisᵀ`` for a row-major block of 64."""
+    return basis @ np.array(block, dtype=np.float64).reshape(8, 8) @ basis.T
 
 
 def fdct8x8(block: list[int]) -> list[float]:
     """Forward DCT of a level-shifted 8x8 block (row-major list of 64)."""
-    out = [0.0] * 64
-    for u in range(8):
-        for v in range(8):
-            s = 0.0
-            for y in range(8):
-                cu = _COS[u][y]
-                for x in range(8):
-                    s += block[y * 8 + x] * cu * _COS[v][x]
-            out[u * 8 + v] = 0.25 * _C[u] * _C[v] * s
-    return out
+    return _separable(_M, block).ravel().tolist()
 
 
 def idct8x8(coef: list[float]) -> list[float]:
     """Inverse DCT back to the spatial 8x8 block."""
-    out = [0.0] * 64
+    return _separable(_M.T, coef).ravel().tolist()
+
+
+def _put_block(plane, cw: int, oy: int, ox: int, zz: list[int], q: list[int], level: int, smax: int) -> None:
+    """Reconstruct one block into ``plane`` (row stride ``cw``) at
+    (ox, oy): dequantize, un-zigzag, inverse DCT, level un-shift, round
+    half to even as ``round`` does, clamp to 0..smax."""
+    coef = np.empty(64)
+    coef[ZIGZAG] = np.multiply(zz, q)
+    rows = np.clip(np.rint(_separable(_M.T, coef) + level), 0, smax).astype(np.int64).tolist()
     for y in range(8):
-        for x in range(8):
-            s = 0.0
-            for u in range(8):
-                cu = _C[u] * _COS[u][y]
-                for v in range(8):
-                    s += cu * _C[v] * coef[u * 8 + v] * _COS[v][x]
-            out[y * 8 + x] = 0.25 * s
-    return out
+        row = (oy + y) * cw + ox
+        plane[row : row + 8] = rows[y]
 
 
 # --------------------------------------------------------------------------
@@ -503,10 +515,10 @@ def jpeg_pixel_bytes(width: int, height: int, raster: bytes) -> bytes:
 # Decoder
 # --------------------------------------------------------------------------
 
-def _decode_block(r: _BitReader, pred: int, dct: dict, act: dict, q: list[int]) -> tuple[int, list[float]]:
+def _decode_block(r: _BitReader, pred: int, dct: dict, act: dict) -> tuple[int, list[int]]:
     """Entropy-decode ONE block: DC diff + EXTEND, AC run-lengths to
-    EOB, dequantize, un-zigzag, inverse DCT. Returns (new DC predictor,
-    spatial 8×8 floats, still level-shifted)."""
+    EOB. Returns (new DC predictor, the 64 quantized coefficients in
+    zigzag order)."""
     zz = [0] * 64
     t = r.read_huff(dct)
     if t:
@@ -534,15 +546,12 @@ def _decode_block(r: _BitReader, pred: int, dct: dict, act: dict, q: list[int]) 
             v -= (1 << size) - 1
         zz[k] = v
         k += 1
-    coef = [0.0] * 64
-    for k in range(64):
-        coef[ZIGZAG[k]] = zz[k] * q[k]
-    return pred, idct8x8(coef)
+    return pred, zz
 
 
 @decode_valueerror_contract
 def jpeg_decode_pixels(b: bytes) -> dict:
-    """REAL baseline JPEG pixel decode, stdlib only. Walks the marker
+    """REAL baseline JPEG pixel decode. Walks the marker
     stream, builds Huffman tables from the file's own DHT segments,
     entropy-decodes every 8×8 block (DC prediction per component, AC
     run-lengths, byte un-stuffing), dequantizes with the file's DQT,
@@ -682,17 +691,13 @@ def jpeg_decode_pixels(b: bytes) -> dict:
                 plane = planes[ci]
                 for by in range(vs):  # Hi x Vi blocks per MCU, raster order
                     for bx in range(hs):
-                        preds[ci], px = _decode_block(
-                            r, preds[ci], dc_tables[td], ac_tables[ta],
-                            qtables[sof_q[cid]],
+                        preds[ci], zz = _decode_block(
+                            r, preds[ci], dc_tables[td], ac_tables[ta]
                         )
-                        oy, ox = (my * vs + by) * 8, (mx * hs + bx) * 8
-                        for y in range(8):
-                            row = (oy + y) * cw + ox
-                            for x in range(8):
-                                plane[row + x] = min(
-                                    smax, max(0, int(round(px[y * 8 + x] + level)))
-                                )
+                        _put_block(
+                            plane, cw, (my * vs + by) * 8, (mx * hs + bx) * 8,
+                            zz, qtables[sof_q[cid]], level, smax,
+                        )
     if precision == 12:
         packed, flat = _pack_planes12(planes)
         return {
@@ -1261,15 +1266,7 @@ def _jpeg_decode_progressive(b: bytes) -> dict:
         plane = bytearray(cw * ch) if precision == 8 else [0] * (cw * ch)
         bw = cw // 8
         for bi, zz in enumerate(coeffs[cid]):
-            coef = [0.0] * 64
-            for k in range(64):
-                coef[ZIGZAG[k]] = zz[k] * q[k]
-            px = idct8x8(coef)
-            oy, ox = (bi // bw) * 8, (bi % bw) * 8
-            for y in range(8):
-                row = (oy + y) * cw + ox
-                for x in range(8):
-                    plane[row + x] = min(smax, max(0, int(round(px[y * 8 + x] + level))))
+            _put_block(plane, cw, (bi // bw) * 8, (bi % bw) * 8, zz, q, level, smax)
         planes.append(plane)
     ncomp = len(planes)
     common = {

@@ -14,11 +14,11 @@ Two decode tiers:
   structurally valid payloads of all three container types so the
   decode path is exercised and oracle-checked end to end.
 * **Pixel/sample decode** (:func:`decode_real`): REAL for PNG, JPEG,
-  GIF, BMP, TIFF, WAV, FLAC and AVI using only the stdlib — PNG IDAT
+  GIF, BMP, TIFF, WAV, FLAC and AVI with no media library — PNG IDAT
   inflate (``zlib``) + per-scanline unfiltering (None/Sub/Up/Average/
   Paeth) at 1/2/4/8/16 bits, palette and Adam7 included; JPEG via full
   baseline, progressive, 12-bit and lossless entropy decoders
-  (:mod:`.jpegcodec`); WAV PCM, G.711 and ADPCM samples; the other
+  (:mod:`.jpegcodec`, whose 8×8 DCT pair is numpy); WAV PCM, G.711 and ADPCM samples; the other
   formats through their own codec modules. Unsupported shapes (e.g.
   arithmetic-coded JPEG, compressed BMP) raise ``ValueError`` —
   explicit, never a silent mis-decode.
@@ -68,7 +68,7 @@ def attach_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def decode_real(payload: bytes) -> dict:
-    """Full pixel/sample decode, stdlib only.
+    """Full pixel/sample decode, stdlib only but for JPEG's numpy DCT.
 
     * ``image/png`` → :func:`png_decode_pixels`: IDAT chunks inflated
       with ``zlib`` and scanlines unfiltered (all five PNG filter
