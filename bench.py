@@ -113,58 +113,20 @@ def incremental_dedup_daily(spark, sf_dir):
     """
     import tempfile
 
-    from pyspark.sql import functions as F
-
-    from lfb_data_warehouse_spark.operators.dedup import (
-        all_pairs_jaccard,
-        incremental_jaccard_pairs,
-    )
-    from lfb_data_warehouse_spark.operators.graph import (
-        connected_components,
-        incremental_components,
-    )
     from lfb_data_warehouse_spark.plans.datapipe_queries import (
-        JACCARD_N,
-        JACCARD_THRESHOLD,
-        NEWBATCH_MOD,
-        NEWBATCH_REM,
+        daily_increment,
+        keep_canonical,
+        old_labels,
     )
     from lfb_data_warehouse_spark.sources.testdata import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    is_new = F.col("doc_id") % NEWBATCH_MOD == NEWBATCH_REM
-    old, new = docs.filter(~is_new), docs.filter(is_new)
     if sf_dir not in _INC_BENCH_DIRS:
         d = tempfile.mkdtemp(prefix="lfb_inc_bench_")
-        pairs = all_pairs_jaccard(
-            old, "doc_id", "text",
-            shingle_n=JACCARD_N, threshold=JACCARD_THRESHOLD, group_col="source",
-        )
-        connected_components(pairs, src="id_a", dst="id_b").write.mode(
-            "overwrite"
-        ).parquet(d)
+        old_labels(docs).write.mode("overwrite").parquet(d)
         _INC_BENCH_DIRS[sf_dir] = d
     labels = spark.read.parquet(_INC_BENCH_DIRS[sf_dir])
-    new_edges = incremental_jaccard_pairs(
-        old, new, "doc_id", "text",
-        shingle_n=JACCARD_N, threshold=JACCARD_THRESHOLD, group_col="source",
-    ).select("id_a", "id_b")
-    merged = incremental_components(labels, new_edges, src="id_a", dst="id_b")
-    sizes = merged.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
-    # survivor decision is ONE left join + filter (r14; see
-    # dedup_keep_canonical — the anti+left formulation probed the
-    # corpus twice)
-    info = merged.join(sizes, "component").select(
-        F.col("node").alias("doc_id"), "component", "cluster_size"
-    )
-    return (
-        docs.join(info, "doc_id", "left")
-        .filter(F.col("component").isNull() | (F.col("component") == F.col("doc_id")))
-        .select(
-            "doc_id", "source",
-            F.coalesce("cluster_size", F.lit(1).cast("long")).alias("represents"),
-        )
-    )
+    return keep_canonical(*daily_increment(docs, labels))
 
 
 _PQ_CODES_DIRS: dict[str, tuple[str, list]] = {}

@@ -25,9 +25,8 @@ reproducible on any engine (see functions.text).
 from __future__ import annotations
 
 import math
-import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import HEX_HIGH, shingles, tokens
@@ -39,14 +38,14 @@ from ..sources.io import local_frame
 # skew split never sees the blow-up (measured: tools/shingle_skew_probe
 # — the straggler survives AQE with fixture-scaled thresholds). Keys
 # with document frequency > PAIR_HOT_CAP therefore get an explicit
-# salted split (guide §2.5): the left side hashed into S buckets by id,
-# the right side replicated S ways, so each task generates <= d^2/S
-# pairs. The guard only engages when the corpus CAN contain a hot key:
-# array_distinct bounds every shingle's frequency by the doc count, so
-# a corpus of <= PAIR_HOT_CAP docs takes the plain single-join plan
-# with no frequency pass at all (one count job is the whole cost —
-# that keeps the local bench on the exact r14 plan).
-PAIR_HOT_CAP = int(os.environ.get("LFB_SHINGLE_HOT_CAP", "8192"))
+# salted split (guide §2.5, :func:`_pair_join`): the left side hashed
+# into S buckets by id, the right side replicated S ways, so each task
+# generates <= d^2/S pairs. The guard only engages when the corpus CAN
+# contain a hot key: array_distinct bounds every shingle's frequency by
+# the doc count, so a corpus of <= PAIR_HOT_CAP docs takes the plain
+# single-join plan with no frequency pass at all (one count job is the
+# whole cost — that keeps the local bench on the exact r14 plan).
+PAIR_HOT_CAP = 8192
 # target pair rows per salted task chunk; S = ceil(max_d^2 / target)
 _PAIR_SALT_TARGET = 1_000_000
 _PAIR_SALT_MAX = 256
@@ -90,6 +89,76 @@ def _hot_keys(sets: DataFrame, join_cols: list[str], hot_cap: int):
     n_salt = _salt_count(max(r["__df"] for r in hot_rows))
     n_part = min(4096, len(hot_rows) * n_salt)
     return F.broadcast(hot), n_salt, n_part
+
+
+def _shingle_sets(
+    df: DataFrame, id_col: str, text_col: str, shingle_n: int, group_col: str | None
+) -> DataFrame:
+    """(id, [group], sz, shingle): one row per distinct shingle of each
+    doc. The set size is computed MAP-SIDE (``size`` of the distinct
+    array) and CARRIED through the explode (r14), so the pair aggregate
+    reads both sizes via ``first()`` instead of joining a sizes frame
+    back twice. Docs with empty shingle sets emit no rows."""
+    keep = [id_col] + ([group_col] if group_col else [])
+    arrs = df.select(
+        *[F.col(c) for c in keep],
+        F.array_distinct(shingles(tokens(text_col), shingle_n)).alias("__ss"),
+    )
+    return arrs.select(
+        *[F.col(c) for c in keep],
+        F.size("__ss").cast("long").alias("sz"),
+        F.explode("__ss").alias("shingle"),
+    )
+
+
+def _pair_join(
+    lhs: DataFrame,
+    rhs: DataFrame,
+    jcols: list[str],
+    salt_id: str,
+    hot: DataFrame | None,
+    n_salt: int,
+    n_part: int,
+) -> DataFrame:
+    """The shingle equi-join of the exact pair kernels. With no hot keys
+    (``hot`` None, see :func:`_hot_keys`) it is the plain join. Else the
+    cold keys join plainly and the hot keys take the r15 salted split:
+    ``lhs`` rows hashed into ``n_salt`` buckets by ``salt_id``, ``rhs``
+    rows replicated ``n_salt`` ways, both user-repartitioned on (keys,
+    salt) so AQE cannot coalesce the buckets back together. Every
+    (lhs row, rhs row) co-occurrence still meets exactly once."""
+    if hot is None:
+        return lhs.join(rhs, jcols)
+    cold = lhs.join(hot, jcols, "left_anti").join(
+        rhs.join(hot, jcols, "left_anti"), jcols
+    )
+    salt_keys = [F.col(c) for c in jcols] + [F.col("__salt")]
+    l_hot = (
+        lhs.join(hot, jcols, "left_semi")
+        .withColumn("__salt", F.pmod(F.xxhash64(salt_id), F.lit(n_salt)).cast("int"))
+        .repartition(n_part, *salt_keys)
+    )
+    r_hot = (
+        rhs.join(hot, jcols, "left_semi")
+        .withColumn("__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))))
+        .repartition(n_part, *salt_keys)
+    )
+    return cold.unionByName(l_hot.join(r_hot, jcols + ["__salt"]).drop("__salt"))
+
+
+def _pair_counts(pairs: DataFrame) -> DataFrame:
+    """(id_a, id_b, inter, sz_a, sz_b) from one row per shared shingle:
+    sizes are constant within each pair, so ``first()`` reads them."""
+    return pairs.groupBy("id_a", "id_b").agg(
+        F.count(F.lit(1)).alias("inter"),
+        F.first("sz_a").alias("sz_a"),
+        F.first("sz_b").alias("sz_b"),
+    )
+
+
+def _jaccard(inter: Column, sz_a: Column, sz_b: Column) -> Column:
+    """|A∩B| / |A∪B| from the intersection and the two set sizes."""
+    return inter.cast("double") / (sz_a + sz_b - inter)
 
 
 def exact_dup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -212,8 +281,7 @@ def minhash_near_dups(
     cand = lsh_candidate_pairs(sig, id_col, num_hashes, bands)
     a = arrs.select(F.col(id_col).alias("id_a"), F.col("ss").alias("sa"))
     b = arrs.select(F.col(id_col).alias("id_b"), F.col("ss").alias("sb"))
-    inter = F.size(F.array_intersect("sa", "sb"))
-    jaccard = inter.cast("double") / (F.size("sa") + F.size("sb") - inter)
+    jaccard = _jaccard(F.size(F.array_intersect("sa", "sb")), F.size("sa"), F.size("sb"))
     return (
         cand.join(a, "id_a")
         .join(b, "id_b")
@@ -232,36 +300,17 @@ def _shingle_pair_counts(
 ) -> DataFrame:
     """(id_a, id_b, inter, sz_a, sz_b) for every doc pair sharing ≥1
     shingle (optionally within ``group_col``) — the common core of the
-    exact Jaccard and containment kernels. The shingle equi-join
-    bounds the blow-up to docs actually sharing a shingle.
-
-    Per-doc set sizes are computed MAP-SIDE (``size`` of the distinct
-    shingle array) and CARRIED through the explode on each join side
-    (r14): the previous formulation joined a separate sizes frame back
-    onto the aggregated pairs twice (sz_a, sz_b) — two more
-    tokenize+shingle scans of the corpus and two joins — where +8
-    bytes per exploded row lets the pair aggregate read the sizes via
-    ``first()`` (constant within each (id_a, id_b) group). Docs with
-    empty shingle sets emit no explode rows, exactly as before.
+    exact Jaccard and containment kernels: :func:`_shingle_sets` on both
+    sides, :func:`_pair_join` on the shingle, :func:`_pair_counts`. The
+    equi-join bounds the blow-up to docs actually sharing a shingle.
 
     Hot-shingle guard (r15, see PAIR_HOT_CAP): above ``hot_cap`` docs
     the kernel counts per-shingle frequency once (over a checkpointed
-    explode, so tokenize runs once instead of twice) and routes keys
-    with frequency > hot_cap through a salted join — id_a hashed into
-    S buckets, the (tiny) hot slice of the b side replicated S ways —
-    so one viral shingle's d^2 pair generation spreads over S tasks
-    instead of one. Every (id_a, id_b, shingle) co-occurrence still
-    meets exactly once, so the aggregate below is unchanged."""
+    explode, so tokenize runs once instead of twice) and salts the keys
+    with frequency > hot_cap in the join."""
     if hot_cap is None:
         hot_cap = PAIR_HOT_CAP
-    ws = tokens(text_col)
-    keep = [F.col(id_col)] + ([F.col(group_col)] if group_col else [])
-    arrs = df.select(*keep, F.array_distinct(shingles(ws, shingle_n)).alias("__ss"))
-    sets = arrs.select(
-        *[F.col(c) for c in ([id_col] + ([group_col] if group_col else []))],
-        F.size("__ss").cast("long").alias("sz"),
-        F.explode("__ss").alias("shingle"),
-    )
+    sets = _shingle_sets(df, id_col, text_col, shingle_n, group_col)
     join_cols = ["shingle"] + ([group_col] if group_col else [])
     hot, n_salt, n_part = None, 0, 0
     # bounded-cost gate: "more docs than cap?" — the constant-column
@@ -285,37 +334,8 @@ def _shingle_pair_counts(
         F.col(id_col).alias("id_b"),
         F.col("sz").alias("sz_b"),
     )
-    if hot is None:
-        raw = a.join(b, join_cols)
-    else:
-        cold = a.join(hot, join_cols, "left_anti").join(
-            b.join(hot, join_cols, "left_anti"), join_cols
-        )
-        salt_keys = [F.col(c) for c in join_cols] + [F.col("__salt")]
-        a_hot = (
-            a.join(hot, join_cols, "left_semi")
-            .withColumn(
-                "__salt", F.pmod(F.xxhash64("id_a"), F.lit(n_salt)).cast("int")
-            )
-            .repartition(n_part, *salt_keys)
-        )
-        b_hot = (
-            b.join(hot, join_cols, "left_semi")
-            .withColumn("__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))))
-            .repartition(n_part, *salt_keys)
-        )
-        raw = cold.unionByName(
-            a_hot.join(b_hot, join_cols + ["__salt"]).drop("__salt")
-        )
-    return (
-        raw.filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.count(F.lit(1)).alias("inter"),
-            F.first("sz_a").alias("sz_a"),
-            F.first("sz_b").alias("sz_b"),
-        )
-    )
+    raw = _pair_join(a, b, join_cols, "id_a", hot, n_salt, n_part)
+    return _pair_counts(raw.filter(F.col("id_a") < F.col("id_b")))
 
 
 def all_pairs_jaccard(
@@ -330,14 +350,10 @@ def all_pairs_jaccard(
     """Exact pairwise Jaccard (optionally only within ``group_col``
     groups). Restrict to groups / candidates at corpus scale."""
     counts = _shingle_pair_counts(df, id_col, text_col, shingle_n, group_col, hot_cap)
-    return counts.select(
-        "id_a",
-        "id_b",
-        (
-            F.col("inter").cast("double")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
-        ).alias("jaccard"),
-    ).filter(F.col("jaccard") >= threshold)
+    jaccard = _jaccard(F.col("inter"), F.col("sz_a"), F.col("sz_b"))
+    return counts.select("id_a", "id_b", jaccard.alias("jaccard")).filter(
+        F.col("jaccard") >= threshold
+    )
 
 
 def edit_distance_pairs(
@@ -469,10 +485,7 @@ def containment_pairs(
         "id_b",
         c_ab.alias("containment_a_in_b"),
         c_ba.alias("containment_b_in_a"),
-        (
-            F.col("inter").cast("double")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
-        ).alias("jaccard"),
+        _jaccard(F.col("inter"), F.col("sz_a"), F.col("sz_b")).alias("jaccard"),
     ).filter(F.greatest(c_ab, c_ba) >= threshold)
 
 
@@ -739,19 +752,18 @@ def incremental_jaccard_pairs(
     broadcast is free at daily-ingest scale). Without this a pair
     would meet via both the old and new copy and silently duplicate.
 
-    Set sizes are MAP-SIDE array lengths CARRIED through the explode
-    (r14; see _shingle_pair_counts): the previous sizes-union (new
-    sizes + pruned-old candidate sizes) re-derived the shingle arrays
-    of both sides and joined back onto the aggregated pairs twice;
-    +8 bytes per exploded row replaces two scans and two joins.
+    Shared pieces: both sides are :func:`_shingle_sets` (set sizes
+    carried through the explode), the join is :func:`_pair_join`, the
+    aggregate :func:`_pair_counts` and the ratio :func:`_jaccard` — the
+    same code as the full kernel, :func:`_shingle_pair_counts`.
 
     Hot-shingle guard (r15, see PAIR_HOT_CAP): the work one join key
     produces here is (old candidates sharing it) × (new docs sharing
     it) rows — in one task. Above ``hot_cap`` total docs the kernel
     counts key frequency over the (checkpointed) left side — which
     contains the new side, so a key hot on either side is caught —
-    and salts those keys exactly as :func:`_shingle_pair_counts`
-    does. Below the gate the plan is the r14 one, untouched."""
+    and salts those keys in :func:`_pair_join`. Below the gate the plan
+    is the r14 one, untouched."""
     if hot_cap is None:
         hot_cap = PAIR_HOT_CAP
     # bounded-cost gate (see _more_rows_than): both sides small ⇒ no
@@ -762,23 +774,12 @@ def incremental_jaccard_pairs(
         ),
         hot_cap,
     )
-    ws = tokens(text_col)
     old = old.join(
         F.broadcast(new.select(id_col).distinct()), id_col, "left_anti"
     )
-    keep = [F.col(id_col)] + ([F.col(group_col)] if group_col else [])
-
-    def sets(df: DataFrame) -> DataFrame:
-        arrs = df.select(*keep, F.array_distinct(shingles(ws, shingle_n)).alias("__ss"))
-        return arrs.select(
-            *[F.col(c) for c in ([id_col] + ([group_col] if group_col else []))],
-            F.size("__ss").cast("long").alias("sz"),
-            F.explode("__ss").alias("shingle"),
-        )
-
     jcols = ["shingle"] + ([group_col] if group_col else [])
-    new_sets = sets(new)
-    old_sets = sets(old)
+    new_sets = _shingle_sets(new, id_col, text_col, shingle_n, group_col)
+    old_sets = _shingle_sets(old, id_col, text_col, shingle_n, group_col)
     if guard:
         # 3 consumers below (probe, left union, right side) — one
         # tokenize pass instead of three once the guard engages
@@ -803,59 +804,22 @@ def incremental_jaccard_pairs(
         F.col(id_col).alias("rid"),
         F.col("sz").alias("rsz"),
     )
-    if hot is None:
-        joined = lhs.join(rhs, jcols)
-    else:
-        cold = lhs.join(hot, jcols, "left_anti").join(
-            rhs.join(hot, jcols, "left_anti"), jcols
-        )
-        salt_keys = [F.col(c) for c in jcols] + [F.col("__salt")]
-        l_hot = (
-            lhs.join(hot, jcols, "left_semi")
-            .withColumn(
-                "__salt", F.pmod(F.xxhash64("lid"), F.lit(n_salt)).cast("int")
-            )
-            .repartition(n_part, *salt_keys)
-        )
-        r_hot = (
-            rhs.join(hot, jcols, "left_semi")
-            .withColumn("__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))))
-            .repartition(n_part, *salt_keys)
-        )
-        joined = cold.unionByName(
-            l_hot.join(r_hot, jcols + ["__salt"]).drop("__salt")
-        )
+    joined = _pair_join(lhs, rhs, jcols, "lid", hot, n_salt, n_part)
     raw = joined.filter(
         (~F.col("__new")) | (F.col("lid") < F.col("rid"))
     ).filter(F.col("lid") != F.col("rid"))
-    counts = (
+    lid_first = F.col("lid") < F.col("rid")
+    counts = _pair_counts(
         raw.select(
             F.least("lid", "rid").alias("id_a"),
             F.greatest("lid", "rid").alias("id_b"),
-            F.when(F.col("lid") < F.col("rid"), F.col("lsz"))
-            .otherwise(F.col("rsz"))
-            .alias("sz_a"),
-            F.when(F.col("lid") < F.col("rid"), F.col("rsz"))
-            .otherwise(F.col("lsz"))
-            .alias("sz_b"),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.count(F.lit(1)).alias("inter"),
-            F.first("sz_a").alias("sz_a"),
-            F.first("sz_b").alias("sz_b"),
+            F.when(lid_first, F.col("lsz")).otherwise(F.col("rsz")).alias("sz_a"),
+            F.when(lid_first, F.col("rsz")).otherwise(F.col("lsz")).alias("sz_b"),
         )
     )
-    return (
-        counts.select(
-            "id_a",
-            "id_b",
-            (
-                F.col("inter").cast("double")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    jaccard = _jaccard(F.col("inter"), F.col("sz_a"), F.col("sz_b"))
+    return counts.select("id_a", "id_b", jaccard.alias("jaccard")).filter(
+        F.col("jaccard") >= threshold
     )
 
 

@@ -1260,7 +1260,7 @@ def semantic_dedup_drops(
     # rows — every test/dev corpus); above the cap the chain checkpoints
     # so probe + pair stage read blocks instead of recomputing it
     n = emb.count()  # parquet-metadata cheap; also gates the probe
-    small = n <= _semdedup_cluster_cap()
+    small = n <= SEMDEDUP_CLUSTER_CAP
     qa = _assigned_quantized(
         emb, id_col, vec_col, label_col, dim=dim, checkpoint=not small
     )
@@ -1300,15 +1300,11 @@ def _assigned_quantized(
     return out.localCheckpoint(eager=True) if checkpoint else out
 
 
-def _semdedup_cluster_cap() -> int:
-    """Rows per cluster above which SemDeDup's pair stage leaves the
-    grouped Arrow pass for the blocked join (see
-    :func:`_within_cluster_drops`). 200k rows ≈ a 100 MB n×dim int64
-    matrix at dim 64 — comfortably inside one task's memory; override
-    per deployment with ``LFB_SEMDEDUP_CLUSTER_CAP``."""
-    import os
-
-    return int(os.environ.get("LFB_SEMDEDUP_CLUSTER_CAP", 200_000))
+# Rows per cluster above which SemDeDup's pair stage leaves the grouped
+# Arrow pass for the blocked join (see _within_cluster_drops). 200k rows
+# ≈ a 100 MB n×dim int64 matrix at dim 64 — comfortably inside one
+# task's memory.
+SEMDEDUP_CLUSTER_CAP = 200_000
 
 
 def _within_cluster_drops(
@@ -1355,8 +1351,8 @@ def _within_cluster_drops(
     label owning 10M+ rows would OOM the task where the old self-join
     streamed pairs. A one-job size probe over ``qa`` (collected: ≤
     nlist rows) routes every cluster above ``cluster_cap`` rows
-    (default 200k ≈ a 100 MB n×dim int64 matrix at dim 64; env
-    ``LFB_SEMDEDUP_CLUSTER_CAP``) through the pre-r14 blocked JOIN
+    (default ``SEMDEDUP_CLUSTER_CAP``, 200k ≈ a 100 MB n×dim int64
+    matrix at dim 64) through the pre-r14 blocked JOIN
     formulation — same integer arithmetic, bit-identical drop set,
     memory bounded per task by the join's hash relation — while every
     normal cluster keeps the grouped Arrow pass. When no cluster
@@ -1377,7 +1373,7 @@ def _within_cluster_drops(
             "zero-norm handling diverges at degenerate thresholds"
         )
     if cluster_cap is None:
-        cluster_cap = _semdedup_cluster_cap()
+        cluster_cap = SEMDEDUP_CLUSTER_CAP
     id_type = qa.schema[id_col].dataType.simpleString()
 
     def drops(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -391,9 +391,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     == doc_id, drop the rest). The oracle computes the same closure
     with a recursive CTE."""
     _docs, labels, sizes = _jaccard_cluster_labels(spark, sf_dir)
-    return labels.join(sizes, "component").select(
-        F.col("node").alias("doc_id"), "component", "cluster_size"
-    )
+    return _cluster_assignments(labels, sizes)
 
 
 @register("dedup_components_star", headline=True, oracle=_components_oracle())
@@ -404,9 +402,9 @@ def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_components(spark, sf_dir)
 
 
-@register(
-    "dedup_keep_canonical",
-    oracle=f"""
+def _keep_canonical_oracle() -> str:
+    """The full-recompute survivors, oracle of both keep-canonical rows."""
+    return f"""
     WITH RECURSIVE {_jaccard_pairs_ctes()},
     edges AS (
         SELECT id_a AS a, id_b AS b FROM pairs
@@ -425,9 +423,34 @@ def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(COALESCE(c.cluster_size, 1) AS BIGINT) AS represents
     FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
     WHERE c.doc_id IS NULL OR c.component = d.doc_id
-    """,
-    headline=True,
-)
+    """
+
+
+def _cluster_assignments(labels: DataFrame, sizes: DataFrame) -> DataFrame:
+    """(doc_id, component, cluster_size) for every doc in a dup cluster."""
+    return labels.join(sizes, "component").select(
+        F.col("node").alias("doc_id"), "component", "cluster_size"
+    )
+
+
+def keep_canonical(docs: DataFrame, labels: DataFrame, sizes: DataFrame) -> DataFrame:
+    """The survivor step of the full and the incremental dedup: one
+    canonical doc per cluster (the min doc_id) plus every unclustered
+    doc, with how many originals each represents. ONE left join of the
+    corpus and a filter — the oracle's own shape (r14, guide §2.4: the
+    anti-join + left-join form probed every corpus row TWICE)."""
+    return (
+        docs.join(_cluster_assignments(labels, sizes), "doc_id", "left")
+        .filter(F.col("component").isNull() | (F.col("component") == F.col("doc_id")))
+        .select(
+            "doc_id",
+            "source",
+            F.coalesce("cluster_size", F.lit(1).cast("long")).alias("represents"),
+        )
+    )
+
+
+@register("dedup_keep_canonical", oracle=_keep_canonical_oracle(), headline=True)
 def dedup_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END corpus dedup — the full production chain in one plan:
     near-dup pairs (exact Jaccard kernel here; at corpus scale the
@@ -437,26 +460,11 @@ def dedup_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the operator a training-data pipeline actually runs: the
     pair/cluster queries are its observability views.
 
-    Scale shape: the keep/drop decision is ONE left join of the corpus
-    against the per-node (component, cluster_size) frame followed by a
-    filter — the oracle's own shape (r14, guide §2.4: the previous
-    anti-join + left-join formulation probed every corpus row TWICE
-    against two different label-derived sides; folding the drop
-    decision into the filter halves the corpus-side join passes).
-    Nothing is collected."""
-    docs, labels, sizes = _jaccard_cluster_labels(spark, sf_dir)
-    info = labels.join(sizes, "component").select(
-        F.col("node").alias("doc_id"), "component", "cluster_size"
-    )
-    return (
-        docs.join(info, "doc_id", "left")
-        .filter(F.col("component").isNull() | (F.col("component") == F.col("doc_id")))
-        .select(
-            "doc_id",
-            "source",
-            F.coalesce("cluster_size", F.lit(1).cast("long")).alias("represents"),
-        )
-    )
+    Built from the shared pieces: the pair→components→sizes chain
+    (:func:`_jaccard_cluster_labels`) and the survivor step
+    (:func:`keep_canonical`, one left join + filter). Nothing is
+    collected."""
+    return keep_canonical(*_jaccard_cluster_labels(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -469,30 +477,48 @@ def dedup_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 NEWBATCH_MOD, NEWBATCH_REM = 5, 4
 
 
-def _incremental_labels(spark: SparkSession, sf_dir: str):
-    """Shared incremental-dedup chain: split the corpus into OLD and a
-    NEW daily batch, label the old side from old×old pairs only, find
-    new×new + new×old pairs with traffic bounded by the batch, fold.
-    Returns ``(docs, labels, sizes)`` in the `_jaccard_cluster_labels`
-    shape — the oracles are the FULL-corpus recompute, so a green row
-    proves the incremental path is lossless."""
-    from ..operators.dedup import incremental_jaccard_pairs
-    from ..operators.graph import connected_components, incremental_components
-
-    docs = load_table(spark, sf_dir, "documents")
+def daily_split(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(old, new): yesterday's corpus and today's batch."""
     is_new = F.col("doc_id") % NEWBATCH_MOD == NEWBATCH_REM
-    old, new = docs.filter(~is_new), docs.filter(is_new)
-    old_pairs = all_pairs_jaccard(
+    return docs.filter(~is_new), docs.filter(is_new)
+
+
+def old_labels(docs: DataFrame) -> DataFrame:
+    """Yesterday's labels: components over old×old pairs only — the
+    state a daily deployment already has on disk."""
+    from ..operators.graph import connected_components
+
+    old, _new = daily_split(docs)
+    pairs = all_pairs_jaccard(
         old, "doc_id", "text", shingle_n=JACCARD_N, threshold=JACCARD_THRESHOLD, group_col="source"
     )
-    old_labels = connected_components(old_pairs, src="id_a", dst="id_b")
+    return connected_components(pairs, src="id_a", dst="id_b")
+
+
+def daily_increment(docs: DataFrame, labels: DataFrame):
+    """The recurring daily step: find today's new×new + new×old pairs
+    (traffic bounded by the batch) and fold them into yesterday's
+    ``labels``. Returns ``(docs, labels, sizes)`` in the
+    `_jaccard_cluster_labels` shape, ready for :func:`keep_canonical`."""
+    from ..operators.dedup import incremental_jaccard_pairs
+    from ..operators.graph import incremental_components
+
+    old, new = daily_split(docs)
     new_edges = incremental_jaccard_pairs(
         old, new, "doc_id", "text",
         shingle_n=JACCARD_N, threshold=JACCARD_THRESHOLD, group_col="source",
     ).select("id_a", "id_b")
-    labels = incremental_components(old_labels, new_edges, src="id_a", dst="id_b")
-    sizes = labels.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
-    return docs, labels, sizes
+    merged = incremental_components(labels, new_edges, src="id_a", dst="id_b")
+    sizes = merged.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
+    return docs, merged, sizes
+
+
+def _incremental_labels(spark: SparkSession, sf_dir: str):
+    """Yesterday's labels recomputed, then today's increment folded in.
+    The oracles are the FULL-corpus recompute, so a green row proves
+    the incremental path is lossless."""
+    docs = load_table(spark, sf_dir, "documents")
+    return daily_increment(docs, old_labels(docs))
 
 
 @register("incremental_dedup_components", oracle=_components_oracle())
@@ -504,34 +530,10 @@ def incremental_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     the incremental fold equals a from-scratch recompute, which is the
     contract that lets a 100 TB daily ingest never re-pair its corpus."""
     _docs, labels, sizes = _incremental_labels(spark, sf_dir)
-    return labels.join(sizes, "component").select(
-        F.col("node").alias("doc_id"), "component", "cluster_size"
-    )
+    return _cluster_assignments(labels, sizes)
 
 
-@register(
-    "incremental_dedup_survivors",
-    oracle=f"""
-    WITH RECURSIVE {_jaccard_pairs_ctes()},
-    edges AS (
-        SELECT id_a AS a, id_b AS b FROM pairs
-        UNION
-        SELECT id_b, id_a FROM pairs
-    ),
-    reach(a, b) AS (
-        SELECT DISTINCT a, a FROM edges
-        UNION
-        SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-    ),
-    comp AS (SELECT a AS doc_id, MIN(b) AS component,
-                    COUNT(DISTINCT b) AS cluster_size
-             FROM reach GROUP BY 1)
-    SELECT d.doc_id, d.source,
-           CAST(COALESCE(c.cluster_size, 1) AS BIGINT) AS represents
-    FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
-    WHERE c.doc_id IS NULL OR c.component = d.doc_id
-    """,
-)
+@register("incremental_dedup_survivors", oracle=_keep_canonical_oracle())
 def incremental_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END incremental dedup gate — the daily-ingest pipeline a
     100 TB corpus actually runs: new-batch pair finding (new×new +
@@ -545,21 +547,9 @@ def incremental_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: nothing old×old is ever re-paired; per-round traffic
     is labels-as-edges (|old nodes in dup clusters|) + |new edges|, and
     the pair-finder's joins move only batch-pruned rows (SHUFFLE.md
-    measures the bound). The survivor decision is one left join +
-    filter — the oracle's own shape (r14; see dedup_keep_canonical)."""
-    docs, labels, sizes = _incremental_labels(spark, sf_dir)
-    info = labels.join(sizes, "component").select(
-        F.col("node").alias("doc_id"), "component", "cluster_size"
-    )
-    return (
-        docs.join(info, "doc_id", "left")
-        .filter(F.col("component").isNull() | (F.col("component") == F.col("doc_id")))
-        .select(
-            "doc_id",
-            "source",
-            F.coalesce("cluster_size", F.lit(1).cast("long")).alias("represents"),
-        )
-    )
+    measures the bound). The survivor decision is the same
+    :func:`keep_canonical` step as dedup_keep_canonical."""
+    return keep_canonical(*_incremental_labels(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------

@@ -444,3 +444,37 @@ def test_training_order_exchange_carries_hash_only(spark):
     # the window is partitioned by __pid (never 'Window operation!'
     # single-partition): formatted plans show the partition spec
     assert re.search(r"Window.*__pid", p, re.S), "dense-rank window lost its partition key"
+
+
+@pytest.mark.parametrize("kernel", ["all_pairs_jaccard", "incremental_jaccard_pairs"])
+def test_hot_shingle_salt_keeps_user_repartition(spark, kernel):
+    """Above the hot-shingle cap both sides of the salted join must be
+    user repartitions keyed on the salt (REPARTITION_BY_NUM): AQE leaves
+    those alone, where it would coalesce an ordinary join exchange's
+    tiny salt buckets back into one task (``dedup._hot_keys``). Under
+    the cap the plan carries no salt at all."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from lfb_data_warehouse_spark.operators import dedup
+
+    docs = spark.range(60).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("alpha beta w"), F.col("id").cast("string")).alias("body"),
+    )
+
+    def executed(cap):
+        if kernel == "all_pairs_jaccard":
+            df = dedup.all_pairs_jaccard(docs, "doc_id", "body", 2, 0.1, hot_cap=cap)
+        else:
+            old, new = docs.filter("doc_id < 40"), docs.filter("doc_id >= 40")
+            df = dedup.incremental_jaccard_pairs(old, new, "doc_id", "body", 2, 0.1, hot_cap=cap)
+        df.collect()
+        # the adaptive plan prints its final plan, then the initial one
+        return df._jdf.queryExecution().executedPlan().toString().split("Initial Plan")[0]
+
+    salted = re.findall(r"Exchange hashpartitioning\(([^)]*)\), REPARTITION_BY_NUM", executed(5))
+    assert len(salted) == 2 and all("__salt" in keys for keys in salted), salted
+    plain = executed(0)
+    assert "REPARTITION_BY_NUM" not in plain and "__salt" not in plain
